@@ -3,14 +3,14 @@
 At test scale the driver union-find short-circuit always wins, so the
 distributed CC rounds — the actual 100-TB path — had correctness tests but
 no at-scale timing signal. This job runs the SAME graph (the sf0.1 MinHash
-candidate-pair graph, the keep-policy input) through:
+candidate-pair graph, the keep-policy input) through both paths of
+``connected_components``:
 
   * driver   — union-find short-circuit (default threshold),
   * hashmin  — iterative hash-min propagation, ``driver_threshold=0``,
-  * star     — alternating large-star/small-star (O(log n) rounds),
 
-asserts all three produce the identical (id, comp) labeling, and prints one
-JSON line with wall times -> recorded in BENCH/BASELINE.md.
+asserts both produce the identical (id, comp) labeling, and prints one JSON
+line with wall times -> recorded in BENCH/BASELINE.md.
 
     python -m scikg_spark.jobs.bench_cc --sf-dir /root/testdata/sf0.1
 """
@@ -32,8 +32,7 @@ def main(argv=None):
 
     from scikg_spark.ops.dedup import _docs, q_minhash_dup_pairs
     from scikg_spark.pipeline.session import get_spark
-    from scikg_spark.pipeline.stage3 import (
-        connected_components, connected_components_star)
+    from scikg_spark.pipeline.stage3 import connected_components
 
     spark = get_spark(app_name="scikg-bench-cc", cores=args.cores,
                       shuffle_partitions=16)
@@ -58,7 +57,6 @@ def main(argv=None):
             run("driver", lambda: connected_components(edges, vertices)),
             run("hashmin", lambda: connected_components(
                 edges, vertices, driver_threshold=0)),
-            run("star", lambda: connected_components_star(edges, vertices)),
         ]
         base = results[0]["labels"]
         agree = {r["algo"]: r["labels"] == base for r in results}

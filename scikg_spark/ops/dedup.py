@@ -535,8 +535,10 @@ def eval_gram_table(tsv_path: str = _EVAL_TSV,
     small parquet of (stmt_id, gram_h) — ``gram_h`` hashed exactly like the
     corpus grams (md5 15-hex-digit prefix as bigint), so it equi-joins
     against the corpus gram table on either engine. Fingerprinted by the
-    TSV stamp; DuckDB mirrors read the same file. At production scale this
-    table is tiny (benchmarks are KBs-MBs) and broadcasts.
+    TSV's content hash (a byte-identical copy at another path or mtime
+    hits; any edit misses); DuckDB mirrors read the same file. At
+    production scale this table is tiny (benchmarks are KBs-MBs) and
+    broadcasts.
 
     When the source TSV is unavailable (no reference checkout) or the
     checkpoint tree is read-only, the previously-materialized parquet is
@@ -559,8 +561,11 @@ def eval_gram_table(tsv_path: str = _EVAL_TSV,
         raise FileNotFoundError(
             f"benchmark TSV {tsv_path!r} missing and no materialized "
             f"gram table at {pq_path_shipped!r}")
-    st = os.stat(tsv_path)
-    fp = f"v1:{tsv_path}:{st.st_size}:{st.st_mtime_ns}"
+    h = hashlib.sha256()
+    with open(tsv_path, "rb") as fh:
+        for chunk in iter(lambda: fh.read(1 << 20), b""):
+            h.update(chunk)
+    fp = f"v2:sha256:{h.hexdigest()}"
     fp_path = os.path.join(out_dir, "FINGERPRINT")
     pq_path = os.path.join(out_dir, "grams.parquet")
     if os.path.isfile(fp_path) and os.path.isfile(pq_path):

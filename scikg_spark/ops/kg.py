@@ -44,12 +44,6 @@ _MAT_ROOT = os.path.join(_REPO_ROOT, "checkpoints", "kg_materialized")
 # overridable so another layout still hits the shipped snapshots (ADVICE r4).
 _TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA_ROOT", "/root/testdata")
 
-# phrase_map row-count threshold below which the entity-attach join
-# broadcasts the map (hash join, no shuffle of the big tuples side); above
-# it, the documented salted-join skew path spreads hot mentions
-# ("patients"-like surface forms) across reducers.
-BROADCAST_MAP_ROWS = 2_000_000
-
 
 def _src_stamp(sf_dir: str) -> tuple:
     """(size, mtime_ns) stamp of the corpus parquet — part of every cache key
@@ -151,13 +145,15 @@ def load_synonyms(spark, path: str = _SYNONYMS_PATH):
         nid2tuple, _, _, _, _ = parse_label_file(fh)
     rows = [(t[0][1].split("#")[0], t[2][1].split("#")[0])
             for t in nid2tuple.values()]
-    # Arrow local relation (driver-side conversion) — the list form would
-    # parallelize through Python-RDD tasks just to ship a tiny dimension
-    import pandas as pd
+    # Arrow local relation (a LocalTableScan, with or without the session's
+    # Arrow conf) — the list form would parallelize through Python-RDD tasks
+    # just to ship a tiny dimension
+    import pyarrow as pa
 
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["phrase_a", "phrase_b"]),
-        schema="phrase_a string, phrase_b string")
+    return spark.createDataFrame(pa.table({
+        "phrase_a": pa.array([a for a, _ in rows], pa.string()),
+        "phrase_b": pa.array([b for _, b in rows], pa.string()),
+    }))
 
 
 def _linked(spark, sf_dir, synonyms_path: str | None = None):
@@ -166,7 +162,7 @@ def _linked(spark, sf_dir, synonyms_path: str | None = None):
     (the runner materializes the same pair of tables as stage-3 snapshots).
     ``synonyms_path`` selects the synonym-merged variant (cached separately).
     Returns (nodes, phrase_map, phrase_map_rows): the row count rides the
-    cache entry so repeat attach_entities calls never re-pay a driver
+    cache entry so repeat kg_entity_edges calls never re-pay a driver
     count() round-trip."""
     from scikg_spark.pipeline.stage3 import link_entities
 
@@ -207,41 +203,6 @@ def kg_triples(spark, sf_dir, prefer_snapshot: bool = True):
         "doc_id", "stmt_id", "kind", "tuple_idx", "subj", "pred", "obj")
 
 
-def attach_entities(tuples, phrase_map, broadcast_threshold: int = BROADCAST_MAP_ROWS,
-                    map_rows: int | None = None):
-    """Join subject/object entity ids onto the tuples frame.
-
-    ``map_rows`` (pass the count cached alongside the checkpointed dimension
-    when you have it — ``_linked`` does) picks the join strategy without a
-    per-call driver count() round-trip; when absent, the checkpointed
-    dimension's count() is cheap. Maps under ``broadcast_threshold`` rows
-    broadcast — a hash join where hot mention strings never concentrate on
-    one reducer. Bigger maps take
-    :func:`scikg_spark.pipeline.skew.salted_join` (left-join safe), the
-    documented skew strategy for broadcast-ineligible hot-key dimensions.
-    """
-    src = phrase_map.select(
-        F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
-    dst = phrase_map.select(
-        F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
-    if map_rows is None:
-        map_rows = phrase_map.count()
-    if map_rows <= broadcast_threshold:
-        joined = (
-            tuples.join(F.broadcast(src), tuples["s_c.text"] == F.col("_sp"), "left")
-            .join(F.broadcast(dst), tuples["o_c.text"] == F.col("_op"), "left")
-        )
-    else:
-        from scikg_spark.pipeline.skew import salted_join
-
-        big = tuples.withColumn("_sp", F.col("s_c.text")) \
-                    .withColumn("_op", F.col("o_c.text"))
-        joined = salted_join(salted_join(big, src, "_sp", how="left"),
-                             dst, "_op", how="left")
-    return joined.select("doc_id", "stmt_id", "kind", "subj", "pred", "obj",
-                         "subj_entity", "obj_entity")
-
-
 def kg_entity_nodes(spark, sf_dir, prefer_snapshot: bool = True):
     """Stage-3 canonical entities over the extracted concept mentions.
     Served from the fingerprint-fresh snapshot when one exists (see
@@ -263,9 +224,12 @@ def kg_entity_edges(spark, sf_dir, prefer_snapshot: bool = True):
         snap = _snapshot_if_fresh(sf_dir, "edges")
         if snap is not None:
             return spark.read.parquet(snap)
-    t = _tuples(spark, sf_dir)
+    from scikg_spark.pipeline.stage3 import attach_entities
+
     _, phrase_map, map_rows = _linked(spark, sf_dir)
-    return attach_entities(t, phrase_map, map_rows=map_rows)
+    return attach_entities(_tuples(spark, sf_dir), phrase_map, map_rows).select(
+        "doc_id", "stmt_id", "kind", "subj", "pred", "obj",
+        "subj_entity", "obj_entity")
 
 
 # ---------------------------------------------------------------------------

@@ -16,8 +16,38 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from scikg_spark.pipeline.fused import extract_tuples
 from scikg_spark.pipeline.stage1 import extract_statements
 from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
-from scikg_spark.pipeline.stage3 import link_entities
+from scikg_spark.pipeline.stage3 import attach_entities, link_entities
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+# committed partition layout per table; tables not listed are unpartitioned
+_PARTITION_BY = {"tuples": ("kind",), "edges": ("kind", "url_bucket")}
+
+
+def _tag(statements, tagger, gold, weights_path, corrections):
+    """Stage 2: statements -> tuples with the chosen tagger."""
+    if tagger == "rule":
+        # fused single-Python-pass (tag+correct+decode); chained
+        # mapInPandas would run 2 workers per task slot (see fused.py)
+        return extract_tuples(statements, **corrections)
+    return decode_tuples(
+        tag_statements(statements, mode=tagger, gold=gold,
+                       weights_path=weights_path, **corrections))
+
+
+def _edges(tuples, phrase_map, map_rows):
+    """Stage 4 edges: tuples with entity ids attached, plus ``url_bucket`` —
+    Iceberg's bucket(url) partition transform, expressed directly:
+    co-locates a url's edges and bounds files-per-partition at scale."""
+    return attach_entities(tuples, phrase_map, map_rows).withColumn(
+        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
+
+
+def _commit(catalog, name, df):
+    """Commit ``df`` as table ``name``'s next snapshot and read it back.
+    Returns ``(committed frame, manifest)``; downstream stages read the
+    committed snapshot, never the lineage that produced it."""
+    manifest = catalog.write(df, name, partition_by=_PARTITION_BY.get(name, ()))
+    return catalog.read(name), manifest
 
 
 def run_pipeline(
@@ -38,37 +68,27 @@ def run_pipeline(
     corrections = corrections or {}
     out: dict[str, DataFrame] = {}
 
-    def stage(name, build, partition_by=(), force=False):
-        t0 = time.time()
-        if catalog is not None and resume and not force and catalog.is_complete(name):
-            df = catalog.read(name)
-            out[name] = df
+    def stage(name, build, force=False):
+        """-> (frame, manifest); the manifest is None without a catalog."""
+        if catalog is None:
+            out[name] = build()
+            return out[name], None
+        if resume and not force and catalog.is_complete(name):
+            out[name] = catalog.read(name)
             catalog.write_metrics(name, {"resumed": True, "wall_ms": 0})
-            return df
-        df = build()
-        if catalog is not None:
-            manifest = catalog.write(df, name, partition_by=partition_by)
-            catalog.write_metrics(name, {
-                "resumed": False,
-                "rows": manifest["rows"],
-                "wall_ms": int((time.time() - t0) * 1000)})
-            df = catalog.read(name)
-        out[name] = df
-        return df
+            return out[name], catalog.manifest(name)
+        t0 = time.time()
+        out[name], manifest = _commit(catalog, name, build())
+        catalog.write_metrics(name, {
+            "resumed": False,
+            "rows": manifest["rows"],
+            "wall_ms": int((time.time() - t0) * 1000)})
+        return out[name], manifest
 
-    statements = stage(
+    statements, _ = stage(
         "statements", lambda: extract_statements(pages, lang=lang))
-
-    def build_tuples():
-        if tagger == "rule":
-            # fused single-Python-pass (tag+correct+decode); chained
-            # mapInPandas would run 2 workers per task slot (see fused.py)
-            return extract_tuples(statements, **corrections)
-        return decode_tuples(
-            tag_statements(statements, mode=tagger, gold=gold,
-                           weights_path=weights_path, **corrections))
-
-    tuples = stage("tuples", build_tuples, partition_by=("kind",))
+    tuples, _ = stage("tuples", lambda: _tag(
+        statements, tagger, gold, weights_path, corrections))
 
     # stage 3 produces two tables from one computation; resume only when BOTH
     # are committed. Otherwise recompute once and FORCE-commit both — serving
@@ -78,47 +98,15 @@ def run_pipeline(
         catalog is not None and resume
         and catalog.is_complete("entity_nodes") and catalog.is_complete("entity_map"))
     if both_done:
-        nodes = stage("entity_nodes", lambda: None)
-        phrase_map = stage("entity_map", lambda: None)
+        stage("entity_nodes", None)
+        phrase_map, map_manifest = stage("entity_map", None)
     else:
         linked_nodes, linked_map = link_entities(tuples, use_lsh=use_lsh)
-        nodes = stage("entity_nodes", lambda: linked_nodes, force=True)
-        phrase_map = stage("entity_map", lambda: linked_map, force=True)
-
-    def build_edges():
-        src_map = phrase_map.select(
-            F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
-        dst_map = phrase_map.select(
-            F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
-        # same skew discipline as ops.kg.attach_entities: a dimension-sized
-        # phrase map broadcasts (hot mention strings never concentrate on one
-        # reducer); an over-threshold map takes the salted-join path
-        from scikg_spark.ops.kg import BROADCAST_MAP_ROWS
-
-        if phrase_map.count() <= BROADCAST_MAP_ROWS:
-            joined = (
-                tuples.join(F.broadcast(src_map),
-                            tuples["s_c.text"] == F.col("_sp"), "left")
-                .join(F.broadcast(dst_map),
-                      tuples["o_c.text"] == F.col("_op"), "left")
-            )
-        else:
-            from scikg_spark.pipeline.skew import salted_join
-
-            big = tuples.withColumn("_sp", F.col("s_c.text")) \
-                        .withColumn("_op", F.col("o_c.text"))
-            joined = salted_join(salted_join(big, src_map, "_sp", how="left"),
-                                 dst_map, "_op", how="left")
-        return (
-            joined
-            .drop("_sp", "_op")
-            # Iceberg's bucket(url) partition transform, expressed directly:
-            # co-locates a url's edges and bounds files-per-partition at scale
-            .withColumn("url_bucket",
-                        F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
-        )
-
-    stage("edges", build_edges, partition_by=("kind", "url_bucket"))
+        stage("entity_nodes", lambda: linked_nodes, force=True)
+        phrase_map, map_manifest = stage(
+            "entity_map", lambda: linked_map, force=True)
+    map_rows = map_manifest["rows"] if map_manifest else phrase_map.count()
+    stage("edges", lambda: _edges(tuples, phrase_map, map_rows))
     return out
 
 
@@ -144,7 +132,7 @@ def run_pipeline_incremental(
     global — a new mention can bridge two existing clusters and merge
     them — but its input is the distinct-mention vocabulary (sublinear in
     corpus size), never the corpus. Edges re-attach from the committed
-    tuples snapshot via the same broadcast/salted dimension join as
+    tuples snapshot via the same :func:`attach_entities` as
     :func:`run_pipeline` — a join over already-materialized tuples, no
     re-extraction. Output tables are byte-compatible with a full
     :func:`run_pipeline` over the combined corpus (pinned by
@@ -178,12 +166,7 @@ def run_pipeline_incremental(
         new_pages = new_pages.join(F.broadcast(done), "url", "left_anti")
 
     new_statements = extract_statements(new_pages, lang=lang)
-    if tagger == "rule":
-        new_tuples = extract_tuples(new_statements, **corrections)
-    else:
-        new_tuples = decode_tuples(
-            tag_statements(new_statements, mode=tagger, gold=gold,
-                           weights_path=weights_path, **corrections))
+    new_tuples = _tag(new_statements, tagger, gold, weights_path, corrections)
 
     out: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}
@@ -196,43 +179,17 @@ def run_pipeline_incremental(
             # one of the two tables (see the guard above)
             seen = catalog.read(name).select("url").distinct()
             delta = delta.join(F.broadcast(seen), "url", "left_anti")
-        prev_rows = catalog.history(name)[-1]["rows"] if had else 0
+        # rows of the snapshot being extended (the current pointer — after a
+        # rollback that is not the newest snapshot in the history)
+        prev_rows = catalog.manifest(name)["rows"] if had else 0
         combined = catalog.read(name).unionByName(delta) if had else delta
-        part = ("kind",) if name == "tuples" else ()
-        manifest = catalog.write(combined, name, partition_by=part)
+        out[name], manifest = _commit(catalog, name, combined)
         counts[f"new_{name}"] = manifest["rows"] - prev_rows
-        out[name] = catalog.read(name)
 
     tuples = out["tuples"]
     linked_nodes, linked_map = link_entities(tuples, use_lsh=use_lsh)
-    catalog.write(linked_nodes, "entity_nodes")
-    catalog.write(linked_map, "entity_map")
-    out["entity_nodes"] = catalog.read("entity_nodes")
-    out["entity_map"] = phrase_map = catalog.read("entity_map")
-
-    src_map = phrase_map.select(
-        F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
-    dst_map = phrase_map.select(
-        F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
-    from scikg_spark.ops.kg import BROADCAST_MAP_ROWS
-
-    if phrase_map.count() <= BROADCAST_MAP_ROWS:
-        joined = (
-            tuples.join(F.broadcast(src_map),
-                        tuples["s_c.text"] == F.col("_sp"), "left")
-            .join(F.broadcast(dst_map),
-                  tuples["o_c.text"] == F.col("_op"), "left")
-        )
-    else:
-        from scikg_spark.pipeline.skew import salted_join
-
-        big = tuples.withColumn("_sp", F.col("s_c.text")) \
-                    .withColumn("_op", F.col("o_c.text"))
-        joined = salted_join(salted_join(big, src_map, "_sp", how="left"),
-                             dst_map, "_op", how="left")
-    edges = (joined.drop("_sp", "_op")
-             .withColumn("url_bucket",
-                         F.pmod(F.xxhash64("url"), F.lit(16)).cast("int")))
-    catalog.write(edges, "edges", partition_by=("kind", "url_bucket"))
-    out["edges"] = catalog.read("edges")
+    out["entity_nodes"], _ = _commit(catalog, "entity_nodes", linked_nodes)
+    out["entity_map"], map_manifest = _commit(catalog, "entity_map", linked_map)
+    out["edges"], _ = _commit(
+        catalog, "edges", _edges(tuples, out["entity_map"], map_manifest["rows"]))
     return {"tables": out, **counts}

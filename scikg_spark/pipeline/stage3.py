@@ -7,9 +7,14 @@ mention phrases into entities via
 
   1. exact normalized-string grouping (lower, '_' -> ' '),
   2. MinHash-LSH blocking over character shingles for near-duplicates,
-  3. connected components over the union of (1)+(2) edges by iterative
-     hash-min joins (no GraphFrames dependency), ``localCheckpoint`` per
-     round to cut lineage.
+  3. connected components over the union of (1)+(2) edges: a driver
+     union-find for driver-sized edge lists, else iterative hash-min joins
+     (no GraphFrames dependency), ``localCheckpoint`` per round to cut
+     lineage.
+
+:func:`attach_entities` then joins the resulting phrase -> entity map back
+onto the tuples; it is the one edge-attach step for the pipeline runner and
+the ``ops.kg`` queries.
 
 Scale design: minhash signatures are computed IN PLACE with JVM array
 expressions (array_min over transform of the shingle array — zero shuffle,
@@ -165,16 +170,15 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     # Arrow local-relation build (round 6): createDataFrame over a plain
     # Python list parallelizes through Python-RDD tasks — 32 Python workers
     # launched to ship a broadcast-sized mapping (measured 7-35 CPU-s when
-    # workers are cold, on a sub-1k-row table). The pandas path converts to
-    # Arrow batches ON THE DRIVER and the executors decode pure JVM.
-    import pandas as pd
+    # workers are cold, on a sub-1k-row table). A pyarrow.Table plans as a
+    # LocalTableScan whether or not the session enables Arrow for pandas
+    # conversion, so the executors decode pure JVM.
+    import pyarrow as pa
 
-    mapping = spark.createDataFrame(
-        pd.DataFrame(
-            {"id": [int(n) for n in parent],
-             "comp": [int(root_min[find(n)]) for n in parent]},
-            dtype="int64"),
-        schema="id bigint, comp bigint")
+    mapping = spark.createDataFrame(pa.table({
+        "id": pa.array([int(n) for n in parent], pa.int64()),
+        "comp": pa.array([int(root_min[find(n)]) for n in parent], pa.int64()),
+    }))
     return (
         vertices.join(F.broadcast(mapping.withColumnRenamed("comp", "_c")),
                       "id", "left")
@@ -286,77 +290,6 @@ def synonym_phrase_edges(phrases: DataFrame, synonyms: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(edges: DataFrame, vertices: DataFrame,
-                              max_iter: int = 25) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    converges in O(log n) ROUNDS regardless of component diameter — the
-    scale-path alternative to hash-min propagation for deep components
-    (near-duplicate chains at web scale).
-
-    large-star: for each node u, connect every neighbor v > u to
-    m = min(N(u) ∪ {u}); small-star: connect every neighbor v <= u (and u)
-    to m. Edges converge to a star around each component's minimum.
-    Returns (id, comp) like :func:`connected_components`.
-    """
-    cur = edges.filter(F.col("src") != F.col("dst")).select(
-        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-    ).distinct().localCheckpoint()
-
-    def neighborhoods(e):
-        # symmetric adjacency (u, v)
-        return e.union(e.select(F.col("dst").alias("src"),
-                                F.col("src").alias("dst")))
-
-    converged = False
-    for _ in range(max_iter):
-        adj = neighborhoods(cur)
-        # m(u) = min over N(u) ∪ {u}
-        m = adj.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m"))
-        # large-star: (v, m(u)) for v in N(u), v > u
-        large = (
-            adj.join(m, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-        )
-        # small-star: (v, m(u)) for v in N(u) with v <= u, plus (u, m(u))
-        small = (
-            adj.join(m, "src")
-            .filter(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-            .union(m.select(F.col("src").alias("a"), F.col("m").alias("b")))
-        )
-        nxt = (
-            large.union(small)
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("src"),
-                    F.greatest("a", "b").alias("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # converged when the edge set is stable (stars reached)
-        if nxt.count() == cur.count() and nxt.exceptAll(cur).limit(1).count() == 0:
-            cur = nxt
-            converged = True
-            break
-        cur = nxt
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components_star did not stabilize in {max_iter} "
-            f"rounds", RuntimeWarning, stacklevel=2)
-    # cur is a star forest: dst -> src(min). comp(v) = min partner; roots map
-    # to themselves; isolated vertices map to themselves.
-    comp_edges = cur.select(F.col("dst").alias("id"), F.col("src").alias("comp"))
-    comp_edges = comp_edges.groupBy("id").agg(F.min("comp").alias("comp"))
-    return (
-        vertices.join(comp_edges, "id", "left")
-        .select("id", F.coalesce("comp", "id").alias("comp"))
-    )
-
-
 def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
                   use_lsh: bool = True,
                   synonyms: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
@@ -419,3 +352,40 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
         F.countDistinct("phrase").alias("n_phrases"),
     )
     return nodes, mapped.select("phrase", "entity_id")
+
+
+# phrase_map row count at or under which the entity attach broadcasts the
+# map (hash join, no shuffle of the big tuples side); above it, the salted
+# join spreads hot mentions ("patients"-like surface forms) across reducers.
+BROADCAST_MAP_ROWS = 2_000_000
+
+
+def attach_entities(tuples: DataFrame, phrase_map: DataFrame,
+                    map_rows: int) -> DataFrame:
+    """Join subject/object entity ids onto the tuples: every tuples column,
+    then ``subj_entity`` and ``obj_entity`` (null for an unlinked mention).
+
+    ``map_rows`` is the phrase_map's row count, which callers already hold
+    (a snapshot manifest, a cached count), so picking the join strategy
+    costs no Spark job. Maps up to :data:`BROADCAST_MAP_ROWS` broadcast —
+    a hash join where hot mention strings never concentrate on one reducer.
+    Bigger maps take :func:`scikg_spark.pipeline.skew.salted_join`
+    (left-join safe), the skew strategy for broadcast-ineligible hot-key
+    dimensions."""
+    src = phrase_map.select(
+        F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
+    dst = phrase_map.select(
+        F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
+    if map_rows <= BROADCAST_MAP_ROWS:
+        joined = (
+            tuples.join(F.broadcast(src), tuples["s_c.text"] == F.col("_sp"), "left")
+            .join(F.broadcast(dst), tuples["o_c.text"] == F.col("_op"), "left")
+        )
+    else:
+        from scikg_spark.pipeline.skew import salted_join
+
+        big = tuples.withColumn("_sp", F.col("s_c.text")) \
+                    .withColumn("_op", F.col("o_c.text"))
+        joined = salted_join(salted_join(big, src, "_sp", how="left"),
+                             dst, "_op", how="left")
+    return joined.drop("_sp", "_op")

@@ -88,8 +88,7 @@ class SnapshotCatalog:
                     pass
         return sorted(ids)
 
-    def write(self, df: DataFrame, table: str, partition_by=(),
-              with_lineage: bool = True) -> dict:
+    def write(self, df: DataFrame, table: str, partition_by=()) -> dict:
         t0 = time.time()
         prev = self.manifest(table)
         # next id = max over ALL committed snapshots (not just the current
@@ -102,12 +101,12 @@ class SnapshotCatalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(snap_dir)
         committed = self.spark.read.parquet(snap_dir)
-        lineage = self._partition_lineage(committed) if with_lineage else []
+        lineage = self._partition_lineage(committed)
         manifest = {
             "table": table,
             "snapshot_id": snap_id,
             "status": "committed",
-            "rows": sum(p["rows"] for p in lineage) if with_lineage else committed.count(),
+            "rows": sum(p["rows"] for p in lineage),
             "partition_by": list(partition_by),
             "lineage": lineage,
             "wall_ms": int((time.time() - t0) * 1000),
@@ -216,100 +215,6 @@ class SnapshotCatalog:
             f.write(json.dumps({"stage": stage, **payload}) + "\n")
 
 
-class PartitionedIncrementalWriter:
-    """Partition-level resume on top of SnapshotCatalog's directory layout:
-    rows land under ``<table>/parts/<key>=<value>/`` one partition-value at a
-    time, a sidecar manifest records completed values, and a rerun
-    anti-joins completed partitions out of the input before computing
-    anything for them (SURVEY.md §4 item 3). This is the finer-grained
-    complement to stage-level snapshot resume: a killed backfill restarts at
-    the first incomplete partition value."""
-
-    def __init__(self, spark: SparkSession, base_dir: str, table: str,
-                 partition_col: str):
-        self.spark = spark
-        self.table_dir = os.path.join(base_dir, table)
-        self.data_dir = os.path.join(self.table_dir, "parts")
-        self.partition_col = partition_col
-        self.manifest_path = os.path.join(self.table_dir, "parts_manifest.json")
-        os.makedirs(self.data_dir, exist_ok=True)
-
-    def completed(self) -> list:
-        if not os.path.exists(self.manifest_path):
-            return []
-        with open(self.manifest_path) as f:
-            return json.load(f)["completed"]
-
-    def _commit(self, values: list):
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"partition_col": self.partition_col,
-                       "completed": sorted(values, key=str)}, f)
-        os.replace(tmp, self.manifest_path)
-
-    def pending_input(self, df: DataFrame) -> DataFrame:
-        """Anti-join completed partition values out of the input (string
-        compare: manifest values come from directory names)."""
-        done = self.completed()
-        if not done:
-            return df
-        done_df = self.spark.createDataFrame(
-            [(str(v),) for v in done], "__done string")
-        return df.join(
-            F.broadcast(done_df),
-            F.col(self.partition_col).cast("string") == F.col("__done"),
-            "left_anti")
-
-    def write(self, df: DataFrame, max_new: int | None = None) -> dict:
-        """Write the not-yet-completed partitions of ``df``: the pending input
-        is computed ONCE (partitionBy into a staging dir — not once per
-        partition value, which would re-run the upstream plan O(P) times),
-        then each partition directory is moved into place and committed
-        atomically. ``max_new`` limits how many partition values are taken
-        (used by the kill-mid-backfill test)."""
-        import shutil
-        from urllib.parse import unquote
-
-        pending = self.pending_input(df)
-        values = [r[0] for r in
-                  pending.select(self.partition_col).distinct().collect()]
-        if any(v is None or str(v) == "" for v in values):
-            # Spark maps these to the __HIVE_DEFAULT_PARTITION__ sentinel,
-            # which the string anti-join can never match -> endless recompute
-            raise ValueError(
-                f"partition column {self.partition_col!r} contains null/empty "
-                f"values; filter or default them before incremental writes")
-        values.sort(key=str)
-        if max_new is not None:
-            values = values[:max_new]
-            pending = pending.filter(F.col(self.partition_col).isin(values))
-        done = list(self.completed())
-        if not values:
-            return {"written_partitions": 0, "completed_total": len(done)}
-
-        staging = os.path.join(self.table_dir, ".staging")
-        shutil.rmtree(staging, ignore_errors=True)
-        pending.write.partitionBy(self.partition_col).parquet(staging)
-
-        written = 0
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith(f"{self.partition_col}="):
-                continue  # _SUCCESS etc.
-            value = unquote(name.split("=", 1)[1])  # Spark percent-escapes
-            target = os.path.join(self.data_dir, name)
-            shutil.rmtree(target, ignore_errors=True)
-            os.replace(os.path.join(staging, name), target)
-            done.append(value)
-            self._commit(done)  # atomic per-partition commit point
-            written += 1
-        shutil.rmtree(staging, ignore_errors=True)
-        return {"written_partitions": written, "completed_total": len(done)}
-
-    def read(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.data_dir).parquet(
-            os.path.join(self.data_dir, "*"))
-
-
 def verify_snapshot(catalog: SnapshotCatalog, table: str) -> dict:
     """Re-derive lineage for a committed snapshot and compare the
     partitioning-INDEPENDENT invariants against the manifest: total rows and
@@ -320,8 +225,6 @@ def verify_snapshot(catalog: SnapshotCatalog, table: str) -> dict:
     if not manifest or manifest.get("status") != "committed":
         return {"ok": False, "error": "no committed snapshot"}
     expected = manifest["lineage"]
-    if not expected:
-        return {"ok": False, "error": "snapshot was written with_lineage=False"}
     actual = catalog._partition_lineage(catalog.read(table))
 
     def fold(parts):

@@ -80,11 +80,22 @@ def test_union_find_mapping_is_jvm_local_relation(spark):
 
     from scikg_spark.pipeline.stage3 import _driver_union_find
 
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(conf)
     vertices = spark.range(10).select(F.col("id"))
-    comp = _driver_union_find([(0, 1), (1, 2), (5, 6)], vertices)
-    plan = _formatted(comp)
-    assert "applySchemaToPythonRDD" not in plan, plan
-    assert _n_ops(plan, "LocalTableScan") == 1, plan
+    try:
+        # sessions not built by get_spark may leave Arrow disabled
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            comp = _driver_union_find([(0, 1), (1, 2), (5, 6)], vertices)
+            plan = _formatted(comp)
+            assert "applySchemaToPythonRDD" not in plan, (arrow, plan)
+            assert _n_ops(plan, "LocalTableScan") == 1, (arrow, plan)
+            assert sorted(map(tuple, comp.collect())) == [
+                (0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 5), (6, 5),
+                (7, 7), (8, 8), (9, 9)]
+    finally:
+        spark.conf.set(conf, before)
 
 
 def test_link_entities_evaluates_upstream_once(spark):
@@ -105,7 +116,9 @@ def test_link_entities_evaluates_upstream_once(spark):
         acc.add(1)
         return f"Concept_{v}"
 
-    spy_udf = F.udf(spy, T.StringType())
+    # nondeterministic: Spark may not legally re-evaluate it, so any extra
+    # evaluation the accumulator sees is a real recomputation
+    spy_udf = F.udf(spy, T.StringType()).asNondeterministic()
     n = 40
     base = spark.range(n).select(
         F.struct(spy_udf(F.col("id")).alias("text")).alias("s_c"),

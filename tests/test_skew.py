@@ -52,12 +52,12 @@ def test_salt_distribution_spreads_hot_key(spark):
 
 
 def test_attach_entities_salted_equals_broadcast(spark):
-    """kg.attach_entities: the over-threshold salted path must return exactly
-    the broadcast path's rows on a skewed fixture (one hot mention string
+    """stage3.attach_entities: the over-threshold salted path must return
+    exactly the broadcast path's rows on a skewed fixture (one hot mention string
     dominating the tuples side)."""
     from pyspark.sql import functions as F
 
-    from scikg_spark.ops.kg import attach_entities
+    from scikg_spark.pipeline.stage3 import BROADCAST_MAP_ROWS, attach_entities
 
     rows = []
     for i in range(400):
@@ -73,10 +73,12 @@ def test_attach_entities_salted_equals_broadcast(spark):
         + [(f"drug_{i}", 1000 + i) for i in range(0, 400, 8)],
         "phrase string, entity_id long")
 
-    via_broadcast = attach_entities(tuples, phrase_map).collect()
+    map_rows = phrase_map.count()
+    via_broadcast = attach_entities(tuples, phrase_map, map_rows).collect()
     via_salted = attach_entities(tuples, phrase_map,
-                                 broadcast_threshold=0).collect()
-    key = lambda r: (r["doc_id"], r["stmt_id"], r["subj"], r["obj"])
+                                 map_rows=BROADCAST_MAP_ROWS + 1).collect()
+    # same columns in the same order: the runner commits either path's frame
+    assert via_salted[0].__fields__ == via_broadcast[0].__fields__
     assert sorted(map(tuple, via_salted), key=lambda t: t) \
         == sorted(map(tuple, via_broadcast), key=lambda t: t)
     assert {r["subj_entity"] for r in via_salted

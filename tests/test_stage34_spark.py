@@ -251,6 +251,14 @@ class TestCCNonConvergence:
         assert all(via_driver[i] == i for i in range(40)
                    if all(i not in p for p in edges))
 
+        # a self-loop and an isolated vertex, on both paths
+        e = spark.createDataFrame([(5, 5), (1, 2)], "src long, dst long")
+        v = spark.createDataFrame([(i,) for i in (1, 2, 5, 9)], "id long")
+        for threshold in (1 << 18, 0):
+            comp = {r.id: r.comp for r in connected_components(
+                e, v, driver_threshold=threshold).collect()}
+            assert comp == {1: 1, 2: 1, 5: 5, 9: 9}, threshold
+
 
 class TestSnapshotVerify:
     def test_intact_snapshot_verifies(self, spark, tmp_path):
@@ -276,46 +284,6 @@ class TestSnapshotVerify:
         victim = sorted(glob.glob(str(tmp_path / "t" / "snap-1" / "*.parquet")))[0]
         os.remove(victim)
         assert not verify_snapshot(cat, "t")["ok"]
-
-
-class TestStarCC:
-    def _random_graph(self, spark, seed, n=60, m=50):
-        import random
-
-        rng = random.Random(seed)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        e = spark.createDataFrame(edges, "src long, dst long")
-        v = spark.createDataFrame([(i,) for i in range(n)], "id long")
-        return e, v
-
-    def test_matches_hashmin_on_random_graphs(self, spark):
-        from scikg_spark.pipeline.stage3 import (
-            connected_components, connected_components_star)
-
-        for seed in (1, 2, 3):
-            e, v = self._random_graph(spark, seed)
-            a = {r.id: r.comp for r in connected_components(e, v).collect()}
-            b = {r.id: r.comp for r in connected_components_star(e, v).collect()}
-            assert a == b, f"seed {seed}"
-
-    def test_long_chain_logarithmic(self, spark):
-        from scikg_spark.pipeline.stage3 import connected_components_star
-
-        # chain of 60: hash-min would need 30 two-hop rounds; star needs ~log
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(59)], "src long, dst long")
-        verts = spark.createDataFrame([(i,) for i in range(60)], "id long")
-        comp = connected_components_star(edges, verts, max_iter=12).collect()
-        assert {r.comp for r in comp} == {0}
-
-    def test_isolated_and_selfloop(self, spark):
-        from scikg_spark.pipeline.stage3 import connected_components_star
-
-        edges = spark.createDataFrame([(5, 5), (1, 2)], "src long, dst long")
-        verts = spark.createDataFrame([(i,) for i in (1, 2, 5, 9)], "id long")
-        comp = {r.id: r.comp for r in
-                connected_components_star(edges, verts).collect()}
-        assert comp == {1: 1, 2: 1, 5: 5, 9: 9}
 
 
 def test_run_pipeline_with_trained_ensemble(spark, tmp_path):

@@ -349,3 +349,37 @@ def test_ops_import_is_io_free_and_survives_missing_reference():
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip().endswith("grams.parquet")
     assert os.stat(fp).st_mtime_ns == before  # no import-time rewrite
+
+
+def test_eval_gram_table_fingerprints_content(tmp_path):
+    """The eval-gram cache keys on the TSV's bytes: rewriting the same bytes
+    under a new mtime serves the cached table, while a same-size edit with
+    an unchanged mtime re-materializes it."""
+    import os
+
+    import pandas as pd
+
+    from scikg_spark.ops.dedup import CONTAM_K, eval_gram_table
+
+    words = [f"w{i}" for i in range(CONTAM_K + 2)]
+    body = "===== d1 stmt1 =====\nWORD\t" + "\t".join(words) + "\n"
+    tsv, out = tmp_path / "eval.tsv", tmp_path / "grams"
+    tsv.write_text(body)
+    pq = eval_gram_table(str(tsv), str(out))
+    first = sorted(pd.read_parquet(pq)["gram_h"])
+    assert len(first) == 3
+
+    os.utime(pq, ns=(0, 0))  # a rewrite of the parquet would move this
+    tsv.write_text(body)
+    os.utime(tsv, ns=(10**18, 10**18))
+    assert eval_gram_table(str(tsv), str(out)) == pq
+    assert os.stat(pq).st_mtime_ns == 0
+
+    edited = body.replace(words[-1], "x" + words[-1][1:])
+    assert len(edited) == len(body)
+    tsv.write_text(edited)
+    os.utime(tsv, ns=(10**18, 10**18))
+    eval_gram_table(str(tsv), str(out))
+    assert os.stat(pq).st_mtime_ns != 0
+    second = sorted(pd.read_parquet(pq)["gram_h"])
+    assert second != first and len(second) == 3
