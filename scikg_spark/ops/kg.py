@@ -334,7 +334,7 @@ def materialize_kg_tables(spark, sf_dir: str) -> str:
     stage-boundary snapshot shape for a real deployment — a 100-TB tuples
     table through one task is a non-starter; production materialization is
     :func:`materialize_kg_production` (partitioned SnapshotCatalog writes
-    with lineage, pruning, time travel)."""
+    with a content fold, pruning, time travel)."""
     out = _mat_dir(sf_dir)
     fp_path = os.path.join(out, "FINGERPRINT")
     fp = _fingerprint(sf_dir)
@@ -364,7 +364,8 @@ def materialize_kg_tables(spark, sf_dir: str) -> str:
 def materialize_kg_production(spark, sf_dir: str, warehouse: str,
                               doc_buckets: int = 32) -> dict:
     """Production-shaped stage-boundary snapshots: tuples + edges written
-    through :class:`SnapshotCatalog` (atomic commit, per-partition lineage,
+    through :class:`SnapshotCatalog` (atomic one-job commit, table-level
+    ``(rows, checksum)`` fold, schema-carrying manifest, append snapshots,
     time travel, expiry) partitioned by ``(kind, doc_bucket)`` — ``kind``
     (f/c) for consumer-side partition pruning, and a ``doc_id`` hash band so
     files stay bounded and writes parallelize at 10^12 docs (raise

@@ -42,11 +42,20 @@ def _edges(tuples, phrase_map, map_rows):
         "url_bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
 
 
-def _commit(catalog, name, df):
-    """Commit ``df`` as table ``name``'s next snapshot and read it back.
-    Returns ``(committed frame, manifest)``; downstream stages read the
-    committed snapshot, never the lineage that produced it."""
-    manifest = catalog.write(df, name, partition_by=_PARTITION_BY.get(name, ()))
+def _commit(catalog, name, df, append=False):
+    """Commit ``df`` as table ``name``'s next snapshot (with ``append``: add
+    its rows to the current one), record the commit in ``_metrics.jsonl``
+    and read it back. Returns ``(committed frame, manifest)``; downstream
+    stages read the committed snapshot, never the lineage that produced
+    it."""
+    t0 = time.time()
+    manifest = catalog.write(df, name, partition_by=_PARTITION_BY.get(name, ()),
+                             append=append)
+    record = {"resumed": False, "rows": manifest["rows"]}
+    if append:
+        record["added_rows"] = manifest["added_rows"]
+    record["wall_ms"] = int((time.time() - t0) * 1000)
+    catalog.write_metrics(name, record)
     return catalog.read(name), manifest
 
 
@@ -77,12 +86,7 @@ def run_pipeline(
             out[name] = catalog.read(name)
             catalog.write_metrics(name, {"resumed": True, "wall_ms": 0})
             return out[name], catalog.manifest(name)
-        t0 = time.time()
         out[name], manifest = _commit(catalog, name, build())
-        catalog.write_metrics(name, {
-            "resumed": False,
-            "rows": manifest["rows"],
-            "wall_ms": int((time.time() - t0) * 1000)})
         return out[name], manifest
 
     statements, _ = stage(
@@ -126,8 +130,9 @@ def run_pipeline_incremental(
 
     Cost model at 10^12 docs: the Arrow extraction passes (stages 1-2)
     dominate, and they are per-document — so they run ONLY on the delta.
-    ``statements`` and ``tuples`` append as new snapshots (history kept:
-    ``incremental_read`` hands downstream consumers exactly the delta).
+    ``statements`` and ``tuples`` commit append snapshots that write only
+    the delta's rows (history kept: ``incremental_read`` hands downstream
+    consumers exactly the delta).
     Entity linking re-runs over the UNION, because canonicalization is
     global — a new mention can bridge two existing clusters and merge
     them — but its input is the distinct-mention vocabulary (sublinear in
@@ -143,28 +148,6 @@ def run_pipeline_incremental(
     """
     corrections = corrections or {}
 
-    # idempotent catch-up: pages already FULLY committed (url present in
-    # BOTH the statements and tuples snapshots) are dropped BEFORE
-    # extraction (anti-join against the committed distinct urls —
-    # url-count-sized, broadcastable), so a crashed-and-rerun batch never
-    # double-appends. Requiring both tables closes the crash-retry window
-    # between the two commits (ADVICE r5, medium): a crash after the
-    # statements commit but before the tuples commit left the url in
-    # statements only, and the old statements-only guard then dropped the
-    # whole batch on retry — the batch's tuples (and all downstream edges)
-    # were silently and permanently missing. Now such pages are
-    # re-extracted, and each table's delta is additionally filtered against
-    # THAT table's own committed urls below, so the retry completes the
-    # partial append exactly (statements delta empties, tuples delta
-    # lands). Superseding a re-fetch (newer warc_ts wins) is the Iceberg
-    # MERGE path on a real cluster — out of scope for the parquet stand-in,
-    # and a re-fetch with IDENTICAL content is the common crash-retry case
-    # this guard handles exactly.
-    if catalog.is_complete("statements") and catalog.is_complete("tuples"):
-        done = (catalog.read("statements").select("url")
-                .intersect(catalog.read("tuples").select("url")))
-        new_pages = new_pages.join(F.broadcast(done), "url", "left_anti")
-
     new_statements = extract_statements(new_pages, lang=lang)
     new_tuples = _tag(new_statements, tagger, gold, weights_path, corrections)
 
@@ -172,19 +155,21 @@ def run_pipeline_incremental(
     counts: dict[str, int] = {}
     for name, delta in (("statements", new_statements),
                         ("tuples", new_tuples)):
-        had = catalog.is_complete(name)
-        if had:
-            # per-table idempotency: a retry never re-appends rows a table
-            # already holds, even when the previous attempt committed only
-            # one of the two tables (see the guard above)
+        if catalog.is_complete(name):
+            # idempotent catch-up: a retry never re-appends rows a table
+            # already holds — each table's delta is anti-joined against THAT
+            # table's committed urls (url-count-sized, broadcastable), so a
+            # rerun of a committed batch appends nothing, and a retry after a
+            # crash between the two commits lands exactly the missing
+            # tuples. Superseding a re-fetch (newer warc_ts wins) is the
+            # Iceberg MERGE path on a real cluster — out of scope for the
+            # parquet stand-in.
             seen = catalog.read(name).select("url").distinct()
             delta = delta.join(F.broadcast(seen), "url", "left_anti")
-        # rows of the snapshot being extended (the current pointer — after a
-        # rollback that is not the newest snapshot in the history)
-        prev_rows = catalog.manifest(name)["rows"] if had else 0
-        combined = catalog.read(name).unionByName(delta) if had else delta
-        out[name], manifest = _commit(catalog, name, combined)
-        counts[f"new_{name}"] = manifest["rows"] - prev_rows
+        # appended to the current pointer (after a rollback that is not the
+        # newest snapshot in the history)
+        out[name], manifest = _commit(catalog, name, delta, append=True)
+        counts[f"new_{name}"] = manifest["added_rows"]
 
     tuples = out["tuples"]
     linked_nodes, linked_map = link_entities(tuples, use_lsh=use_lsh)

@@ -167,16 +167,17 @@ def test_production_materialization_partition_pruning(spark, tmp_path):
     snapshots; a kind/bucket predicate on the consumer reaches the scan as
     PartitionFilters (no full-table read at 10^12 docs)."""
     from scikg_spark.ops import kg
-    from scikg_spark.pipeline.stage4 import SnapshotCatalog
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog, verify_snapshot
 
     wh = str(tmp_path / "wh")
     manifests = kg.materialize_kg_production(
         spark, "/root/testdata/sf0.001", wh, doc_buckets=4)
     assert set(manifests) == {"kg_tuples", "kg_edges"}
     assert manifests["kg_tuples"]["partition_by"] == ["kind", "doc_bucket"]
-    assert manifests["kg_tuples"]["lineage"]  # per-partition lineage present
-
     cat = SnapshotCatalog(spark, wh)
+    # the table-level fold is recorded and matches the committed data
+    assert manifests["kg_tuples"]["checksum"]
+    assert verify_snapshot(cat, "kg_tuples")["ok"]
     facts = cat.read("kg_tuples").filter("kind = 'f' AND doc_bucket = 2")
     plan = facts._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan

@@ -74,7 +74,10 @@ class TestSnapshots:
         manifest = cat.write(df, "t1")
         assert manifest["status"] == "committed"
         assert manifest["rows"] == 100
-        assert sum(p["rows"] for p in manifest["lineage"]) == 100
+        # the fold observed inside the write job equals one re-derived from
+        # the committed data
+        assert SnapshotCatalog._partition_lineage(cat.read("t1")) == {
+            "rows": 100, "checksum": manifest["checksum"]}
         assert cat.read("t1").count() == 100
 
     def test_snapshot_increments(self, spark, tmp_path):
@@ -136,6 +139,68 @@ class TestSnapshots:
             cat.read("t", snapshot_id=1)           # expired = gone
         # next write still gets a fresh id above the surviving history
         assert cat.write(spark.range(2), "t")["snapshot_id"] == 5
+
+        # append snapshots share their parent's data directories: expiring
+        # the parents keeps every directory the live snapshot lists
+        from scikg_spark.pipeline.stage4 import verify_snapshot
+
+        cat.write(spark.range(3), "a")
+        cat.write(spark.range(3, 5), "a", append=True)
+        cat.write(spark.range(5, 9), "a", append=True)
+        assert cat.expire_snapshots("a", keep_last=1) == [1, 2]
+        assert sorted(r["id"] for r in cat.read("a").collect()) == list(range(9))
+        assert verify_snapshot(cat, "a")["ok"]
+        # once no kept manifest lists them, the shared directories go too
+        cat.write(spark.range(2), "a")
+        assert cat.expire_snapshots("a", keep_last=1) == [3]
+        assert sorted(os.listdir(tmp_path / "a")) == [
+            ".lock", "manifest-4.json", "manifest.json", "snap-4"]
+
+    def test_racing_commits(self, spark, tmp_path, monkeypatch):
+        """Two writers commit to one table from the same parent: they claim
+        different snapshot ids, exactly one pointer swap wins, the other
+        raises, and the loser's rows are never readable."""
+        import threading
+
+        from scikg_spark.pipeline.stage4 import CommitConflict, verify_snapshot
+
+        cat = SnapshotCatalog(spark, str(tmp_path))
+        cat.write(spark.range(5), "t")
+        barrier = threading.Barrier(2, timeout=300)
+        claimed, results = {}, {}
+        real_swap = SnapshotCatalog._swap_pointer
+
+        def swap(self, table, manifest):
+            claimed[manifest["rows"]] = manifest["snapshot_id"]
+            barrier.wait()  # both writers hold the same parent here
+            return real_swap(self, table, manifest)
+
+        monkeypatch.setattr(SnapshotCatalog, "_swap_pointer", swap)
+
+        def commit(n):
+            try:
+                results[n] = cat.write(spark.range(n), "t")
+            except CommitConflict as exc:
+                results[n] = exc
+
+        threads = [threading.Thread(target=commit, args=(n,)) for n in (7, 9)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+
+        assert len(set(claimed.values())) == 2
+        won = [n for n, r in results.items() if isinstance(r, dict)]
+        lost = [n for n, r in results.items() if isinstance(r, CommitConflict)]
+        assert len(won) == 1 and len(lost) == 1, results
+        assert cat.manifest("t")["snapshot_id"] == claimed[won[0]]
+        assert verify_snapshot(cat, "t")["ok"]
+        assert cat.read("t").count() == won[0]
+        assert [m["snapshot_id"] for m in cat.history("t")] == [1, claimed[won[0]]]
+        with pytest.raises(FileNotFoundError):
+            cat.read("t", snapshot_id=claimed[lost[0]])
+        assert not os.path.exists(tmp_path / "t" / f"snap-{claimed[lost[0]]}")
 
     def test_incomplete_table_not_readable(self, spark, tmp_path):
         cat = SnapshotCatalog(spark, str(tmp_path))
@@ -284,6 +349,16 @@ class TestSnapshotVerify:
         victim = sorted(glob.glob(str(tmp_path / "t" / "snap-1" / "*.parquet")))[0]
         os.remove(victim)
         assert not verify_snapshot(cat, "t")["ok"]
+
+        # an append snapshot reads its parent's directory too: a file lost
+        # from that inherited directory is caught on the child
+        cat.write(spark.range(50).withColumn("v", F.col("id") * 3), "a")
+        cat.write(spark.range(50, 80).withColumn("v", F.col("id") * 3), "a",
+                  append=True)
+        assert verify_snapshot(cat, "a")["ok"]
+        victim = sorted(glob.glob(str(tmp_path / "a" / "snap-1" / "*.parquet")))[0]
+        os.remove(victim)
+        assert not verify_snapshot(cat, "a")["ok"]
 
 
 def test_run_pipeline_with_trained_ensemble(spark, tmp_path):
