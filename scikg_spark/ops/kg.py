@@ -655,6 +655,9 @@ def kg_synonym_clusters(spark, sf_dir, min_phrases: int = _SYN_MIN_PHRASES):
 # PageRank defaults shared with the oracle (exact parity on defaults)
 _PR_ITERATIONS = 5
 _PR_DAMPING = 0.85
+# distinct entity-pair count up to which kg_pagerank iterates in the driver;
+# the bound connected_components uses for driver-sized edge lists
+DRIVER_PAIRS = 1 << 18
 
 
 def kg_pagerank(spark, sf_dir, iterations: int = _PR_ITERATIONS,
@@ -667,15 +670,20 @@ def kg_pagerank(spark, sf_dir, iterations: int = _PR_ITERATIONS,
     algorithm DUELS against DuckDB. Final ranks round to 6 decimals for
     cross-engine float stability; top-k hubs by rank.
 
-    Scale shape: the per-iteration step is one equi-join + one aggregation
-    (identical to the CC round shape); the rank frame localCheckpoints per
-    round so plans stay flat. The partitioning is REUSED across rounds for
-    free: ``wedges`` leaves its build join hash-partitioned on ``src``,
-    ``nodes``/``rank`` leave distinct/join hash-partitioned on ``id``, and
-    ``localCheckpoint`` preserves both — so each iteration's plan contains
-    exactly ONE exchange, the inherent rank-mass transpose onto ``dst``
-    (pinned by ``test_pagerank_iteration_single_exchange`` with broadcast
-    disabled, the at-scale join mode)."""
+    Up to :data:`DRIVER_PAIRS` distinct pairs, one bounded collect brings
+    the pairs to the driver, which runs the iterations in Python; the rank
+    frame goes back as a JVM-local relation for the rounding and ranking.
+
+    Scale shape over the bound: the per-iteration step is one equi-join +
+    one aggregation (identical to the CC round shape); the rank frame
+    localCheckpoints per round so plans stay flat. The partitioning is
+    REUSED across rounds for free: ``wedges`` leaves its build join
+    hash-partitioned on ``src``, ``nodes``/``rank`` leave distinct/join
+    hash-partitioned on ``id``, and ``localCheckpoint`` preserves both — so
+    each iteration's plan contains exactly ONE exchange, the inherent
+    rank-mass transpose onto ``dst`` (pinned by
+    ``test_pagerank_iteration_single_exchange`` with broadcast disabled, the
+    at-scale join mode)."""
     edges = _materialized(spark, sf_dir, "edges")
     pairs = (
         edges.filter(F.col("subj_entity").isNotNull()
@@ -685,13 +693,59 @@ def kg_pagerank(spark, sf_dir, iterations: int = _PR_ITERATIONS,
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    nodes = (pairs.select(F.col("src").alias("id"))
-             .union(pairs.select(F.col("dst").alias("id")))
-             .distinct().localCheckpoint())
-    n = nodes.count()
-    if n == 0:
-        return nodes.select("id", F.lit(0.0).alias("rank"),
-                            F.lit(0).cast("long").alias("rank_pos"))
+    rows = (pairs.limit(DRIVER_PAIRS + 1).collect() if DRIVER_PAIRS
+            else None)
+    if rows is not None and len(rows) <= DRIVER_PAIRS:
+        rank = _driver_pagerank(spark, rows, iterations, damping)
+        empty = not rows
+    else:
+        nodes = (pairs.select(F.col("src").alias("id"))
+                 .union(pairs.select(F.col("dst").alias("id")))
+                 .distinct().localCheckpoint())
+        n = nodes.count()
+        empty = n == 0
+        rank = nodes if empty else _distributed_pagerank(
+            pairs, nodes, n, iterations, damping)
+    if empty:
+        return rank.select("id", F.lit(0.0).alias("rank"),
+                           F.lit(0).cast("long").alias("rank_pos"))
+    from pyspark.sql.window import Window
+
+    top = (rank.select("id", F.round("rank", 6).alias("rank"))
+           .orderBy(F.desc("rank"), F.asc("id")).limit(top_k))
+    w = Window.partitionBy(
+        F.substring(F.col("id").cast("string"), 1, 0)
+    ).orderBy(F.desc("rank"), F.asc("id"))
+    return top.withColumn("rank_pos",
+                          F.row_number().over(w).cast("long"))
+
+
+def _driver_pagerank(spark, pairs, iterations: int, damping: float):
+    """The iterations of :func:`kg_pagerank` over driver-held (src, dst)
+    pairs, as an (id, rank) JVM-local relation."""
+    import pyarrow as pa
+
+    outdeg: dict = {}
+    for src, _ in pairs:
+        outdeg[src] = outdeg.get(src, 0) + 1
+    ids = set(outdeg).union(dst for _, dst in pairs)
+    n = len(ids)
+    rank = dict.fromkeys(ids, 1.0 / n) if n else {}
+    for _ in range(iterations):
+        c: dict = {}
+        for src, dst in pairs:
+            c[dst] = c.get(dst, 0.0) + rank[src] / outdeg[src]
+        rank = {v: (1.0 - damping) / n + damping * c.get(v, 0.0) for v in ids}
+    return spark.createDataFrame(pa.table({
+        "id": pa.array(list(rank), pa.int64()),
+        "rank": pa.array(list(rank.values()), pa.float64()),
+    }))
+
+
+def _distributed_pagerank(pairs, nodes, n: int, iterations: int,
+                          damping: float):
+    """The iterations of :func:`kg_pagerank` as Spark joins over the
+    checkpointed ``nodes`` frame of ``n`` ids: an (id, rank) frame."""
     outdeg = pairs.groupBy("src").agg(F.count("*").alias("outdeg"))
     wedges = pairs.join(outdeg, "src").localCheckpoint()
     rank = nodes.select("id", (F.lit(1.0) / n).alias("rank"))
@@ -708,15 +762,7 @@ def kg_pagerank(spark, sf_dir, iterations: int = _PR_ITERATIONS,
                            ).alias("rank"))
             .localCheckpoint()
         )
-    from pyspark.sql.window import Window
-
-    top = (rank.select("id", F.round("rank", 6).alias("rank"))
-           .orderBy(F.desc("rank"), F.asc("id")).limit(top_k))
-    w = Window.partitionBy(
-        F.substring(F.col("id").cast("string"), 1, 0)
-    ).orderBy(F.desc("rank"), F.asc("id"))
-    return top.withColumn("rank_pos",
-                          F.row_number().over(w).cast("long"))
+    return rank
 
 
 # per-pivot adjacency cap for wedge generation: bounds the wedge join's

@@ -7,10 +7,16 @@ mention phrases into entities via
 
   1. exact normalized-string grouping (lower, '_' -> ' '),
   2. MinHash-LSH blocking over character shingles for near-duplicates,
-  3. connected components over the union of (1)+(2) edges: a driver
+  3. connected components over the union of (1)+(2) edges, in one of two
+     regimes sized by the mention vocabulary. Up to :data:`DRIVER_PHRASES`
+     distinct phrases, ONE bounded collect brings each phrase with its
+     shingle set and LSH band keys (computed in Spark, by the same
+     expressions the distributed path uses) to the driver, which runs the
+     star edges, bucketing, Jaccard verification and a union-find there.
+     Over the bound, the edges are built in Spark and CC is a driver
      union-find for driver-sized edge lists, else iterative hash-min joins
      (no GraphFrames dependency), ``localCheckpoint`` per round to cut
-     lineage.
+     lineage. Both regimes give identical outputs.
 
 :func:`attach_entities` then joins the resulting phrase -> entity map back
 onto the tuples; it is the one edge-attach step for the pipeline runner and
@@ -42,8 +48,18 @@ def mention_phrases(tuples: DataFrame) -> DataFrame:
     return phrases.select(
         "phrase",
         F.xxhash64("phrase").alias("phrase_id"),
-        F.lower(F.regexp_replace("phrase", "_", " ")).alias("norm"),
+        _norm("phrase").alias("norm"),
     )
+
+
+def _norm(name: str):
+    # the normalized string linking groups by: lower case, '_' -> ' '
+    return F.lower(F.regexp_replace(name, "_", " "))
+
+
+# LSH geometry of both linking regimes: 16 minhashes in bands of 4 over
+# 3-char shingles; buckets wider than 64 ids are dropped (the hot-block cap)
+_N_HASHES, _BAND_SIZE, _SHINGLE_K, _MAX_BUCKET = 16, 4, 3, 64
 
 
 def _shingles(name: str, k: int):
@@ -53,6 +69,25 @@ def _shingles(name: str, k: int):
         f"else transform(sequence(0, length({name}) - {k}), "
         f"i -> substring({name}, i + 1, {k})) end"
     )
+
+
+def _shingle_set(name: str, k: int):
+    """Distinct k-char shingles of string column ``name``."""
+    return F.array_distinct(_shingles(name, k))
+
+
+def _band_keys(sh: str, n_hashes: int, band_size: int):
+    """The ``n_hashes // band_size`` LSH band keys of shingle-array column
+    ``sh`` as one array: band b's key hashes minhashes ``b * band_size`` to
+    ``(b + 1) * band_size - 1``. The minhashes are computed IN PLACE with
+    array expressions (array_min over transform) — no shingle explode, no
+    distinct, no shuffle; at web scale this removes a full (id, shingle)
+    shuffle."""
+    assert n_hashes % band_size == 0
+    h = [F.expr(f"array_min(transform({sh}, s -> "
+                f"xxhash64(concat('seed{i}:', s))))") for i in range(n_hashes)]
+    return F.array(*[F.xxhash64(*h[b:b + band_size])
+                     for b in range(0, n_hashes, band_size)])
 
 
 def exact_edges(phrases: DataFrame) -> DataFrame:
@@ -68,32 +103,16 @@ def exact_edges(phrases: DataFrame) -> DataFrame:
 
 def lsh_candidate_pairs(
     phrases: DataFrame,
-    n_hashes: int = 16,
-    band_size: int = 4,
-    shingle_k: int = 3,
-    max_bucket: int = 64,
+    n_hashes: int = _N_HASHES,
+    band_size: int = _BAND_SIZE,
+    shingle_k: int = _SHINGLE_K,
+    max_bucket: int = _MAX_BUCKET,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs (src < dst) over the ``norm`` strings."""
-    assert n_hashes % band_size == 0
-    # signatures are computed IN PLACE with array expressions (array_min over
-    # transform) — no shingle explode, no distinct, no shuffle until the band
-    # self-join; at web scale this removes a full (id, shingle) shuffle
-    sh = phrases.select(
-        "phrase_id", F.array_distinct(_shingles("norm", shingle_k)).alias("sh"))
-    sig = sh.select("phrase_id", *[
-        F.expr(f"array_min(transform(sh, s -> "
-               f"xxhash64(concat('seed{i}:', s))))").alias(f"h{i}")
-        for i in range(n_hashes)
-    ])
-    n_bands = n_hashes // band_size
-    band_cols = []
-    for b in range(n_bands):
-        parts = [F.col(f"h{b * band_size + j}") for j in range(band_size)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*parts).alias("key")).alias(f"b{b}"))
-    banded = sig.select("phrase_id", F.explode(F.array(*band_cols)).alias("bk")) \
-                .select("phrase_id", "bk.band", "bk.key")
+    sh = phrases.select("phrase_id", _shingle_set("norm", shingle_k).alias("sh"))
+    banded = sh.select(
+        "phrase_id",
+        F.posexplode(_band_keys("sh", n_hashes, band_size)).alias("band", "key"))
     # cap bucket width: hot buckets (near-stopword phrases) are dropped, not
     # exploded into O(n^2) pairs. Round 6: pairs are expanded IN PLACE on
     # the collected bucket (bounded by the cap) instead of a band self-join
@@ -116,13 +135,13 @@ def lsh_candidate_pairs(
 
 
 def verify_jaccard(
-    pairs: DataFrame, phrases: DataFrame, shingle_k: int = 3, threshold: float = 0.8
+    pairs: DataFrame, phrases: DataFrame, shingle_k: int = _SHINGLE_K,
+    threshold: float = 0.8
 ) -> DataFrame:
     """True shingle-set Jaccard filter on candidate pairs — pure JVM
     (array_intersect / array_union over distinct shingle arrays; no Python
     worker round-trip in the verification path)."""
-    sh = phrases.select(
-        "phrase_id", F.array_distinct(_shingles("norm", shingle_k)).alias("sh"))
+    sh = phrases.select("phrase_id", _shingle_set("norm", shingle_k).alias("sh"))
     withs = (
         pairs.join(sh.select(F.col("phrase_id").alias("src"),
                              F.col("sh").alias("sh_a")), "src")
@@ -141,10 +160,10 @@ def verify_jaccard(
     )
 
 
-def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
-    """CC for a DRIVER-SIZED edge list: classic union-find, then comp = min
-    member id per component (identical labels to the distributed hash-min).
-    The mapping is broadcast back over ``vertices`` (which may be huge)."""
+def _union_find(edges) -> dict:
+    """Connected components of a driver-held edge list: classic union-find,
+    returned as ``{id: minimum id of its component}`` for every id an edge
+    touches (identical labels to the distributed hash-min)."""
     parent: dict = {}
 
     def find(a):
@@ -153,8 +172,7 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
             a = parent[a]
         return a
 
-    for r in rows:
-        s, d = r[0], r[1]
+    for s, d in edges:
         parent.setdefault(s, s)
         parent.setdefault(d, d)
         rs, rd = find(s), find(d)
@@ -166,6 +184,13 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
         m = root_min.get(r)
         if m is None or node < m:
             root_min[r] = node
+    return {node: root_min[find(node)] for node in parent}
+
+
+def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
+    """CC for a DRIVER-SIZED edge list via :func:`_union_find`. The mapping
+    is broadcast back over ``vertices`` (which may be huge)."""
+    comp = _union_find(rows)
     spark = vertices.sparkSession
     # Arrow local-relation build (round 6): createDataFrame over a plain
     # Python list parallelizes through Python-RDD tasks — 32 Python workers
@@ -176,8 +201,8 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     import pyarrow as pa
 
     mapping = spark.createDataFrame(pa.table({
-        "id": pa.array([int(n) for n in parent], pa.int64()),
-        "comp": pa.array([int(root_min[find(n)]) for n in parent], pa.int64()),
+        "id": pa.array(list(comp), pa.int64()),
+        "comp": pa.array(list(comp.values()), pa.int64()),
     }))
     return (
         vertices.join(F.broadcast(mapping.withColumnRenamed("comp", "_c")),
@@ -193,7 +218,9 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
     """Hash-min label propagation: (id) -> (id, comp) with comp = min id in
     the component. Iterative joins with localCheckpoint per round (bounded by
     ``max_iter``; converges in O(component diameter) rounds — phrase
-    similarity components are shallow).
+    similarity components are shallow). :func:`link_entities` calls it only
+    for a vocabulary over :data:`DRIVER_PHRASES`; a driver-sized one runs
+    :func:`_union_find` on its own edges without any Spark edge list.
 
     ``bidir`` optionally passes an ALREADY-SYMMETRIZED, already-materialized
     edge list (both directions present, e.g. a localCheckpoint the caller
@@ -277,9 +304,8 @@ def synonym_phrase_edges(phrases: DataFrame, synonyms: DataFrame) -> DataFrame:
     """Synonym pairs (the reference's ``n: [C1, as, C2]`` label tuples,
     utils.py:638-644) as entity-linking edges: join both phrase columns onto
     the mention table by normalized string."""
-    a = synonyms.select(
-        F.lower(F.regexp_replace("phrase_a", "_", " ")).alias("na"),
-        F.lower(F.regexp_replace("phrase_b", "_", " ")).alias("nb"))
+    a = synonyms.select(_norm("phrase_a").alias("na"),
+                        _norm("phrase_b").alias("nb"))
     pa = phrases.select(F.col("norm").alias("na"), F.col("phrase_id").alias("src"))
     pb = phrases.select(F.col("norm").alias("nb"), F.col("phrase_id").alias("dst"))
     return (
@@ -290,6 +316,15 @@ def synonym_phrase_edges(phrases: DataFrame, synonyms: DataFrame) -> DataFrame:
     )
 
 
+# Distinct-phrase count up to which link_entities runs in the driver (see
+# _link_in_driver). The driver regime's peak Python heap measured 3.5-3.9 KB
+# per collected phrase (tracemalloc over the collect and the linking state:
+# the sf0.1 vocabulary, 917 phrases, and a 12x variant of it, 11,004), so
+# the bound caps it near 128 MB, the order of connected_components'
+# driver_threshold. 0 disables the driver regime.
+DRIVER_PHRASES = 1 << 15
+
+
 def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
                   use_lsh: bool = True,
                   synonyms: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
@@ -298,7 +333,99 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     entity_nodes: entity_id, canonical (deterministic min norm in the
     component), n_phrases. phrase_map: phrase -> entity_id. ``synonyms``
     optionally contributes curated pair edges (phrase_a, phrase_b).
+
+    A vocabulary of at most :data:`DRIVER_PHRASES` distinct phrases links
+    in the driver after one bounded collect; a bigger one takes the
+    distributed path, which evaluates the mention table again (the bounded
+    collect stops at the bound, it does not keep what it read). Both give
+    identical outputs.
     """
+    phrases = mention_phrases(tuples)
+    mapped = (_link_in_driver(phrases, lsh_threshold, use_lsh, synonyms)
+              if DRIVER_PHRASES else None)
+    if mapped is None:
+        mapped = _link_distributed(phrases, lsh_threshold, use_lsh, synonyms)
+    nodes = mapped.groupBy("entity_id").agg(
+        F.min("norm").alias("canonical"),
+        F.countDistinct("phrase").alias("n_phrases"),
+    )
+    return nodes, mapped.select("phrase", "entity_id")
+
+
+def _link_in_driver(phrases: DataFrame, lsh_threshold: float, use_lsh: bool,
+                    synonyms: DataFrame | None) -> DataFrame | None:
+    """The driver regime of :func:`link_entities`: (phrase, norm, entity_id)
+    as a JVM-local relation, or None when the vocabulary (or the synonym
+    list) has more than :data:`DRIVER_PHRASES` rows.
+
+    Spark computes each phrase's shingle set and band keys with the
+    expressions :func:`lsh_candidate_pairs` uses, in the projection that is
+    collected — one ``limit``-bounded collect, so an over-bound vocabulary
+    never lands whole on the driver. The driver then reproduces the
+    distributed semantics exactly: star edges to the minimum phrase_id per
+    norm, LSH over one representative per norm with buckets kept only when
+    ``2 <= size <= max_bucket``, Jaccard ``|a & b| / float(|a | b|)`` against
+    ``lsh_threshold``, synonym edges joined by norm, and a union-find whose
+    entity_id is the component's minimum phrase_id."""
+    import pyarrow as pa
+
+    if use_lsh:
+        phrases = phrases.withColumn("sh", _shingle_set("norm", _SHINGLE_K)) \
+            .withColumn("bands", _band_keys("sh", _N_HASHES, _BAND_SIZE))
+    rows = phrases.limit(DRIVER_PHRASES + 1).collect()
+    if len(rows) > DRIVER_PHRASES:
+        return None
+    syn_rows = []
+    if synonyms is not None:
+        syn_rows = synonyms.select(_norm("phrase_a"), _norm("phrase_b")) \
+            .limit(DRIVER_PHRASES + 1).collect()
+        if len(syn_rows) > DRIVER_PHRASES:
+            return None
+
+    # plain column tuples: a Row's field access by name is a Python call
+    phrase, pid, norm, *lsh = (zip(*rows) if rows
+                               else [()] * len(phrases.columns))
+    root: dict = {}  # norm -> minimum phrase_id
+    for p, n in zip(pid, norm):
+        root[n] = min(p, root.get(n, p))
+    edges = [(root[n], p) for p, n in zip(pid, norm) if p != root[n]]
+    if use_lsh:
+        reps = [(p, sh, bands) for p, n, sh, bands in zip(pid, norm, *lsh)
+                if p == root[n]]
+        buckets: dict = {}
+        for p, _, bands in reps:
+            for band, key in enumerate(bands):
+                buckets.setdefault((band, key), []).append(p)
+        cand = {(a, b) if a < b else (b, a)
+                for ids in buckets.values()
+                if 2 <= len(ids) <= _MAX_BUCKET
+                for i, a in enumerate(ids) for b in ids[i + 1:]}
+        # a shingle set is never empty (a short norm is its own shingle)
+        shingles = {p: set(sh) for p, sh, _ in reps}
+        edges.extend((a, b) for a, b in cand
+                     if len(shingles[a] & shingles[b])
+                     / float(len(shingles[a] | shingles[b])) >= lsh_threshold)
+    edges.extend((root[na], root[nb]) for na, nb in syn_rows
+                 if na in root and nb in root)
+    comp = _union_find(edges)
+    # entity_id is never null, as coalesce(comp, phrase_id) is not in Spark
+    schema = pa.schema([("phrase", pa.string()), ("norm", pa.string()),
+                        pa.field("entity_id", pa.int64(), nullable=False)])
+    # one partition, like the AQE-coalesced distributed frame: a local
+    # relation otherwise splits over every core, and each commit of it and
+    # of the nodes grouped from it runs one task per split
+    return phrases.sparkSession.createDataFrame(pa.table({
+        "phrase": list(phrase),
+        "norm": list(norm),
+        "entity_id": [comp.get(p, p) for p in pid],
+    }, schema=schema)).coalesce(1)
+
+
+def _link_distributed(phrases: DataFrame, lsh_threshold: float,
+                      use_lsh: bool, synonyms: DataFrame | None) -> DataFrame:
+    """The over-bound regime of :func:`link_entities`: edges built in Spark,
+    CC by :func:`connected_components`; returns the checkpointed
+    (phrase, norm, entity_id) frame."""
     from pyspark.sql.window import Window
 
     # Materialize the distinct-mention + window pass ONCE (round 6): the
@@ -314,7 +441,7 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     # already connected by the star), which shrinks the signature
     # computation and band join by the duplication factor — at web scale
     # duplicate surface forms dominate the mention table.
-    with_root = mention_phrases(tuples).withColumn(
+    with_root = phrases.withColumn(
         "root", F.min("phrase_id").over(Window.partitionBy("norm"))) \
         .localCheckpoint()
     phrases = with_root.select("phrase", "phrase_id", "norm")
@@ -344,14 +471,9 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     # materialize the phrase -> entity join ONCE and derive both outputs
     # from it: callers checkpoint nodes AND phrase_map, which previously
     # re-ran this join (phrases x comp) for each — round 6, one pass
-    mapped = phrases.join(comp, phrases["phrase_id"] == comp["id"], "left").select(
+    return phrases.join(comp, phrases["phrase_id"] == comp["id"], "left").select(
         "phrase", "norm",
         F.coalesce("comp", "phrase_id").alias("entity_id")).localCheckpoint()
-    nodes = mapped.groupBy("entity_id").agg(
-        F.min("norm").alias("canonical"),
-        F.countDistinct("phrase").alias("n_phrases"),
-    )
-    return nodes, mapped.select("phrase", "entity_id")
 
 
 # phrase_map row count at or under which the entity attach broadcasts the

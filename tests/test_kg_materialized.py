@@ -225,6 +225,46 @@ def test_kg_pagerank_semantics(spark):
     assert 0 < total <= 1.0 + 1e-6
 
 
+def test_kg_pagerank_regimes_agree(spark, monkeypatch):
+    """The driver regime of kg_pagerank and the distributed one (forced by
+    DRIVER_PAIRS = 0) give the same rows and schema, and the same empty
+    frame over an empty pair set."""
+    from pyspark.sql import functions as F
+
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    sf = os.path.join(TESTDATA, "sf0.001")
+    calls = []
+    driver_pagerank = kg._driver_pagerank
+    monkeypatch.setattr(kg, "_driver_pagerank",
+                        lambda *a: calls.append(1) or driver_pagerank(*a))
+
+    def ranks():
+        df = kg.kg_pagerank(spark, sf, top_k=100_000)
+        return df.schema, sorted(map(tuple, df.collect()))
+
+    def both():
+        calls.clear()
+        driver = ranks()
+        assert calls, "the pair list is driver-sized"
+        with monkeypatch.context() as m:
+            m.setattr(kg, "DRIVER_PAIRS", 0)
+            distributed = ranks()
+        assert len(calls) == 1
+        assert driver == distributed
+        return driver
+
+    assert len(both()[1]) > 50
+    materialized = kg._materialized
+    monkeypatch.setattr(kg, "_materialized", lambda *a: materialized(*a)
+                        .filter(F.lit(False)))
+    schema, rows = both()
+    assert rows == []
+    assert schema.simpleString() == "struct<id:bigint,rank:double,rank_pos:bigint>"
+
+
 def test_kg_triangle_count_semantics(spark):
     from scikg_spark.ops import kg
 

@@ -5,8 +5,11 @@ made minhash/ngram re-run the whole scan+hash pipeline once per join side —
 fails a test here, not a bench read."""
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
+
+import pytest
 
 SF = "/root/testdata/sf0.01"
 
@@ -98,8 +101,11 @@ def test_union_find_mapping_is_jvm_local_relation(spark):
         spark.conf.set(conf, before)
 
 
-def test_link_entities_evaluates_upstream_once(spark):
-    """link_entities materializes the distinct-mention window exactly once.
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+def test_link_entities_evaluates_upstream_once(spark, monkeypatch, regime):
+    """link_entities evaluates its upstream exactly once in either regime:
+    the driver regime in its one collect, the distributed one (forced by
+    DRIVER_PHRASES = 0) by materializing the distinct-mention window once.
     The pre-round-6 `.cache()` form lost the race when AQE materialized the
     8 consumer stage jobs concurrently (star edges, LSH signatures, both
     Jaccard-verify sides, x2 for the symmetrizing union), re-running the
@@ -108,7 +114,11 @@ def test_link_entities_evaluates_upstream_once(spark):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from scikg_spark.pipeline import stage3
     from scikg_spark.pipeline.stage3 import link_entities
+
+    if regime == "distributed":
+        monkeypatch.setattr(stage3, "DRIVER_PHRASES", 0)
 
     acc = spark.sparkContext.accumulator(0)
 
@@ -132,3 +142,55 @@ def test_link_entities_evaluates_upstream_once(spark):
     # (8x at 32), so the 1.5x bound fails any recomputation regression
     # while leaving slack for a stray retried task
     assert acc.value <= 1.5 * n, f"source evaluated {acc.value / n:.1f}x"
+
+
+def _jobs_in_group(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it launched, counted under its
+    own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_link_entities_driver_regime_job_count(spark):
+    """A driver-sized vocabulary links with one bounded collect (2 jobs:
+    the distinct's shuffle stage and the collect), plus one for the
+    synonym list; the outputs run no job until consumed."""
+    from pyspark.sql import functions as F
+
+    from scikg_spark.ops import kg
+    from scikg_spark.pipeline.stage3 import link_entities
+
+    tuples = spark.range(200).select(
+        F.struct(F.concat(F.lit("Concept_"), (F.col("id") % 50).cast("string"))
+                 .alias("text")).alias("s_c"),
+        F.struct(F.concat(F.lit("Obj_"), (F.col("id") % 7).cast("string"))
+                 .alias("text")).alias("o_c")).localCheckpoint()
+    syn = kg.load_synonyms(spark)
+    (nodes, pmap), n = _jobs_in_group(
+        spark, "pin-link", lambda: link_entities(tuples))
+    assert n <= 2, n
+    assert pmap.count() == 57
+    _, n = _jobs_in_group(
+        spark, "pin-link-syn", lambda: link_entities(tuples, synonyms=syn))
+    assert n <= 3, n
+
+
+def test_kg_pagerank_driver_regime_job_count(spark):
+    """PageRank over a driver-sized pair list: one bounded collect, the
+    iterations in Python, and the ranking tail over a local relation — at
+    most 5 jobs for the whole query (36 with the iterations in Spark)."""
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    sf = os.path.join(TESTDATA, "sf0.001")
+    kg.materialize_kg_tables(spark, sf)
+    df, n = _jobs_in_group(
+        spark, "pin-pagerank", lambda: kg.kg_pagerank(spark, sf).toPandas())
+    assert len(df) > 0
+    assert n <= 5, n

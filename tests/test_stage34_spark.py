@@ -67,6 +67,103 @@ class TestLinking:
                sorted(r.entity_id for r in again.collect())
 
 
+@pytest.fixture(scope="module")
+def sf_tuples(spark):
+    """Tuples of the whole sf0.001 corpus, materialized once."""
+    from scikg_spark.pipeline.stage1 import extract_statements
+    from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    return decode_tuples(tag_statements(
+        extract_statements(build_pages_from_documents(docs)),
+        mode="rule")).localCheckpoint()
+
+
+def _mention_tuples(spark, phrases):
+    """A tuples frame whose subject mentions are exactly ``phrases``."""
+    return spark.createDataFrame([(p,) for p in phrases], "t string").select(
+        F.struct(F.col("t").alias("text")).alias("s_c"),
+        F.struct(F.lit(None).cast("string").alias("text")).alias("o_c"))
+
+
+class TestLinkingRegimes:
+    """link_entities gives the same entity_map and entity_nodes (schema and
+    row multiset) in its driver regime and in its distributed one, which
+    DRIVER_PHRASES = 0 forces."""
+
+    @staticmethod
+    def _both(monkeypatch, tuples, bounds=(0,), **kw):
+        """Links ``tuples`` in the driver regime, then once with
+        DRIVER_PHRASES set to each of ``bounds``, each of which must send it
+        to the distributed path; all outputs must agree."""
+        from scikg_spark.pipeline import stage3
+
+        def frames():
+            return [(df.schema, sorted(map(tuple, df.collect())))
+                    for df in link_entities(tuples, **kw)]
+
+        def refuse(*a, **k):
+            raise AssertionError("input is driver-sized")
+
+        with monkeypatch.context() as m:
+            m.setattr(stage3, "_link_distributed", refuse)
+            driver = frames()
+        distributed = stage3._link_distributed
+        for bound in bounds:
+            calls = []
+            with monkeypatch.context() as m:
+                m.setattr(stage3, "DRIVER_PHRASES", bound)
+                m.setattr(stage3, "_link_distributed",
+                          lambda *a: calls.append(1) or distributed(*a))
+                other = frames()
+            assert calls, bound
+            assert driver[0] == other[0], bound  # entity_nodes
+            assert driver[1] == other[1], bound  # entity_map
+        return dict(driver[1][1])
+
+    def test_sf_tuples(self, spark, sf_tuples, monkeypatch):
+        ids = self._both(monkeypatch, sf_tuples)
+        assert len(ids) == mention_phrases(sf_tuples).count()
+
+    def test_without_lsh(self, spark, sf_tuples, monkeypatch):
+        self._both(monkeypatch, sf_tuples, use_lsh=False)
+
+    def test_with_synonyms(self, spark, sf_tuples, monkeypatch):
+        from scikg_spark.ops import kg
+
+        self._both(monkeypatch, sf_tuples, synonyms=kg.load_synonyms(spark))
+
+    def test_crafted_edge_cases(self, spark, monkeypatch):
+        # 70 norms with one shingle set: every LSH bucket of theirs holds
+        # 70 > max_bucket ids and is dropped, though their Jaccard is 1.0
+        wide = ["abc" * k for k in range(2, 72)]
+        short = ["ab", "abc", "x"]  # norms of shingle_k chars or fewer
+        variants = ["T_cells", "t cells", "T CELLS", "t_Cells"]
+        near = ["regulatory_t_cell_activation",  # Jaccard 0.828
+                "regulatory_t_cells_activation"]
+        below = ["immune_response_in_mice",  # Jaccard 0.792
+                 "immune_responses_in_mice"]
+        phrases = wide + short + variants + near + below
+        tuples = _mention_tuples(spark, phrases)
+        # 0 skips the driver regime; 5 sends it over the bound
+        ids = self._both(monkeypatch, tuples, bounds=(0, 5))
+        assert len({ids[p] for p in wide}) == len(wide)
+        assert len({ids[p] for p in short}) == len(short)
+        assert len({ids[p] for p in variants}) == 1
+        assert ids[near[0]] == ids[near[1]]  # an LSH edge
+        assert ids[below[0]] != ids[below[1]]
+
+        pairs = [("T_CELLS", "immune_response_in_mice"),
+                 ("ab", "no_such_mention"), ("abc", "ABC"), (None, "x")]
+        pairs += [(f"absent_{i}", f"absent_{i + 1}") for i in range(100)]
+        syn = spark.createDataFrame(pairs, "phrase_a string, phrase_b string")
+        # at len(phrases) the vocabulary fits, the synonym list does not
+        ids = self._both(monkeypatch, tuples, bounds=(0, 5, len(phrases)),
+                         synonyms=syn)
+        assert ids["t cells"] == ids[below[0]] != ids[below[1]]
+        assert len({ids[p] for p in short}) == len(short)
+
+
 class TestSnapshots:
     def test_write_read_roundtrip_and_lineage(self, spark, tmp_path):
         cat = SnapshotCatalog(spark, str(tmp_path))
