@@ -101,8 +101,8 @@ def main(argv=None):
             # BiLSTM tag pass + decode on executors
             import os as _os
 
+            from scikg_spark.pipeline.fused import extract_tuples
             from scikg_spark.pipeline.stage1 import extract_statements
-            from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
             weights = args.weights or _os.path.join(
                 _os.path.dirname(_os.path.dirname(_os.path.dirname(
@@ -114,8 +114,8 @@ def main(argv=None):
             result["statements"] = stmts.count()
 
             def job():
-                return decode_tuples(tag_statements(
-                    stmts, mode=args.tagger, weights_path=weights)).count()
+                return extract_tuples(
+                    stmts, tagger=args.tagger, weights_path=weights).count()
 
         result["tagger"] = args.tagger
         job()  # warm python workers

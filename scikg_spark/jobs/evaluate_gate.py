@@ -32,10 +32,10 @@ def main(argv=None):
     from scikg_spark.core.parsing import parse_stmt_blocks
     from scikg_spark.core.serialize import serialize_tuple
     from scikg_spark.pipeline.evaluate import summarize_match, tuple_match_scores
+    from scikg_spark.pipeline.fused import extract_tuples
     from scikg_spark.pipeline.gold import gold_frames_from_blocks
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.stage1 import extract_statements, verify_extraction
-    from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
     names = ["eval", "train"] if args.corpus == "both" else [args.corpus]
     blocks = []
@@ -54,7 +54,7 @@ def main(argv=None):
         pages, gold, oracle = gold_frames_from_blocks(spark, blocks)
         mismatches = verify_extraction(pages)
         stmts = extract_statements(pages)
-        pred = decode_tuples(tag_statements(stmts, mode="gold", gold=gold)).cache()
+        pred = extract_tuples(stmts, tagger="gold", gold=gold).cache()
 
         # truth side: the pure-Python reference decode of the same gold tags
         truth_rows = []

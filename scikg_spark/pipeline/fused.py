@@ -20,15 +20,22 @@ multiprocessing ceiling is ~0.72 — VM frequency/steal bounds it).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from scikg_spark.pipeline.stage2 import TUPLES_SCHEMA, _span_dict
+from scikg_spark.core.decoder import NIL, post_decode
+from scikg_spark.core.serialize import serialize_tuple
+from scikg_spark.pipeline.stage1 import _page_html, _statement_batches
+from scikg_spark.pipeline.stage2 import (
+    TUPLES_SCHEMA, _corrector, _load_tagger, _tag_input, _tagged)
+
+
+def _span_dict(slot):
+    if slot == NIL:
+        return None
+    return {"text": slot[0], "start": slot[1], "end": slot[2]}
 
 
 def _decode_rows(url, doc_id, stmt_id, words, fact_tags, cond_tags):
-    from scikg_spark.core.decoder import post_decode
-    from scikg_spark.core.serialize import serialize_tuple
-
     out = []
     for kind, tags in (("f", fact_tags), ("c", cond_tags)):
         for idx, rec in enumerate(post_decode(words, tags)):
@@ -44,94 +51,46 @@ _COLS = ["url", "doc_id", "stmt_id", "kind", "tuple_idx",
          "subj", "pred", "obj", "s_c", "s_a", "p", "o_c", "o_a"]
 
 
+def _tuple_batches(batches, tag, correct):
+    """Statement batches -> tuple batches: tag, correct, decode."""
+    for pdf in batches:
+        urls, doc_ids = pdf["url"].tolist(), pdf["doc_id"].tolist()
+        stmt_ids = pdf["stmt_id"].tolist()
+        rows = []
+        for i, words, ft, ct in _tagged(pdf, tag, correct):
+            rows.extend(_decode_rows(urls[i], doc_ids[i], stmt_ids[i], words, ft, ct))
+        if rows:
+            yield pd.DataFrame(rows, columns=_COLS)
+
+
 def extract_tuples(statements: DataFrame, ar=None, use_tc=False,
                    use_tcdel=False, use_sh=False, use_del=False,
-                   tagger: str = "rule",
+                   tagger: str = "rule", gold: DataFrame | None = None,
                    weights_path: str | None = None) -> DataFrame:
     """statements -> tuples: tag + correct + decode in ONE Python pass.
-    tagger='rule' (default) or 'probe' (trained model; needs weights_path)."""
-    from scikg_spark.core.correct import correct_tags
-    from scikg_spark.core.tagger import rule_tag
-
-    if tagger == "probe" and weights_path is None:
-        raise ValueError("probe tagger needs a trained weights_path")
-    if tagger not in ("rule", "probe"):
-        raise ValueError(f"unknown fused tagger {tagger!r}")
+    ``tagger`` takes every mode of
+    :func:`~scikg_spark.pipeline.stage2.tag_statements`, with the same
+    ``gold``/``weights_path`` rules; gold tags are broadcast-joined on ahead
+    of the pass."""
+    source = _tag_input(statements, tagger, gold, weights_path)
+    correct = _corrector(ar, use_tc, use_tcdel, use_sh, use_del)
 
     def gen(batches):
-        probe = None
-        if tagger == "probe":
-            from scikg_spark.core.neural import ProbeTagger
+        return _tuple_batches(batches, _load_tagger(tagger, weights_path), correct)
 
-            probe = ProbeTagger.load(weights_path)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            words_col = [list(w) for w in pdf["words"]]
-            pos_col = [list(p) for p in pdf["postags"]]
-            caps_col = [list(c) for c in pdf["caps"]]
-            if probe is not None:
-                tag_pairs = probe.predict_tags(words_col, pos_col, caps_col)
-            else:
-                tag_pairs = [rule_tag(w, p, c)
-                             for w, p, c in zip(words_col, pos_col, caps_col)]
-            rows = []
-            for url, doc_id, stmt_id, words, postags, (ft, ct) in zip(
-                    pdf["url"], pdf["doc_id"], pdf["stmt_id"],
-                    words_col, pos_col, tag_pairs):
-                if ar is not None or use_tc or use_tcdel or use_sh or use_del:
-                    res = correct_tags(
-                        ft, ct, [w.lower() for w in words], postags,
-                        ar=ar, use_tc=use_tc, use_tcdel=use_tcdel,
-                        use_sh=use_sh, use_del=use_del)
-                    if res is None:
-                        continue
-                    ft, ct = res
-                rows.extend(_decode_rows(url, doc_id, stmt_id, words, ft, ct))
-            if rows:
-                yield pd.DataFrame(rows, columns=_COLS)
-
-    return statements.mapInPandas(gen, schema=TUPLES_SCHEMA)
+    return source.mapInPandas(gen, schema=TUPLES_SCHEMA)
 
 
 def pages_to_tuples(pages: DataFrame, lang: str | None = "en",
                     ar=None, use_tc=False, use_tcdel=False,
                     use_sh=False, use_del=False) -> DataFrame:
-    """pages -> tuples in ONE Python pass (extract_text + parse + tag +
+    """pages -> tuples in ONE Python pass (extract_text + parse + rule tag +
     correct + decode). The no-checkpoint fast path for read-through queries;
     the checkpointing runner keeps the two-pass form for resumability."""
-    from scikg_spark.core.correct import correct_tags
-    from scikg_spark.core.parsing import parse_annotated
-    from scikg_spark.core.tagger import rule_tag
-    from scikg_spark.core.textextract import extract_text
-
-    if lang is not None:
-        pages = pages.filter(F.col("lang") == lang)
-    src = pages.select("url", "html")
+    correct = _corrector(ar, use_tc, use_tcdel, use_sh, use_del)
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[-1]
-                for i, line in enumerate(extract_text(html).split("\n")):
-                    if not line:
-                        continue
-                    try:
-                        words, postags, caps = parse_annotated(line, lower=False)
-                    except (ValueError, AssertionError):
-                        continue
-                    ft, ct = rule_tag(words, postags, caps)
-                    if ar is not None or use_tc or use_tcdel or use_sh or use_del:
-                        res = correct_tags(
-                            ft, ct, [w.lower() for w in words], postags,
-                            ar=ar, use_tc=use_tc, use_tcdel=use_tcdel,
-                            use_sh=use_sh, use_del=use_del)
-                        if res is None:
-                            continue
-                        ft, ct = res
-                    rows.extend(_decode_rows(url, doc_id, i + 1, words, ft, ct))
-            if rows:
-                yield pd.DataFrame(rows, columns=_COLS)
+        return _tuple_batches(
+            _statement_batches(batches), _load_tagger("rule", None), correct)
 
-    return src.mapInPandas(gen, schema=TUPLES_SCHEMA)
+    return _page_html(pages, lang).mapInPandas(gen, schema=TUPLES_SCHEMA)

@@ -2,9 +2,10 @@
 graph tables, with per-stage snapshot checkpoints and resume.
 
 Spark lifecycle (SURVEY.md §3, rebuild): one declarative plan per stage; the
-only Python boundaries are the three Arrow-vectorized UDF passes (stage 1
-extract/parse, stage 2 tag/correct/decode, stage 3 Jaccard verify). Catalyst
-handles pushdown/pruning; AQE handles skew and partition coalescing.
+only Python boundaries are the two Arrow-vectorized UDF passes (stage 1
+extract/parse, stage 2 tag/correct/decode, for every tagger mode). Stage 3
+links in the driver or in Spark SQL, with no Python UDF. Catalyst handles
+pushdown/pruning; AQE handles skew and partition coalescing.
 """
 
 from __future__ import annotations
@@ -15,23 +16,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scikg_spark.pipeline.fused import extract_tuples
 from scikg_spark.pipeline.stage1 import extract_statements
-from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 from scikg_spark.pipeline.stage3 import attach_entities, link_entities
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
 
 # committed partition layout per table; tables not listed are unpartitioned
 _PARTITION_BY = {"tuples": ("kind",), "edges": ("kind", "url_bucket")}
-
-
-def _tag(statements, tagger, gold, weights_path, corrections):
-    """Stage 2: statements -> tuples with the chosen tagger."""
-    if tagger == "rule":
-        # fused single-Python-pass (tag+correct+decode); chained
-        # mapInPandas would run 2 workers per task slot (see fused.py)
-        return extract_tuples(statements, **corrections)
-    return decode_tuples(
-        tag_statements(statements, mode=tagger, gold=gold,
-                       weights_path=weights_path, **corrections))
 
 
 def _edges(tuples, phrase_map, map_rows):
@@ -91,8 +80,9 @@ def run_pipeline(
 
     statements, _ = stage(
         "statements", lambda: extract_statements(pages, lang=lang))
-    tuples, _ = stage("tuples", lambda: _tag(
-        statements, tagger, gold, weights_path, corrections))
+    tuples, _ = stage("tuples", lambda: extract_tuples(
+        statements, tagger=tagger, gold=gold, weights_path=weights_path,
+        **corrections))
 
     # stage 3 produces two tables from one computation; resume only when BOTH
     # are committed. Otherwise recompute once and FORCE-commit both — serving
@@ -149,7 +139,9 @@ def run_pipeline_incremental(
     corrections = corrections or {}
 
     new_statements = extract_statements(new_pages, lang=lang)
-    new_tuples = _tag(new_statements, tagger, gold, weights_path, corrections)
+    new_tuples = extract_tuples(
+        new_statements, tagger=tagger, gold=gold, weights_path=weights_path,
+        **corrections)
 
     out: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}

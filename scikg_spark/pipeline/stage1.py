@@ -71,35 +71,43 @@ def build_fetch_log(documents: DataFrame) -> DataFrame:
         F.explode(variants).alias("url"), "doc_id")
 
 
-def extract_statements(pages: DataFrame, lang: str | None = "en") -> DataFrame:
-    """pages -> one row per statement with aligned token arrays."""
+def _page_html(pages: DataFrame, lang: str | None) -> DataFrame:
+    """The ``(url, html)`` columns the statement parser reads, filtered to
+    ``lang`` unless it is None."""
     if lang is not None:
         pages = pages.filter(F.col("lang") == lang)
-    src = pages.select("url", "html")
+    return pages.select("url", "html")
 
-    def gen(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("url", "doc_id", "stmt_id", "words", "postags", "caps")}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
-                doc_id = url.rsplit("/", 1)[-1]
-                for i, line in enumerate(text.split("\n")):
-                    if not line:
-                        continue
-                    try:
-                        words, postags, caps = parse_annotated(line, lower=False)
-                    except (ValueError, AssertionError):
-                        continue  # non-statement line (e.g. page title/boilerplate)
-                    out["url"].append(url)
-                    out["doc_id"].append(doc_id)
-                    out["stmt_id"].append(i + 1)
-                    out["words"].append(words)
-                    out["postags"].append(postags)
-                    out["caps"].append(caps)
-            if out["url"]:
-                yield pd.DataFrame(out)
 
-    return src.mapInPandas(gen, schema=STATEMENTS_SCHEMA)
+def _statement_batches(batches):
+    """The statement-line parser, per Arrow batch of ``_page_html`` rows:
+    yields one STATEMENTS_SCHEMA frame per batch that holds a statement."""
+    for pdf in batches:
+        out = {k: [] for k in ("url", "doc_id", "stmt_id", "words", "postags", "caps")}
+        for url, html in zip(pdf["url"], pdf["html"]):
+            text = extract_text(html)
+            doc_id = url.rsplit("/", 1)[-1]
+            for i, line in enumerate(text.split("\n")):
+                if not line:
+                    continue
+                try:
+                    words, postags, caps = parse_annotated(line, lower=False)
+                except (ValueError, AssertionError):
+                    continue  # non-statement line (e.g. page title/boilerplate)
+                out["url"].append(url)
+                out["doc_id"].append(doc_id)
+                out["stmt_id"].append(i + 1)
+                out["words"].append(words)
+                out["postags"].append(postags)
+                out["caps"].append(caps)
+        if out["url"]:
+            yield pd.DataFrame(out)
+
+
+def extract_statements(pages: DataFrame, lang: str | None = "en") -> DataFrame:
+    """pages -> one row per statement with aligned token arrays."""
+    return _page_html(pages, lang).mapInPandas(
+        _statement_batches, schema=STATEMENTS_SCHEMA)
 
 
 def verify_extraction(pages: DataFrame) -> int:

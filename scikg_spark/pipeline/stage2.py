@@ -1,24 +1,19 @@
-"""Stage 2: statements -> tagged statements -> exploded tuples.
+"""Stage 2: statements -> tagged statements.
 
-Tagging, correction (AR/TC/SH/DEL as pipeline flags, mirroring
-self_train/self_train.py:49-53) and tuple decoding (post_decode,
-utils.py:1046-1351) all run inside ONE mapInPandas pass with broadcast-sized
-rule state in the closure — no shuffle, no per-row Python.
-
-Inside each Arrow batch the pandas slice is sorted by token count descending
-before the (future) neural forward pass — the reference's padding-efficiency
-sort (MIMO_Extractor.py:71-79) recast as intra-batch locality; it never
-causes a cluster-wide sort.
+The paper's extraction chain per statement is tagger (rule, gold or MIMO
+net) -> AR/TC/SH/DEL correction (pipeline flags, mirroring
+self_train/self_train.py:49-53) -> tuple decoding. This module holds the
+per-batch helpers of the first two links; :mod:`scikg_spark.pipeline.fused`
+adds decoding and runs the whole chain in ONE mapInPandas pass.
+:func:`tag_statements` runs the same helpers in its one pass and stops at
+the tags, for the training and pseudo-label jobs.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from scikg_spark.core.correct import ARCorrecter, correct_tags
-from scikg_spark.core.decoder import NIL, post_decode
-from scikg_spark.core.serialize import serialize_tuple
 from scikg_spark.core.tagger import rule_tag
 
 TAGGED_SCHEMA = (
@@ -33,6 +28,96 @@ TUPLES_SCHEMA = (
     "subj string, pred string, obj string, "
     f"s_c {_SPAN}, s_a {_SPAN}, p {_SPAN}, o_c {_SPAN}, o_a {_SPAN}"
 )
+
+_MODELS = ("neural", "probe", "ensemble")
+
+
+def _tag_input(statements: DataFrame, mode: str, gold: DataFrame | None,
+               weights_path: str | None) -> DataFrame:
+    """Check the tagger arguments; -> the frame the tagging pass reads: the
+    statements, with the gold tags broadcast-joined on (doc_id, stmt_id) in
+    gold mode — the P/R gate path."""
+    if weights_path is not None and mode not in _MODELS:
+        raise ValueError(
+            "weights_path requires mode='neural', 'probe' or 'ensemble'")
+    if mode == "probe" and weights_path is None:
+        raise ValueError("probe mode needs a trained weights_path")
+    if mode == "gold":
+        if gold is None:
+            raise ValueError("gold mode needs a gold DataFrame")
+        return statements.join(
+            F.broadcast(gold.select("doc_id", "stmt_id", "fact_tags", "cond_tags")),
+            on=["doc_id", "stmt_id"],
+            how="inner",
+        ).select(
+            "url", "doc_id", "stmt_id", "words", "postags", "caps",
+            "fact_tags", "cond_tags")
+    if mode != "rule" and mode not in _MODELS:
+        raise ValueError(f"unknown tagger mode {mode!r}")
+    return statements
+
+
+def _load_tagger(mode: str, weights_path: str | None):
+    """-> ``tag(words_col, postags_col, caps_col)``, one (fact_tags,
+    cond_tags) pair per statement; None in gold mode, whose tags ride the
+    input frame. Called inside the pass, so a model loads once per task."""
+    if mode == "gold":
+        return None
+    if mode == "rule":
+        return lambda words, postags, caps: map(rule_tag, words, postags, caps)
+    from scikg_spark.core.neural import (
+        MimoEnsemble, MimoTagger, ProbeTagger, ensemble_from_weights,
+        tagger_from_weights)
+
+    if mode == "probe":
+        model = ProbeTagger.load(weights_path)
+    elif weights_path is None:
+        model = MimoEnsemble() if mode == "ensemble" else MimoTagger()
+    elif mode == "neural":
+        # the checkpoint's own flags decide the model config
+        model = tagger_from_weights(weights_path)
+    else:
+        model = ensemble_from_weights(weights_path)
+    return model.predict_tags
+
+
+def _corrector(ar: ARCorrecter | None, use_tc: bool, use_tcdel: bool,
+               use_sh: bool, use_del: bool):
+    """-> ``correct(fact_tags, cond_tags, words, postags)``: the corrected
+    tags, or None for a statement the chain drops (self_train.py:117-203).
+    None when no correction is asked for, so the pass skips the
+    per-statement lower-casing."""
+    if ar is None and not (use_tc or use_tcdel or use_sh or use_del):
+        return None
+
+    def correct(fact_tags, cond_tags, words, postags):
+        return correct_tags(
+            fact_tags, cond_tags, [w.lower() for w in words], postags,
+            ar=ar, use_tc=use_tc, use_tcdel=use_tcdel, use_sh=use_sh,
+            use_del=use_del)
+
+    return correct
+
+
+def _tagged(pdf, tag, correct):
+    """One Arrow batch of statements -> ``(row position, words, fact_tags,
+    cond_tags)`` per statement the corrections keep."""
+    if not len(pdf):
+        return  # empty batches degrade list cols to float64 (Arrow)
+    words_col = [list(w) for w in pdf["words"]]
+    pos_col = [list(p) for p in pdf["postags"]]
+    if tag is None:  # gold: the tags rode in on the join
+        pairs = [(list(ft), list(ct))
+                 for ft, ct in zip(pdf["fact_tags"], pdf["cond_tags"])]
+    else:
+        pairs = tag(words_col, pos_col, [list(c) for c in pdf["caps"]])
+    for i, (words, postags, (ft, ct)) in enumerate(zip(words_col, pos_col, pairs)):
+        if correct is not None:
+            res = correct(ft, ct, words, postags)
+            if res is None:
+                continue
+            ft, ct = res
+        yield i, words, ft, ct
 
 
 def tag_statements(
@@ -49,129 +134,25 @@ def tag_statements(
     """Attach ``fact_tags``/``cond_tags``.
 
     mode='gold': broadcast-join pre-collapsed gold rows on (doc_id, stmt_id)
-    — the P/R gate path. mode='rule': deterministic mention-role tagger.
-    Correction flags drop statements exactly like the reference's
-    pseudo-labeling filter chain (self_train.py:117-203).
+    — a pure join when no correction flag is set. mode='rule':
+    deterministic mention-role tagger. mode='neural'/'ensemble'/'probe':
+    the MIMO models (``weights_path``: a trained checkpoint; probe needs
+    one). Correction flags drop statements exactly like the reference's
+    pseudo-labeling filter chain (self_train.py:117-203), inside the one
+    tagging pass.
     """
-    if weights_path is not None and mode not in ("neural", "probe", "ensemble"):
-        raise ValueError(
-            "weights_path requires mode='neural', 'probe' or 'ensemble'")
-    if mode == "probe" and weights_path is None:
-        raise ValueError("probe mode needs a trained weights_path")
-    if mode == "gold":
-        if gold is None:
-            raise ValueError("gold mode needs a gold DataFrame")
-        tagged = statements.join(
-            F.broadcast(gold.select("doc_id", "stmt_id", "fact_tags", "cond_tags")),
-            on=["doc_id", "stmt_id"],
-            how="inner",
-        ).select(
-            "url", "doc_id", "stmt_id", "words", "postags", "caps",
-            "fact_tags", "cond_tags")
-    elif mode == "rule":
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue  # empty batches degrade list cols to float64 (Arrow)
-                fact_col, cond_col = [], []
-                for words, postags, caps in zip(pdf["words"], pdf["postags"], pdf["caps"]):
-                    ft, ct = rule_tag(list(words), list(postags), list(caps))
-                    fact_col.append(ft)
-                    cond_col.append(ct)
-                pdf = pdf.assign(fact_tags=fact_col, cond_tags=cond_col)
-                yield pdf
-
-        tagged = statements.mapInPandas(gen, schema=TAGGED_SCHEMA)
-    elif mode in ("neural", "ensemble", "probe"):
-        def gen(batches):
-            # built once per Python worker; in production the weight dict is
-            # an sc.broadcast and this constructor loads from it
-            from scikg_spark.core.neural import (
-                MimoEnsemble, MimoTagger, ProbeTagger, ensemble_from_weights,
-                tagger_from_weights)
-
-            if mode == "probe":
-                model = ProbeTagger.load(weights_path)
-            elif mode == "neural" and weights_path is not None:
-                # the checkpoint's own flags decide the model config
-                model = tagger_from_weights(weights_path)
-            elif mode == "ensemble" and weights_path is not None:
-                model = ensemble_from_weights(weights_path)
-            else:
-                model = MimoEnsemble() if mode == "ensemble" else MimoTagger()
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                preds = model.predict_tags(
-                    [list(w) for w in pdf["words"]],
-                    [list(p) for p in pdf["postags"]],
-                    [list(c) for c in pdf["caps"]])
-                pdf = pdf.assign(
-                    fact_tags=[p[0] for p in preds],
-                    cond_tags=[p[1] for p in preds])
-                yield pdf
-
-        tagged = statements.mapInPandas(gen, schema=TAGGED_SCHEMA)
-    else:
-        raise ValueError(f"unknown tagger mode {mode!r}")
-
-    if ar is not None or use_tc or use_tcdel or use_sh or use_del:
-        def correct_gen(batches):
-            for pdf in batches:
-                keep = []
-                fact_col, cond_col = [], []
-                for idx, (words, postags, ft, ct) in enumerate(
-                        zip(pdf["words"], pdf["postags"], pdf["fact_tags"], pdf["cond_tags"])):
-                    res = correct_tags(
-                        list(ft), list(ct),
-                        [w.lower() for w in words], list(postags),
-                        ar=ar, use_tc=use_tc, use_tcdel=use_tcdel,
-                        use_sh=use_sh, use_del=use_del)
-                    if res is None:
-                        continue
-                    keep.append(idx)
-                    fact_col.append(res[0])
-                    cond_col.append(res[1])
-                if not keep:
-                    continue
-                out = pdf.iloc[keep].copy()
-                out["fact_tags"] = fact_col
-                out["cond_tags"] = cond_col
-                yield out
-
-        tagged = tagged.mapInPandas(correct_gen, schema=TAGGED_SCHEMA)
-
-    return tagged
-
-
-def _span_dict(slot):
-    if slot == NIL:
-        return None
-    return {"text": slot[0], "start": slot[1], "end": slot[2]}
-
-
-def decode_tuples(tagged: DataFrame) -> DataFrame:
-    """tagged statements -> one row per decoded fact/condition tuple."""
+    source = _tag_input(statements, mode, gold, weights_path)
+    correct = _corrector(ar, use_tc, use_tcdel, use_sh, use_del)
+    if mode == "gold" and correct is None:
+        return source
 
     def gen(batches):
-        cols = ["url", "doc_id", "stmt_id", "kind", "tuple_idx",
-                "subj", "pred", "obj", "s_c", "s_a", "p", "o_c", "o_a"]
+        tag = _load_tagger(mode, weights_path)
         for pdf in batches:
-            rows = []
-            for url, doc_id, stmt_id, words, ft, ct in zip(
-                    pdf["url"], pdf["doc_id"], pdf["stmt_id"],
-                    pdf["words"], pdf["fact_tags"], pdf["cond_tags"]):
-                words = list(words)
-                for kind, tags in (("f", list(ft)), ("c", list(ct))):
-                    for idx, rec in enumerate(post_decode(words, tags)):
-                        subj, pred, obj = serialize_tuple(rec)
-                        rows.append((
-                            url, doc_id, stmt_id, kind, idx + 1,
-                            subj, pred, obj,
-                            _span_dict(rec[0]), _span_dict(rec[1]),
-                            _span_dict(rec[2]), _span_dict(rec[3]),
-                            _span_dict(rec[4])))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            kept = list(_tagged(pdf, tag, correct))
+            if kept:
+                yield pdf.iloc[[k[0] for k in kept]].assign(
+                    fact_tags=[k[2] for k in kept],
+                    cond_tags=[k[3] for k in kept])
 
-    return tagged.mapInPandas(gen, schema=TUPLES_SCHEMA)
+    return source.mapInPandas(gen, schema=TAGGED_SCHEMA)

@@ -10,16 +10,16 @@ from scikg_spark.pipeline.evaluate import (
     tag_metrics,
     tuple_match_scores,
 )
+from scikg_spark.pipeline.fused import extract_tuples
 from scikg_spark.pipeline.gold import gold_frames_from_blocks
 from scikg_spark.pipeline.stage1 import extract_statements
-from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
 
 @pytest.fixture(scope="module")
 def gold_tuples(spark, eval_blocks):
     pages, gold, _ = gold_frames_from_blocks(spark, eval_blocks)
     stmts = extract_statements(pages)
-    return decode_tuples(tag_statements(stmts, mode="gold", gold=gold)).cache()
+    return extract_tuples(stmts, tagger="gold", gold=gold).cache()
 
 
 class TestTupleScores:

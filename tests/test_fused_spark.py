@@ -1,9 +1,14 @@
 """Fused-path equivalence: the single-Python-pass extraction must emit the
-exact tuple multiset of the modular (chained) path."""
+exact tuple multiset of the pure-Python core chain over the collected
+statements — tagger (``rule_tag`` / ``ProbeTagger.predict_tags``), then
+``correct_tags``, then ``post_decode`` + ``serialize_tuple``."""
 
+from scikg_spark.core.correct import correct_tags
+from scikg_spark.core.decoder import post_decode
+from scikg_spark.core.serialize import serialize_tuple
+from scikg_spark.core.tagger import rule_tag
 from scikg_spark.pipeline.fused import extract_tuples, pages_to_tuples
 from scikg_spark.pipeline.stage1 import build_pages_from_documents, extract_statements
-from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -12,48 +17,68 @@ def _key(r):
     return (r.url, r.stmt_id, r.kind, r.tuple_idx, r.subj, r.pred, r.obj)
 
 
-def test_fused_equals_modular(spark):
+def _columns(rows):
+    return ([list(r.words) for r in rows], [list(r.postags) for r in rows],
+            [list(r.caps) for r in rows])
+
+
+def _reference(rows, tag_pairs, **flags):
+    """The core chain over collected statement rows and their tags, keyed
+    like :func:`_key`."""
+    out = []
+    for r, (ft, ct) in zip(rows, tag_pairs):
+        words = list(r.words)
+        if flags:
+            res = correct_tags(ft, ct, [w.lower() for w in words],
+                               list(r.postags), **flags)
+            if res is None:
+                continue
+            ft, ct = res
+        for kind, tags in (("f", ft), ("c", ct)):
+            for idx, rec in enumerate(post_decode(words, tags)):
+                out.append((r.url, r.stmt_id, kind, idx + 1, *serialize_tuple(rec)))
+    return sorted(out)
+
+
+def _rule_pairs(rows):
+    return [rule_tag(*cols) for cols in zip(*_columns(rows))]
+
+
+def test_fused_equals_core_chain(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(120)
     pages = build_pages_from_documents(docs).cache()
     stmts = extract_statements(pages).cache()
+    rows = stmts.collect()
 
-    modular = decode_tuples(tag_statements(stmts, mode="rule")).collect()
     fused_stage2 = extract_tuples(stmts).collect()
     fused_full = pages_to_tuples(pages).collect()
 
-    assert sorted(map(_key, modular)) == sorted(map(_key, fused_stage2))
-    assert sorted(map(_key, modular)) == sorted(map(_key, fused_full))
+    assert sorted(map(_key, fused_stage2)) == _reference(rows, _rule_pairs(rows))
+    assert sorted(map(_key, fused_stage2)) == sorted(map(_key, fused_full))
 
 
 def test_fused_with_corrections(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(120)
     pages = build_pages_from_documents(docs).cache()
     stmts = extract_statements(pages).cache()
+    rows = stmts.collect()
 
-    modular = decode_tuples(
-        tag_statements(stmts, mode="rule", use_tc=True, use_sh=True, use_del=True)
-    ).collect()
-    fused = extract_tuples(stmts, use_tc=True, use_sh=True, use_del=True).collect()
-    assert sorted(map(_key, modular)) == sorted(map(_key, fused))
+    flags = dict(use_tc=True, use_sh=True, use_del=True)
+    fused = extract_tuples(stmts, **flags).collect()
+    assert sorted(map(_key, fused)) == _reference(rows, _rule_pairs(rows), **flags)
     assert len(fused) < len(extract_tuples(stmts).collect())
 
 
-def test_fused_probe_equals_modular_probe(spark, tmp_path):
-    import numpy as np
-
+def test_fused_probe_equals_core_chain(spark, tmp_path):
     from scikg_spark.core.neural import ProbeTagger
-    from scikg_spark.core.tagger import rule_tag
     from scikg_spark.core.tags import COND_TAG2ID, FACT_TAG2ID
-    from scikg_spark.pipeline.fused import extract_tuples
 
     # tiny trained probe
     probe = ProbeTagger(seed=824)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
     stmts = extract_statements(build_pages_from_documents(docs)).cache()
     rows = stmts.collect()
-    w = [list(r["words"]) for r in rows]
-    p = [list(r["postags"]) for r in rows]
-    c = [list(r["caps"]) for r in rows]
+    w, p, c = _columns(rows)
     yf = [[FACT_TAG2ID[t] for t in rule_tag(a, b, d)[0]] for a, b, d in zip(w, p, c)]
     yc = [[COND_TAG2ID[t] for t in rule_tag(a, b, d)[1]] for a, b, d in zip(w, p, c)]
     for _ in range(4):
@@ -62,7 +87,6 @@ def test_fused_probe_equals_modular_probe(spark, tmp_path):
     probe.save(path)
 
     fused = extract_tuples(stmts, tagger="probe", weights_path=path).collect()
-    modular = decode_tuples(
-        tag_statements(stmts, mode="probe", weights_path=path)).collect()
-    assert sorted(map(_key, fused)) == sorted(map(_key, modular))
+    assert sorted(map(_key, fused)) == _reference(
+        rows, ProbeTagger.load(path).predict_tags(w, p, c))
     assert len(fused) > 0

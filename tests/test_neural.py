@@ -65,17 +65,18 @@ class TestEnsemble:
 @pytest.mark.usefixtures("spark")
 class TestSparkIntegration:
     def test_neural_mode_through_pipeline(self, spark):
+        from scikg_spark.pipeline.fused import extract_tuples
         from scikg_spark.pipeline.stage1 import (
             build_pages_from_documents, extract_statements)
-        from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
+        from scikg_spark.pipeline.stage2 import tag_statements
 
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(30)
         stmts = extract_statements(build_pages_from_documents(docs)).cache()
         tagged = tag_statements(stmts, mode="neural")
         assert tagged.count() == stmts.count()
         # decode never crashes on model output; rerun is identical
-        t1 = decode_tuples(tagged).collect()
-        t2 = decode_tuples(tag_statements(stmts, mode="neural")).collect()
+        t1 = extract_tuples(stmts, tagger="neural").collect()
+        t2 = extract_tuples(stmts, tagger="neural").collect()
         key = lambda r: (r.url, r.stmt_id, r.kind, r.tuple_idx, r.subj)
         assert sorted(map(key, t1)) == sorted(map(key, t2))
 

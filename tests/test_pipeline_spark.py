@@ -9,13 +9,15 @@ import pytest
 from scikg_spark.core.decoder import post_decode
 from scikg_spark.core.metrics import match_score
 from scikg_spark.core.serialize import serialize_tuple
+from scikg_spark.pipeline.fused import extract_tuples
 from scikg_spark.pipeline.gold import gold_frames_from_blocks
+from scikg_spark.pipeline.runner import run_pipeline
 from scikg_spark.pipeline.stage1 import (
     build_pages_from_documents,
     extract_statements,
     verify_extraction,
 )
-from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
+from scikg_spark.pipeline.stage2 import tag_statements
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,8 +26,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def gold_run(spark, eval_blocks):
     pages, gold, oracle = gold_frames_from_blocks(spark, eval_blocks)
     stmts = extract_statements(pages)
-    tagged = tag_statements(stmts, mode="gold", gold=gold)
-    tuples = decode_tuples(tagged).cache()
+    tuples = extract_tuples(stmts, tagger="gold", gold=gold).cache()
     rows = tuples.collect()
     return pages, oracle, rows
 
@@ -84,13 +85,13 @@ class TestRulePath:
         pages = build_pages_from_documents(docs).cache()
         assert verify_extraction(pages) == 0
         stmts = extract_statements(pages)
-        tuples = decode_tuples(tag_statements(stmts, mode="rule"))
+        tuples = extract_tuples(stmts)
         rows = tuples.collect()
         assert len(rows) > 0
         kinds = {r.kind for r in rows}
         assert kinds == {"f", "c"}
         # deterministic: rerun produces the identical multiset
-        rows2 = decode_tuples(tag_statements(stmts, mode="rule")).collect()
+        rows2 = extract_tuples(stmts).collect()
         key = lambda r: (r.url, r.stmt_id, r.kind, r.tuple_idx, r.subj, r.pred, r.obj)
         assert sorted(map(key, rows)) == sorted(map(key, rows2))
 
@@ -102,11 +103,50 @@ class TestRulePath:
         assert 0 < sh <= base  # SH drops statements longer than 15 tokens
 
 
+class TestGoldMode:
+    """Gold mode without the reference corpus: gold tags that are the rule
+    tagger's own must reproduce the rule path's tuples and tags exactly."""
+
+    @pytest.fixture(scope="class")
+    def corpus(self, spark):
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        pages = build_pages_from_documents(docs).localCheckpoint()
+        stmts = extract_statements(pages).localCheckpoint()
+        gold = tag_statements(stmts, mode="rule").localCheckpoint()
+        return pages, stmts, gold
+
+    @staticmethod
+    def _assert_same(got, want):
+        def rows(df):
+            return Counter(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                           for r in df.collect())
+
+        assert got.schema == want.schema
+        assert rows(got) == rows(want)
+
+    def test_gold_tuples_equal_rule_tuples(self, spark, corpus):
+        pages, stmts, gold = corpus
+        rule = extract_tuples(stmts)
+        self._assert_same(extract_tuples(stmts, tagger="gold", gold=gold), rule)
+        out = run_pipeline(spark, pages, tagger="gold", gold=gold)
+        self._assert_same(out["tuples"], rule)
+
+    def test_gold_corrections_equal_rule_corrections(self, corpus):
+        _, stmts, gold = corpus
+        flags = dict(use_tc=True, use_del=True)
+        self._assert_same(
+            extract_tuples(stmts, tagger="gold", gold=gold, **flags),
+            extract_tuples(stmts, **flags))
+        self._assert_same(
+            tag_statements(stmts, mode="gold", gold=gold, **flags),
+            tag_statements(stmts, mode="rule", **flags))
+
+
 class TestTrainCorpusGate:
     def test_train_triples_match_reference_decode(self, spark, train_blocks):
         pages, gold, oracle = gold_frames_from_blocks(spark, train_blocks)
         stmts = extract_statements(pages)
-        rows = decode_tuples(tag_statements(stmts, mode="gold", gold=gold)).collect()
+        rows = extract_tuples(stmts, tagger="gold", gold=gold).collect()
         got = Counter(
             (r.doc_id, r.stmt_id, r.kind, r.subj, r.pred, r.obj) for r in rows)
         want = Counter()

@@ -194,3 +194,46 @@ def test_kg_pagerank_driver_regime_job_count(spark):
         spark, "pin-pagerank", lambda: kg.kg_pagerank(spark, sf).toPandas())
     assert len(df) > 0
     assert n <= 5, n
+
+
+@pytest.fixture(scope="module")
+def stage2_inputs(spark, tmp_path_factory):
+    """Materialized statements (so stage 1's pass is not in the plan), a
+    gold frame of their rule tags and a tiny trained probe checkpoint."""
+    from scikg_spark.core.neural import ProbeTagger
+    from scikg_spark.pipeline.stage1 import (
+        build_pages_from_documents, extract_statements)
+    from scikg_spark.pipeline.stage2 import tag_statements
+
+    from conftest import TESTDATA
+
+    docs = spark.read.parquet(
+        os.path.join(TESTDATA, "sf0.001", "documents.parquet")).limit(20)
+    stmts = extract_statements(build_pages_from_documents(docs)).localCheckpoint()
+    gold = tag_statements(stmts, mode="rule").localCheckpoint()
+    probe = ProbeTagger(seed=1)
+    toy = ([["a", "b", "c"]], [["NN", "VBZ", "NN"]], [["B-C", "B-P", "B-C"]])
+    probe.train_step(*toy, [[1, 2, 3]], [[1, 2, 3]])
+    path = str(tmp_path_factory.mktemp("probe") / "probe.npz")
+    probe.save(path)
+    return stmts, {"gold": {"gold": gold}, "probe": {"weights_path": path}}
+
+
+@pytest.mark.parametrize("mode,flags", [
+    ("rule", {}), ("probe", {}), ("neural", {}), ("gold", {}),
+    ("rule", {"use_tc": True, "use_del": True}),
+], ids=["rule", "probe", "neural", "gold", "rule-tc-del"])
+def test_stage2_is_one_python_pass(stage2_inputs, mode, flags):
+    """Every tagger mode tags, corrects and decodes in one mapInPandas, and
+    tag_statements corrects inside its one tagging pass: a chained second
+    pass would run two Python workers per task slot (see fused.py)."""
+    from scikg_spark.pipeline.fused import extract_tuples
+    from scikg_spark.pipeline.stage2 import tag_statements
+
+    stmts, mode_args = stage2_inputs
+    kw = mode_args.get(mode, {})
+    tuples = extract_tuples(stmts, tagger=mode, **kw, **flags)
+    assert _n_ops(_formatted(tuples), "MapInPandas") == 1
+    tagged = tag_statements(stmts, mode=mode, **kw,
+                            **(flags or {"use_tc": True, "use_del": True}))
+    assert _n_ops(_formatted(tagged), "MapInPandas") == 1

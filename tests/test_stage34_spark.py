@@ -51,12 +51,12 @@ class TestLinking:
         assert comp == {1: 1, 2: 1, 3: 1, 4: 4}
 
     def test_link_entities_end_to_end(self, spark):
+        from scikg_spark.pipeline.fused import extract_tuples
         from scikg_spark.pipeline.stage1 import extract_statements
-        from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(80)
-        tuples = decode_tuples(tag_statements(
-            extract_statements(build_pages_from_documents(docs)), mode="rule"))
+        tuples = extract_tuples(
+            extract_statements(build_pages_from_documents(docs)))
         nodes, phrase_map = link_entities(tuples)
         n_phrases = mention_phrases(tuples).count()
         assert phrase_map.count() == n_phrases  # every phrase mapped
@@ -70,13 +70,12 @@ class TestLinking:
 @pytest.fixture(scope="module")
 def sf_tuples(spark):
     """Tuples of the whole sf0.001 corpus, materialized once."""
+    from scikg_spark.pipeline.fused import extract_tuples
     from scikg_spark.pipeline.stage1 import extract_statements
-    from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    return decode_tuples(tag_statements(
-        extract_statements(build_pages_from_documents(docs)),
-        mode="rule")).localCheckpoint()
+    return extract_tuples(
+        extract_statements(build_pages_from_documents(docs))).localCheckpoint()
 
 
 def _mention_tuples(spark, phrases):

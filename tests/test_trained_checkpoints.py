@@ -59,16 +59,15 @@ def test_ensemble_checkpoint_at_least_as_good_as_single(fresh_eval):
 
 
 def test_trained_ensemble_flows_through_spark(spark):
+    from scikg_spark.pipeline.fused import extract_tuples
     from scikg_spark.pipeline.stage1 import (
         build_pages_from_documents, extract_statements)
-    from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").limit(20)
     stmts = extract_statements(build_pages_from_documents(docs))
-    neural = decode_tuples(tag_statements(
-        stmts, mode="ensemble", weights_path=ENSEMBLE))
-    rule = decode_tuples(tag_statements(stmts, mode="rule"))
+    neural = extract_tuples(stmts, tagger="ensemble", weights_path=ENSEMBLE)
+    rule = extract_tuples(stmts)
     # trained-on-rule-teacher ensemble reproduces the teacher's tuples
     n_match = neural.select("doc_id", "stmt_id", "kind", "subj", "pred", "obj") \
         .intersect(rule.select("doc_id", "stmt_id", "kind", "subj", "pred", "obj")) \

@@ -163,15 +163,22 @@ class TestProbeTagger:
     def test_probe_mode_requires_weights(self, spark):
         import pytest
 
+        from scikg_spark.pipeline.fused import extract_tuples
+        from scikg_spark.pipeline.runner import run_pipeline
         from scikg_spark.pipeline.stage1 import (
             build_pages_from_documents, extract_statements)
         from scikg_spark.pipeline.stage2 import tag_statements
 
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet").limit(5)
-        stmts = extract_statements(build_pages_from_documents(docs))
+        pages = build_pages_from_documents(docs)
+        stmts = extract_statements(pages)
         with pytest.raises(ValueError, match="probe mode"):
             tag_statements(stmts, mode="probe")
+        with pytest.raises(ValueError, match="probe mode"):
+            extract_tuples(stmts, tagger="probe")
+        with pytest.raises(ValueError, match="probe mode"):
+            run_pipeline(spark, pages, tagger="probe")
 
 
 class TestCheckpointConfigRoundtrip:
