@@ -5,8 +5,13 @@ clusters)::
 
     python -m scikg_spark.jobs.package      # builds dist/scikg_spark.zip
     spark-submit --py-files dist/scikg_spark.zip \
+        --driver-java-options "$(python -c 'from scikg_spark.pipeline.session import JVM_OPTIONS; print(JVM_OPTIONS)')" \
         scikg_spark/jobs/run_pipeline.py \
         --pages <iceberg-or-parquet-path> --out /warehouse/scikg --tagger rule
+
+spark-submit starts the driver JVM before ``get_spark`` runs, so the
+session's ``spark.driver.extraJavaOptions`` comes too late there; pass
+``session.JVM_OPTIONS`` (GC and JIT policy) as ``--driver-java-options``.
 
 Local sandbox usage::
 

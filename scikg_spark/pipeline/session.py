@@ -26,6 +26,29 @@ def _ensure_package_visible_to_workers():
         os.environ.setdefault(var, "1")
 
 
+# Driver JVM flags. get_spark passes them as spark.driver.extraJavaOptions,
+# which acts only when get_spark launches the JVM: it is inert on
+# getOrCreate reuse, and under spark-submit the flags go on the command line
+# as --driver-java-options.
+# - ParallelGC: a throughput batch engine; it beat G1 by ~8% on the wide
+#   Arrow-pass workload.
+# - Tier-4 (C2) thresholds at 10x the JDK 17 defaults (5000, 600, 15000,
+#   40000). Each job runs in a cold JVM. Split by JVM thread (4-core host),
+#   a cold kgbench crawl_catchup op spent 36-44 of its 86-105 CPU-s in the
+#   C2 compiler threads and 6-8 in C1. C1 keeps its thresholds; C2 now
+#   compiles only code that stays hot ten times longer, which cut C2 to
+#   ~14 CPU-s and the op to ~74. C1-only (TieredStopAtLevel=1) saved more
+#   cold CPU but made warm ops 15-30% slower in wall time, so it was
+#   rejected.
+JVM_OPTIONS = " ".join((
+    "-XX:+UseParallelGC",
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+))
+
+
 def get_spark(app_name="scikg", cores=None, shuffle_partitions=None,
               arrow_batch=512, extra_conf=None) -> SparkSession:
     _ensure_package_visible_to_workers()
@@ -70,11 +93,7 @@ def get_spark(app_name="scikg", cores=None, shuffle_partitions=None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SCIKG_DRIVER_MEM", "8g"))
-        # throughput-oriented batch engine: ParallelGC beats G1 by ~8% on the
-        # wide Arrow-pass workload (measured; G1 optimizes pauses we don't
-        # care about). Only applies at JVM launch — inert on getOrCreate
-        # reuse, like driver.memory above.
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        .config("spark.driver.extraJavaOptions", JVM_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

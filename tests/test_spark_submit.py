@@ -16,6 +16,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_spark_submit_py_files_runs_pipeline(tmp_path):
     from scikg_spark.jobs.package import build_zip
+    from scikg_spark.pipeline.session import JVM_OPTIONS
 
     zip_path = build_zip()
     script = tmp_path / "run_pipeline.py"
@@ -26,6 +27,7 @@ def test_spark_submit_py_files_runs_pipeline(tmp_path):
     env["SCIKG_DRIVER_MEM"] = "4g"
     proc = subprocess.run(
         ["spark-submit", "--master", "local[2]", "--py-files", zip_path,
+         "--driver-java-options", JVM_OPTIONS,
          str(script), "--documents", "/root/testdata/sf0.001",
          "--out", str(out), "--cores", "2"],
         cwd=str(tmp_path), env=env, capture_output=True, text=True,

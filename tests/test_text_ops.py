@@ -166,17 +166,23 @@ def test_new_ops_handle_empty_corpus(spark, tmp_path):
         assert len(df.columns) >= 2, fn.__name__
 
 
-def test_contamination_eval_planted(spark, tmp_path):
-    """Plant an 8-gram from the REAL eval corpus (stmts-eval.tsv) in one
-    corpus doc; q_contamination_eval must flag exactly that doc."""
-    from scikg_spark.core.parsing import parse_stmt_blocks
-    from scikg_spark.ops.dedup import _EVAL_TSV, q_contamination_eval
+def test_contamination_eval_planted(spark, tmp_path, monkeypatch):
+    """Plant an 8-gram of a benchmark statement in one corpus doc;
+    q_contamination_eval must flag exactly that doc. The benchmark is a small
+    eval TSV in the reference's statement-block format, turned into a gram
+    table by the real ``eval_gram_table``."""
+    from scikg_spark.ops import dedup
 
-    with open(_EVAL_TSV) as fh:
-        for block in parse_stmt_blocks(fh):
-            if len(block["words"]) >= 8:
-                planted = " ".join(list(block["words"])[:8])
-                break
+    words = ("the mutant protein binds tightly to the receptor "
+             "in treated mouse liver cells").split()
+    tsv = tmp_path / "stmts-eval.tsv"
+    tsv.write_text(
+        "===== d1 stmt1 =====\nWORD\t" + "\t".join(words) + "\n"
+        "===== d2 stmt1 =====\nWORD\t" + "\t".join(words[::-1]) + "\n")
+    grams = dedup.eval_gram_table(str(tsv), str(tmp_path / "eval_grams"))
+    monkeypatch.setattr(dedup, "eval_gram_table", lambda: grams)
+
+    planted = " ".join(words[:8])
     texts = {
         0: "lead in " + planted + " trailing words here",   # contaminated
         1: " ".join(f"z{i}" for i in range(12)),             # clean
@@ -187,7 +193,8 @@ def test_contamination_eval_planted(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{out}/documents.parquet")
 
-    got = {r["doc_id"]: r for r in q_contamination_eval(spark, out).collect()}
+    got = {r["doc_id"]: r
+           for r in dedup.q_contamination_eval(spark, out).collect()}
     assert set(got) == {0}
     assert got[0]["n_shared_grams"] >= 1
     assert got[0]["n_bench_stmts"] >= 1
