@@ -14,4 +14,8 @@ Layout:
                         text quality) over document/embedding tables.
 """
 
+from scikg_spark import zipcache
+
+zipcache.install()
+
 __version__ = "0.1.0"

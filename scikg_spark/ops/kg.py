@@ -364,12 +364,13 @@ def materialize_kg_tables(spark, sf_dir: str) -> str:
 def materialize_kg_production(spark, sf_dir: str, warehouse: str,
                               doc_buckets: int = 32) -> dict:
     """Production-shaped stage-boundary snapshots: tuples + edges written
-    through :class:`SnapshotCatalog` (atomic one-job commit, table-level
-    ``(rows, checksum)`` fold, schema-carrying manifest, append snapshots,
-    time travel, expiry) partitioned by ``(kind, doc_bucket)`` — ``kind``
-    (f/c) for consumer-side partition pruning, and a ``doc_id`` hash band so
-    files stay bounded and writes parallelize at 10^12 docs (raise
-    ``doc_buckets`` with the corpus; 32 is sf-scale). This is the snapshot
+    through :class:`SnapshotCatalog` (atomic commit of one file per
+    partition value, table-level ``(rows, checksum)`` fold, schema-carrying
+    manifest, append snapshots, time travel, expiry) partitioned by
+    ``(kind, doc_bucket)`` — ``kind`` (f/c) for consumer-side partition
+    pruning, and a ``doc_id`` hash band so files stay bounded and writes
+    parallelize at 10^12 docs (raise ``doc_buckets`` with the corpus; 32 is
+    sf-scale). This is the snapshot
     shape the module docstring's "stage-boundary snapshots in the catalog"
     story refers to; the coalesce(1) path above serves only the DuckDB duel.
     Returns {table: manifest}. A plan test pins that a kind/bucket filter on

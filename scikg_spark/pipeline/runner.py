@@ -40,12 +40,24 @@ def _commit(catalog, name, df, append=False):
     t0 = time.time()
     manifest = catalog.write(df, name, partition_by=_PARTITION_BY.get(name, ()),
                              append=append)
-    record = {"resumed": False, "rows": manifest["rows"]}
+    record = {"resumed": False, "rows": manifest["rows"],
+              "added_files": manifest["added_files"]}
     if append:
         record["added_rows"] = manifest["added_rows"]
     record["wall_ms"] = int((time.time() - t0) * 1000)
     catalog.write_metrics(name, record)
     return catalog.read(name), manifest
+
+
+def _link(catalog, tuples, use_lsh):
+    """Stage 3 over ``tuples``; with a catalog, its wall time goes to
+    ``_metrics.jsonl`` as the ``link_entities`` record."""
+    t0 = time.time()
+    linked = link_entities(tuples, use_lsh=use_lsh)
+    if catalog is not None:
+        catalog.write_metrics("link_entities", {
+            "resumed": False, "wall_ms": int((time.time() - t0) * 1000)})
+    return linked
 
 
 def run_pipeline(
@@ -95,7 +107,7 @@ def run_pipeline(
         stage("entity_nodes", None)
         phrase_map, map_manifest = stage("entity_map", None)
     else:
-        linked_nodes, linked_map = link_entities(tuples, use_lsh=use_lsh)
+        linked_nodes, linked_map = _link(catalog, tuples, use_lsh)
         stage("entity_nodes", lambda: linked_nodes, force=True)
         phrase_map, map_manifest = stage(
             "entity_map", lambda: linked_map, force=True)
@@ -164,7 +176,7 @@ def run_pipeline_incremental(
         counts[f"new_{name}"] = manifest["added_rows"]
 
     tuples = out["tuples"]
-    linked_nodes, linked_map = link_entities(tuples, use_lsh=use_lsh)
+    linked_nodes, linked_map = _link(catalog, tuples, use_lsh)
     out["entity_nodes"], _ = _commit(catalog, "entity_nodes", linked_nodes)
     out["entity_map"], map_manifest = _commit(catalog, "entity_map", linked_map)
     out["edges"], _ = _commit(

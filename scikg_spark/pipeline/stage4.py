@@ -11,9 +11,17 @@ same contract on plain parquet directories:
     new snapshot last, under a per-table lock and only if it still names
     the snapshot the writer started from (readers always see a complete
     snapshot; a racing writer fails instead of overwriting);
-  * one Spark job per commit: the write observes the table-level fold
-    ``(rows, checksum)`` (xor of row hashes) in its own job, and the
-    manifest carries the committed schema, so reads run no job;
+  * one Spark job per unpartitioned commit: the write observes the
+    table-level fold ``(rows, checksum)`` (xor of row hashes) in its own
+    job, and the manifest carries the committed schema, so reads run no
+    job;
+  * partitioned commits hash-distributed by their partition columns, as
+    Iceberg's Spark writer does by default: a rebalance stage ahead of the
+    write gives each partition value one writer task, so a commit writes
+    one file per value (split only past the AQE advisory size) instead of
+    one per write task and value. That stage is a second job, and it costs
+    less than the files it saves; the manifest's ``added_files`` counts
+    what a commit wrote;
   * append snapshots: like an Iceberg append, a snapshot's manifest lists
     its parent's data directories plus its own, so an append writes only
     the new rows and its fold is the parent's fold plus theirs;
@@ -81,6 +89,12 @@ def _dump(path: str, obj: dict):
     with open(path + ".tmp", "w") as f:
         json.dump(obj, f, indent=1)
     os.replace(path + ".tmp", path)
+
+
+def _count_files(path: str) -> int:
+    """The parquet data files under ``path``."""
+    return sum(name.endswith(".parquet")
+               for _, _, names in os.walk(path) for name in names)
 
 
 def _load(path: str) -> dict:
@@ -167,11 +181,13 @@ class SnapshotCatalog:
 
     def write(self, df: DataFrame, table: str, partition_by=(),
               append: bool = False) -> dict:
-        """Commit ``df`` as the table's next snapshot in one Spark job. With
-        ``append`` the snapshot is the current one plus ``df``'s rows: only
-        those are written, and the manifest inherits the parent's data
-        directories. Raises :class:`CommitConflict` when another commit
-        moved the table meanwhile."""
+        """Commit ``df`` as the table's next snapshot: one Spark job, plus
+        a rebalance stage by ``partition_by`` when the table is partitioned
+        (so the commit writes one file per partition value, not one per task
+        and value). With ``append`` the snapshot is the current one plus
+        ``df``'s rows: only those are written, and the manifest inherits the
+        parent's data directories. Raises :class:`CommitConflict` when
+        another commit moved the table meanwhile."""
         t0 = time.time()
         parent = self.manifest(table)
         if append and parent:  # line the columns up by name, as unionByName
@@ -188,8 +204,14 @@ class SnapshotCatalog:
             base = parent
         snap_id = self._claim_snapshot_dir(table)
         own = f"snap-{snap_id}"
+        own_dir = os.path.join(self._table_dir(table), own)
         try:
             obs = Observation()
+            if partition_by:
+                # one writer task per partition value. A rebalance, not a
+                # repartition: AQE may split a skewed rebalance partition at
+                # the advisory size, but never a repartition's
+                df = df.hint("rebalance", *partition_by)
             # the observe stays the last operator before the write: it runs in
             # the write's result stage, whose accumulator updates Spark
             # applies once per partition
@@ -197,7 +219,7 @@ class SnapshotCatalog:
                       .write.mode("append"))
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            writer.parquet(os.path.join(self._table_dir(table), own))
+            writer.parquet(own_dir)
             fold = obs.get
             manifest = {
                 "table": table,
@@ -205,6 +227,7 @@ class SnapshotCatalog:
                 "status": "committed",
                 "rows": base["rows"] + fold["rows"],
                 "added_rows": fold["rows"],
+                "added_files": _count_files(own_dir),
                 "checksum": base["checksum"] ^ (fold["checksum"] or 0),
                 "partition_by": partition_by,
                 "schema": schema,
@@ -217,8 +240,7 @@ class SnapshotCatalog:
             # no manifest names the claimed directory until its history
             # manifest exists; before that, the data is this writer's alone
             if not os.path.exists(self._history_path(table, snap_id)):
-                shutil.rmtree(os.path.join(self._table_dir(table), own),
-                              ignore_errors=True)
+                shutil.rmtree(own_dir, ignore_errors=True)
             raise
         return manifest
 

@@ -1,7 +1,6 @@
-"""Multimodal plumbing + Structured Streaming tests."""
+"""Multimodal plumbing tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from scikg_spark.ops.multimodal import (
     build_media_table,
@@ -45,76 +44,3 @@ class TestMultimodal:
         a = extract_features(build_media_table(docs)).orderBy("doc_id", "kind").collect()
         b = extract_features(build_media_table(docs)).orderBy("doc_id", "kind").collect()
         assert a == b
-
-
-class TestStreaming:
-    def test_stream_matches_batch(self, spark, tmp_path):
-        from scikg_spark.pipeline.fused import pages_to_tuples
-        from scikg_spark.pipeline.stage1 import build_pages_from_documents
-        from scikg_spark.pipeline.streaming import stream_pages_to_tuples
-
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
-        pages = build_pages_from_documents(docs).cache()
-        pages_dir = str(tmp_path / "pages")
-        # two file drops, as a stream source would see them
-        pages.filter(F.col("url") < "https://example.org/doc/3").write.parquet(
-            pages_dir)
-        pages.filter(F.col("url") >= "https://example.org/doc/3").write.mode(
-            "append").parquet(pages_dir)
-
-        out_dir = str(tmp_path / "tuples")
-        q = stream_pages_to_tuples(
-            spark, pages_dir, out_dir, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-
-        got = spark.read.parquet(out_dir)
-        want = pages_to_tuples(spark.read.parquet(pages_dir))
-        key = lambda r: (r.url, r.stmt_id, r.kind, r.tuple_idx, r.subj, r.pred, r.obj)
-        assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
-
-    def test_windowed_event_counts(self, spark, tmp_path):
-        from scikg_spark.pipeline.streaming import stream_event_counts
-
-        # file-stream sources require a directory, not a bare parquet file
-        events_dir = str(tmp_path / "events")
-        spark.read.parquet(f"{SF_DIR}/events.parquet").write.parquet(events_dir)
-
-        out_dir = str(tmp_path / "agg")
-        q = stream_event_counts(
-            spark, events_dir, out_dir, str(tmp_path / "ckpt2"))
-        q.awaitTermination(120)
-        got = spark.read.parquet(out_dir)
-        batch = (
-            spark.read.parquet(f"{SF_DIR}/events.parquet")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-        )
-        # append mode emits only windows older than the watermark; every
-        # emitted row must match the batch truth
-        truth = {(r.w.start, r.event_type): r.n for r in batch.collect()}
-        for r in got.collect():
-            assert truth[(r.window_start, r.event_type)] == r.n
-
-
-class TestStatefulStreaming:
-    def test_cross_batch_dedup(self, spark, tmp_path):
-        from scikg_spark.pipeline.streaming import stream_dedup_documents
-
-        docs_dir = str(tmp_path / "docs")
-        rows1 = [(1, "alpha beta", "en", "s", 10), (2, "gamma", "en", "s", 5)]
-        rows2 = [(3, "alpha beta", "en", "s", 10), (4, "delta", "en", "s", 5)]
-        schema = "doc_id long, text string, lang string, source string, n_chars long"
-        spark.createDataFrame(rows1, schema).write.parquet(docs_dir)
-
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ck")
-        q = stream_dedup_documents(spark, docs_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-
-        # second drop contains a cross-batch duplicate of 'alpha beta'
-        spark.createDataFrame(rows2, schema).write.mode("append").parquet(docs_dir)
-        q = stream_dedup_documents(spark, docs_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-
-        got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-        assert got == {1, 2, 4}  # doc 3 deduped against state from batch 1

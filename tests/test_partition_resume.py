@@ -2,6 +2,7 @@
 runner: a killed or retried job ends content-equal to a clean full run."""
 
 import inspect
+import os
 from collections import Counter
 
 from pyspark.sql import functions as F
@@ -151,16 +152,26 @@ def test_incremental_rerun_is_idempotent(spark, tmp_path):
     assert {t: cat.manifest(t)["rows"]
             for t in ("statements", "tuples", "edges")} == rows_after
 
-    # each catch-up commit leaves one metrics record, appends with the
-    # rows they added
+    # each catch-up commit leaves one metrics record with the parquet files
+    # it wrote, appends with the rows they added, and linking one record
+    # of its own
     import json
     with open(str(tmp_path / "wh" / "_metrics.jsonl")) as fh:
         records = [json.loads(line) for line in fh]
-    tables = ["statements", "tuples", "entity_nodes", "entity_map", "edges"]
-    assert [r["stage"] for r in records] == tables * 3
+    stages = ["statements", "tuples", "link_entities", "entity_nodes",
+              "entity_map", "edges"]
+    assert [r["stage"] for r in records] == stages * 3
     for run, report in ((1, first), (2, again)):
-        for r in records[5 * run:5 * run + 5]:
+        for r in records[6 * run:6 * run + 6]:
             assert not r["resumed"] and r["wall_ms"] >= 0, r
+            if r["stage"] == "link_entities":
+                assert set(r) == {"stage", "resumed", "wall_ms"}, r
+                continue
+            snap = cat.history(r["stage"])[run]
+            assert r["added_files"] == snap["added_files"] == sum(
+                name.endswith(".parquet") for _, _, names in
+                os.walk(tmp_path / "wh" / r["stage"] / snap["dirs"][-1])
+                for name in names), r
             if r["stage"] in ("statements", "tuples"):
                 assert r["added_rows"] == report[f"new_{r['stage']}"], r
             else:

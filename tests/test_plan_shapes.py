@@ -237,3 +237,36 @@ def test_stage2_is_one_python_pass(stage2_inputs, mode, flags):
     tagged = tag_statements(stmts, mode=mode, **kw,
                             **(flags or {"use_tc": True, "use_del": True}))
     assert _n_ops(_formatted(tagged), "MapInPandas") == 1
+
+
+def test_partitioned_write_rebalances_by_partition_columns(spark, tmp_path,
+                                                           monkeypatch):
+    """A partitioned commit hash-distributes by its partition columns
+    (RebalancePartitions, which AQE can coalesce and split by size) right
+    under the observe; an unpartitioned commit adds no exchange. A
+    ``repartition`` or ``coalesce`` in its place fails here."""
+    from pyspark.sql import DataFrameWriter, functions as F
+
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        written.append(self._df._jdf.queryExecution().analyzed().toString())
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    df = spark.range(40).select(
+        "id", F.when(F.col("id") % 2 == 0, "f").otherwise("c").alias("kind"),
+        (F.col("id") % 4).cast("int").alias("url_bucket"))
+    cat.write(df, "edges", partition_by=("kind", "url_bucket"))
+    cat.write(df, "flat")
+    partitioned, flat = written
+    top = partitioned.splitlines()
+    assert top[0].startswith("CollectMetrics"), partitioned
+    assert re.match(r"\W*RebalancePartitions \[kind#\d+, url_bucket#\d+\]",
+                    top[1]), partitioned
+    assert "Repartition" not in partitioned, partitioned
+    assert "Rebalance" not in flat and "Repartition" not in flat, flat
