@@ -15,7 +15,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scikg_spark.pipeline.fused import extract_tuples
-from scikg_spark.pipeline.stage1 import extract_statements
+from scikg_spark.pipeline.stage1 import _page_html, extract_statements
 from scikg_spark.pipeline.stage3 import attach_entities, link_entities
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
 
@@ -131,7 +131,9 @@ def run_pipeline_incremental(
     — the "next crawl snapshot arrived" production shape.
 
     Cost model at 10^12 docs: the Arrow extraction passes (stages 1-2)
-    dominate, and they are per-document — so they run ONLY on the delta.
+    dominate, and they are per-document — so they run ONLY on the delta,
+    each once: stage 2 reads the delta pages' statements from the committed
+    ``statements`` snapshot rather than re-running stage 1.
     ``statements`` and ``tuples`` commit append snapshots that write only
     the delta's rows (history kept: ``incremental_read`` hands downstream
     consumers exactly the delta).
@@ -150,15 +152,10 @@ def run_pipeline_incremental(
     """
     corrections = corrections or {}
 
-    new_statements = extract_statements(new_pages, lang=lang)
-    new_tuples = extract_tuples(
-        new_statements, tagger=tagger, gold=gold, weights_path=weights_path,
-        **corrections)
-
     out: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}
-    for name, delta in (("statements", new_statements),
-                        ("tuples", new_tuples)):
+
+    def append(name, delta):
         if catalog.is_complete(name):
             # idempotent catch-up: a retry never re-appends rows a table
             # already holds — each table's delta is anti-joined against THAT
@@ -174,6 +171,14 @@ def run_pipeline_incremental(
         # newest snapshot in the history)
         out[name], manifest = _commit(catalog, name, delta, append=True)
         counts[f"new_{name}"] = manifest["added_rows"]
+
+    append("statements", extract_statements(new_pages, lang=lang))
+    # stage 2 decodes the delta pages' COMMITTED statements, so stage 1 runs
+    # once per page
+    urls = _page_html(new_pages, lang).select("url").distinct()
+    append("tuples", extract_tuples(
+        out["statements"].join(F.broadcast(urls), "url", "left_semi"),
+        tagger=tagger, gold=gold, weights_path=weights_path, **corrections))
 
     tuples = out["tuples"]
     linked_nodes, linked_map = _link(catalog, tuples, use_lsh)

@@ -9,6 +9,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from scikg_spark.pipeline import appcds
+
 
 def _ensure_package_visible_to_workers():
     """Python workers don't inherit driver ``sys.path`` edits; make the repo
@@ -40,12 +42,18 @@ def _ensure_package_visible_to_workers():
 #   ~14 CPU-s and the op to ~74. C1-only (TieredStopAtLevel=1) saved more
 #   cold CPU but made warm ops 15-30% slower in wall time, so it was
 #   rejected.
+# - Unified-logging warnings go to stderr, not the JVM's default stdout: the
+#   CLIs and kgbench parse stdout, and a run that dumps its AppCDS archive
+#   (pipeline/appcds.py) prints hundreds of [warning][cds] lines.
+# get_spark appends the AppCDS flags after these.
 JVM_OPTIONS = " ".join((
     "-XX:+UseParallelGC",
     "-XX:Tier4InvocationThreshold=50000",
     "-XX:Tier4MinInvocationThreshold=6000",
     "-XX:Tier4CompileThreshold=150000",
     "-XX:Tier4BackEdgeThreshold=400000",
+    "-Xlog:disable",
+    "-Xlog:all=warning:stderr",
 ))
 
 
@@ -54,6 +62,8 @@ def get_spark(app_name="scikg", cores=None, shuffle_partitions=None,
     _ensure_package_visible_to_workers()
     cores = int(cores or os.environ.get("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 4)
     shuffle_partitions = int(shuffle_partitions or max(cores, 8))
+    memory = os.environ.get("SCIKG_DRIVER_MEM", "8g")
+    java_options, dump = appcds.java_options(JVM_OPTIONS, memory)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -92,14 +102,17 @@ def get_spark(app_name="scikg", cores=None, shuffle_partitions=None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SCIKG_DRIVER_MEM", "8g"))
-        .config("spark.driver.extraJavaOptions", JVM_OPTIONS)
+        .config("spark.driver.memory", memory)
+        .config("spark.driver.extraJavaOptions", java_options)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if dump:
+        appcds.record_dump(spark, dump)
+    return spark
 
 
 def parallelize_scan(df):

@@ -25,6 +25,7 @@ def test_spark_submit_py_files_runs_pipeline(tmp_path):
     out = tmp_path / "warehouse"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SCIKG_DRIVER_MEM"] = "4g"
+    env["XDG_CACHE_HOME"] = str(tmp_path / "xdg")
     proc = subprocess.run(
         ["spark-submit", "--master", "local[2]", "--py-files", zip_path,
          "--driver-java-options", JVM_OPTIONS,

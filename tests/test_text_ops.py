@@ -327,7 +327,7 @@ def test_group_sample_topk_fixed_size_and_deterministic(spark):
         assert picks == list(range(1, min(25, s["count"]) + 1))
 
 
-def test_ops_import_is_io_free_and_survives_missing_reference():
+def test_ops_import_is_io_free_and_survives_missing_reference(tmp_path):
     """ADVICE r5 (medium): importing the ops modules must neither stat the
     reference checkout nor write into checkpoints/ (the contamination-eval
     mirror renders lazily via render_oracle); with the eval TSV env-pointed
@@ -340,7 +340,8 @@ def test_ops_import_is_io_free_and_survives_missing_reference():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     fp = os.path.join(repo, "checkpoints", "eval_grams", "FINGERPRINT")
     before = os.stat(fp).st_mtime_ns
-    env = dict(os.environ, SPARK_GRAFT_EVAL_TSV="/nonexistent/stmts.tsv")
+    env = dict(os.environ, SPARK_GRAFT_EVAL_TSV="/nonexistent/stmts.tsv",
+               XDG_CACHE_HOME=str(tmp_path))
     env.pop("PYSPARK_GATEWAY_PORT", None)
     env.pop("PYSPARK_GATEWAY_SECRET", None)
     code = (
