@@ -279,6 +279,77 @@ def test_kg_triangle_count_semantics(spark):
     assert set(df["entity_id"]) <= nodes
 
 
+def test_kg_triangle_count_regimes_agree(spark, monkeypatch):
+    """The driver regime of kg_triangle_count and the distributed one
+    (forced by DRIVER_PAIRS = 0) give the same rows and schema: on sf0.001,
+    on a hub graph whose degrees exceed a small max_adj (so the md5-order
+    sample itself is compared), and over an empty pair set."""
+    from pyspark.sql import functions as F
+
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    sf = os.path.join(TESTDATA, "sf0.001")
+    calls = []
+    driver_counts = kg._driver_triangle_counts
+    monkeypatch.setattr(kg, "_driver_triangle_counts",
+                        lambda *a: calls.append(1) or driver_counts(*a))
+
+    def counts(**kw):
+        df = kg.kg_triangle_count(spark, sf, top_k=100_000, **kw)
+        return df.schema, sorted(map(tuple, df.collect()))
+
+    def both(**kw):
+        calls.clear()
+        driver = counts(**kw)
+        assert calls, "the pair list is driver-sized"
+        with monkeypatch.context() as m:
+            m.setattr(kg, "DRIVER_PAIRS", 0)
+            distributed = counts(**kw)
+        assert len(calls) == 1
+        assert driver == distributed
+        return driver
+
+    assert len(both()[1]) > 50
+    materialized = kg._materialized
+
+    # hubs 0 and 1 see 40 neighbors each, which close triangles among
+    # themselves; the hubs' and most ring vertices' neighbor lists are
+    # longer than max_adj = 6
+    hub = [(h, v) for h in (0, 1) for v in range(2, 42)]
+    ring = [(v, v + d) for v in range(2, 42) for d in (1, 2, 3, 5, 8, 13, 21)
+            if v + d < 42]
+    edges = spark.createDataFrame(
+        hub + [(0, 1)] + ring, "subj_entity long, obj_entity long")
+    monkeypatch.setattr(kg, "_materialized", lambda *a: edges)
+    _, full = both(max_adj=10_000)
+    _, capped = both(max_adj=6)
+    assert capped and capped != full
+
+    monkeypatch.setattr(kg, "_materialized", lambda *a: materialized(*a)
+                        .filter(F.lit(False)))
+    schema, rows = both()
+    assert rows == []
+    assert (schema.simpleString()
+            == "struct<entity_id:bigint,n_triangles:bigint,rank:bigint>")
+
+
+@pytest.mark.parametrize("table", ["tuples", "edges", "nodes", "nodes_syn"])
+def test_snapshot_footer_schema_matches_spark_inference(spark, table):
+    """A materialized table is read with the schema of its parquet footer
+    (no schema-inference job); that schema must be the one Spark's own
+    inference gives, so a type drift between the two readers fails here."""
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    out = kg.materialize_kg_tables(spark, os.path.join(TESTDATA, "sf0.001"))
+    path = os.path.join(out, table)
+    assert (kg._read_snapshot(spark, path).schema
+            == spark.read.parquet(path).schema)
+
+
 def test_kg_fact_conditions_pairs_facts_with_their_conditions(spark):
     """Every output row pairs a fact pattern with a condition stated in the
     SAME statement; totals reconcile with the per-statement cross product."""

@@ -183,7 +183,7 @@ def test_link_entities_driver_regime_job_count(spark):
 def test_kg_pagerank_driver_regime_job_count(spark):
     """PageRank over a driver-sized pair list: one bounded collect, the
     iterations in Python, and the ranking tail over a local relation — at
-    most 5 jobs for the whole query (36 with the iterations in Spark)."""
+    most 3 jobs for the whole query (36 with the iterations in Spark)."""
     from scikg_spark.ops import kg
 
     from conftest import TESTDATA
@@ -193,7 +193,40 @@ def test_kg_pagerank_driver_regime_job_count(spark):
     df, n = _jobs_in_group(
         spark, "pin-pagerank", lambda: kg.kg_pagerank(spark, sf).toPandas())
     assert len(df) > 0
-    assert n <= 5, n
+    assert n <= 3, n
+
+
+def test_kg_triangle_count_driver_regime_job_count(spark):
+    """Triangle counting over a driver-sized pair list: one bounded collect
+    (the distinct's shuffle stage and the collect), then counting and
+    ranking in Python — at most 3 jobs for the whole query."""
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    sf = os.path.join(TESTDATA, "sf0.001")
+    kg.materialize_kg_tables(spark, sf)
+    df, n = _jobs_in_group(
+        spark, "pin-triangles",
+        lambda: kg.kg_triangle_count(spark, sf).toPandas())
+    assert len(df) > 0
+    assert n <= 3, n
+
+
+@pytest.mark.parametrize("table", ["tuples", "edges", "nodes", "nodes_syn"])
+def test_materialized_read_runs_no_job(spark, table):
+    """A materialized table is read with its footer's schema: planning the
+    read runs no schema-inference job."""
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    sf = os.path.join(TESTDATA, "sf0.001")
+    kg.materialize_kg_tables(spark, sf)
+    df, n = _jobs_in_group(spark, f"pin-read-{table}",
+                           lambda: kg._materialized(spark, sf, table))
+    assert df.columns
+    assert n == 0, n
 
 
 @pytest.fixture(scope="module")
