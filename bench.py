@@ -25,8 +25,8 @@ Python-worker cold start and whole-stage-codegen JIT (the same exclusion
 bench_scaling applies; ~10 s of one-time JIT otherwise lands inside whatever
 query compiles its plan shapes first, which says nothing about steady-state
 throughput at 10^12 docs). The sf0.1 work itself — extraction, linking,
-shuffles — is all inside the timed region (the tuples/link caches are keyed
-per corpus, so sf0.001 warmup shares no data with the timed run).
+shuffles — is all inside the timed region (the linking row's checkpointed
+tuples are per corpus, so sf0.001 warmup shares no data with the timed run).
 Two-parallelism scaling evidence lives in
 scikg_spark/jobs/bench_scaling.py -> BENCH/BASELINE.md.
 """
@@ -53,7 +53,10 @@ def main():
         sf = -1.0
 
     from scikg_spark.ops import dedup, kg, relational, similarity, text
-    from scikg_spark.pipeline.session import get_spark
+    from scikg_spark.pipeline.fused import pages_to_tuples
+    from scikg_spark.pipeline.session import get_spark, parallelize_scan
+    from scikg_spark.pipeline.stage1 import build_pages_from_documents
+    from scikg_spark.pipeline.stage3 import link_entities
 
     # shuffle partitions sized to the DATA (sf0.1 shuffles are KB-MB), not
     # the core count — a production job at 10^3 x this volume would scale
@@ -61,14 +64,27 @@ def main():
     # fine-tuning either way)
     spark = get_spark(app_name="scikg-bench", cores=cores,
                       shuffle_partitions=16)
+
+    def live_tuples(s, d):
+        # the Arrow extraction UDFs are compute-bound: track cores, not splits
+        docs = parallelize_scan(s.read.parquet(f"{d}/documents.parquet"))
+        return pages_to_tuples(build_pages_from_documents(docs))
+
+    checkpointed: dict = {}
+
+    def linked_nodes(s, d):
+        # links a tuples frame checkpointed once per corpus: the row times
+        # stage-3 linking (LSH + CC) every rep, with extraction kept warm
+        if d not in checkpointed:
+            checkpointed[d] = live_tuples(s, d).localCheckpoint()
+        return link_entities(checkpointed[d])[0]
+
     queries = {
-        # prefer_snapshot=False: these two rows time the LIVE extraction /
-        # linking passes — never the fingerprint-fresh snapshot read the
-        # driver-contract queries may serve (kg.py fast path, round 5)
-        "kg_pipeline": lambda s, d: kg.kg_triples(s, d, prefer_snapshot=False),
+        # these two rows time the LIVE extraction / linking passes, never a
+        # read of the materialized kg tables the kg_* queries serve
+        "kg_pipeline": live_tuples,
         "kg_top_facts": kg.kg_top_facts,
-        "kg_entity_nodes": lambda s, d: kg.kg_entity_nodes(
-            s, d, prefer_snapshot=False),
+        "kg_entity_nodes": linked_nodes,
         "dedup_exact": dedup.q_dedup_exact,
         "dedup_minhash": dedup.q_minhash_dup_pairs,
         "dedup_ngram_jaccard": dedup.q_ngram_jaccard_pairs,
@@ -92,15 +108,6 @@ def main():
             fn(spark, "/root/testdata/sf0.001").count()
 
         def one_rep(name, fn):
-            if name == "kg_pipeline":
-                # every rep re-pays the full extraction: triples/sec is
-                # THE baseline metric, so it must never time a cache read
-                kg.clear_caches(spark)
-            elif name == "kg_entity_nodes":
-                # re-pay the stage-3 linking pass (LSH + CC) every rep;
-                # the shared extraction stays warm — this row measures
-                # linking, not a checkpoint read
-                kg.clear_caches(spark, which="link")
             t0 = time.time()
             counts[name] = fn(spark, sf_dir).count()
             return time.time() - t0

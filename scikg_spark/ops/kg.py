@@ -1,25 +1,27 @@
 """KG-construction queries over the synthesized pages corpus.
 
+Every query reads a MATERIALIZED table of its corpus:
+:func:`materialize_kg_tables` extracts the corpus once and writes four plain
+parquet tables — ``tuples``, ``edges`` (tuples with entity ids), ``nodes``
+(the linked entities) and ``nodes_syn`` (the entities merged by the curated
+synonyms) — under a FINGERPRINT of the corpus bytes. A query materializes on
+first use, or when the corpus changed, and then only reads; this process
+keeps no frame, cache or relink of its own. The build runs the pipeline's own
+steps (``pages_to_tuples``, ``link_entities``, ``attach_entities``,
+``merge_synonyms``), each once.
+
 The extraction/linking queries (kg_triples, kg_entity_nodes, kg_entity_edges)
 are rows-only driver checks: tag decoding is not SQL-expressible — their
 oracle is the pure-Python reference decode, gated in
-tests/test_pipeline_spark.py (P=R=1.0 on the shipped eval corpus). When a
-fingerprint-fresh materialized snapshot of the corpus exists they serve
-from it (plain parquet scan — the production stage-boundary consumption
-shape, and what keeps the driver's 58-query sweep inside its budget);
-``prefer_snapshot=False`` forces the live path (bench.py times that).
+tests/test_pipeline_spark.py, and the runner parity test pins the tables to
+the pipeline runner's own.
 
 The downstream graph ANALYTICS (kg_top_facts, kg_statement_stats,
 kg_entity_cooccurrence, kg_degree_stats, kg_synonym_clusters, and the
-iterative kg_pagerank / kg_triangle_count) read a MATERIALIZED parquet of
-the gated extraction outputs (``materialize_kg_tables``) and are therefore
-SQL-expressible — each carries a DuckDB mirror over the same parquet files
-(PageRank's mirror unrolls the same fixed iterations as chained CTEs), so
-the analytics logic duels like every relational query. This mirrors the
-production shape: at 10^12 docs the tuples/edges tables are stage-boundary
-snapshots in the catalog (``materialize_kg_production`` writes the
-partitioned SnapshotCatalog form), and all graph analytics scan those
-snapshots, never the extraction lineage.
+iterative kg_pagerank / kg_triangle_count) are SQL-expressible — each carries
+a DuckDB mirror over the same parquet files (PageRank's mirror unrolls the
+same fixed iterations as chained CTEs), so the analytics logic duels like
+every relational query.
 
 Every read of a materialized table goes through :func:`_read_snapshot`,
 which hands Spark the schema from the parquet footer, so a read runs no
@@ -38,13 +40,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-# One extraction pass per (application, corpus): every kg_* query reads the
-# same cached tuples frame instead of re-running the Arrow extraction UDF.
-# Keys carry the source file's (size, mtime) so a rewritten corpus parquet is
-# never served stale; ``clear_caches`` unpersists and evicts everything.
-_TUPLES_CACHE: dict[tuple, object] = {}
-_LINK_CACHE: dict[tuple, object] = {}
-
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _MAT_ROOT = os.path.join(_REPO_ROOT, "checkpoints", "kg_materialized")
 # canonical-corpus root: children of this dir materialize into the repo's
@@ -54,10 +49,10 @@ _TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA_ROOT", "/root/testdata")
 
 
 def _src_stamp(sf_dir: str) -> tuple:
-    """(size, mtime_ns) stamp of the corpus parquet — part of every cache key
-    and of the materialization fingerprint, so a rewritten input invalidates
-    both within one Spark application. Nanosecond mtime: a same-size rewrite
-    within the same wall-clock second must still invalidate (integer-second
+    """(size, mtime_ns) stamp of the corpus parquet: the key under which
+    :func:`_src_content_hash` memoizes the corpus hash, so a rewritten input
+    is re-hashed within one process. Nanosecond mtime: a same-size rewrite
+    within the same wall-clock second must still re-hash (integer-second
     stamps served such rewrites stale)."""
     path = os.path.join(sf_dir, "documents.parquet")
     stats = []
@@ -71,71 +66,6 @@ def _src_stamp(sf_dir: str) -> tuple:
         st = os.stat(path)
         stats.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
     return tuple(stats)
-
-
-def _key(spark, sf_dir, variant: str = "plain"):
-    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-            _src_stamp(sf_dir), variant)
-
-
-def clear_caches(spark=None, which: str = "all") -> None:
-    """Evict the per-corpus tuples/link caches and unpersist their frames
-    (frees executor storage; the next kg_* call re-extracts). ``which`` is
-    'all', 'tuples', or 'link' — e.g. bench clears only 'link' to re-time
-    the stage-3 linking pass while keeping the shared extraction warm."""
-    caches = {"all": (_TUPLES_CACHE, _LINK_CACHE),
-              "tuples": (_TUPLES_CACHE,), "link": (_LINK_CACHE,)}[which]
-    for cache in caches:
-        for key in list(cache):
-            val = cache.pop(key)
-            frames = val if isinstance(val, tuple) else (val,)
-            for frame in frames:
-                if not hasattr(frame, "unpersist"):  # cached row counts
-                    continue
-                try:
-                    frame.unpersist()
-                except Exception:
-                    pass
-
-
-def _evict_stale(spark, cache: dict, key: tuple, sf_dir: str) -> None:
-    """Drop cache entries for the same (app, path) with an OUTDATED source
-    stamp. Unpersisting alone is not enough: Spark's CacheManager matches a
-    re-read of the same path to the old cached plan by canonicalized-plan
-    equality, so the path's cached data + file listing must be refreshed."""
-    stale = [k for k in cache
-             if k[:2] == key[:2] and k[3:] == key[3:] and k != key]
-    for k in stale:
-        val = cache.pop(k)
-        for frame in (val if isinstance(val, tuple) else (val,)):
-            if not hasattr(frame, "unpersist"):  # cached row counts
-                continue
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-    if stale:
-        spark.catalog.refreshByPath(f"{sf_dir}/documents.parquet")
-
-
-def _tuples(spark, sf_dir):
-    from scikg_spark.pipeline.fused import pages_to_tuples
-    from scikg_spark.pipeline.stage1 import build_pages_from_documents
-
-    key = _key(spark, sf_dir)
-    cached = _TUPLES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _evict_stale(spark, _TUPLES_CACHE, key, sf_dir)
-    from scikg_spark.pipeline.session import parallelize_scan
-
-    # the Arrow extraction UDFs are compute-bound: track cores, not splits
-    docs = parallelize_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    pages = build_pages_from_documents(docs)
-    t = pages_to_tuples(pages).cache()
-    _TUPLES_CACHE[key] = t
-    return t
 
 
 _SYNONYMS_PATH = os.path.join(
@@ -164,80 +94,21 @@ def load_synonyms(spark, path: str = _SYNONYMS_PATH):
     }))
 
 
-def _linked(spark, sf_dir, synonyms_path: str | None = None):
-    """Entity linking shared between kg_entity_nodes and kg_entity_edges —
-    one LSH + connected-components pass, checkpointed, both queries read it
-    (the runner materializes the same pair of tables as stage-3 snapshots).
-    ``synonyms_path`` selects the synonym-merged variant (cached separately).
-    Returns (nodes, phrase_map, phrase_map_rows): the row count rides the
-    cache entry so repeat kg_entity_edges calls never re-pay a driver
-    count() round-trip."""
-    from scikg_spark.pipeline.stage3 import link_entities
-
-    key = _key(spark, sf_dir,
-               "plain" if synonyms_path is None else f"syn:{synonyms_path}")
-    cached = _LINK_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _evict_stale(spark, _LINK_CACHE, key, sf_dir)
-    syn = (load_synonyms(spark, synonyms_path)
-           if synonyms_path is not None else None)
-    nodes, phrase_map = link_entities(_tuples(spark, sf_dir), synonyms=syn)
-    # phrase_map is already a projection over link_entities' checkpointed
-    # phrase->entity join (round 6) — re-checkpointing it would spend one
-    # more job to materialize the same rows
-    entry = (nodes.localCheckpoint(), phrase_map, phrase_map.count())
-    _LINK_CACHE[key] = entry
-    return entry
+def kg_triples(spark, sf_dir):
+    """Flagship: the extraction output, one row per emitted triple (the
+    materialized ``tuples`` table)."""
+    return _materialized(spark, sf_dir, "tuples")
 
 
-def kg_triples(spark, sf_dir, prefer_snapshot: bool = True):
-    """Flagship: the full extraction path, one row per emitted triple.
-
-    When a fingerprint-FRESH materialized snapshot of this corpus exists,
-    the tuples are served from it — a plain parquet scan, the production
-    consumption shape (downstream consumers read stage-boundary snapshots,
-    never re-run extraction lineage). The extraction semantics stay gated by
-    the pytest P/R suite, and any corpus rewrite invalidates the fingerprint
-    so extraction re-runs. ``prefer_snapshot=False`` forces the live
-    extraction path (bench.py does — triples/sec is THE baseline metric and
-    must never time a snapshot read; materialization does — it PRODUCES the
-    snapshot)."""
-    if prefer_snapshot:
-        snap = _snapshot_if_fresh(sf_dir, "tuples")
-        if snap is not None:
-            return _read_snapshot(spark, snap)
-    return _tuples(spark, sf_dir).select(
-        "doc_id", "stmt_id", "kind", "tuple_idx", "subj", "pred", "obj")
+def kg_entity_nodes(spark, sf_dir):
+    """Stage-3 canonical entities over the extracted concept mentions."""
+    return _materialized(spark, sf_dir, "nodes").orderBy("entity_id")
 
 
-def kg_entity_nodes(spark, sf_dir, prefer_snapshot: bool = True):
-    """Stage-3 canonical entities over the extracted concept mentions.
-    Served from the fingerprint-fresh snapshot when one exists (see
-    :func:`kg_triples`); ``prefer_snapshot=False`` forces the live LSH+CC
-    linking pass (bench.py's kg_entity_nodes row times exactly that)."""
-    if prefer_snapshot:
-        snap = _snapshot_if_fresh(sf_dir, "nodes")
-        if snap is not None:
-            return _read_snapshot(spark, snap).orderBy("entity_id")
-    nodes, _, _ = _linked(spark, sf_dir)
-    return nodes.orderBy("entity_id")
-
-
-def kg_entity_edges(spark, sf_dir, prefer_snapshot: bool = True):
+def kg_entity_edges(spark, sf_dir):
     """Graph-shaped output: tuples with subject/object entity ids attached
-    (the stage-4 edges table as a query). Snapshot-served when fresh, like
-    :func:`kg_triples`."""
-    if prefer_snapshot:
-        snap = _snapshot_if_fresh(sf_dir, "edges")
-        if snap is not None:
-            return _read_snapshot(spark, snap)
-    from scikg_spark.pipeline.stage3 import attach_entities
-
-    _, phrase_map, map_rows = _linked(spark, sf_dir)
-    return attach_entities(_tuples(spark, sf_dir), phrase_map, map_rows).select(
-        "doc_id", "stmt_id", "kind", "subj", "pred", "obj",
-        "subj_entity", "obj_entity")
+    (the stage-4 edges table as a query)."""
+    return _materialized(spark, sf_dir, "edges")
 
 
 # ---------------------------------------------------------------------------
@@ -267,7 +138,15 @@ def _mat_dir(sf_dir: str) -> str:
 # (path, stat-stamp) -> content md5. The stat stamp (size+mtime_ns) gates
 # re-hashing, so the bytes are read at most once per corpus version per
 # process; the corpus parquet is KB-MB at duel scale so a re-hash is ms.
+# The module's only in-process state.
 _CONTENT_CACHE: dict[tuple, str] = {}
+
+
+def clear_caches(spark=None) -> None:
+    """Forget the memoized corpus hashes, so the next query re-hashes its
+    corpus bytes. ``spark`` is accepted for callers that pass their session;
+    nothing of it is cached."""
+    _CONTENT_CACHE.clear()
 
 
 def _src_content_hash(sf_dir: str) -> str:
@@ -277,9 +156,9 @@ def _src_content_hash(sf_dir: str) -> str:
     regenerated-but-byte-identical corpus (fresh clone, driver re-running
     its deterministic generator — new mtimes, same bytes) must still hit
     the committed snapshots, while any real rewrite — including same-size
-    same-second ones — re-materializes. In-session caches keep the cheap
-    stat stamp (``_src_stamp``) as their key; this hash is memoized per
-    stat stamp so it is computed once per corpus version per process."""
+    same-second ones — re-materializes. The hash is memoized per cheap stat
+    stamp (``_src_stamp``), so it is computed once per corpus version per
+    process."""
     stamp = _src_stamp(sf_dir)
     key = (os.path.abspath(sf_dir), stamp)
     cached = _CONTENT_CACHE.get(key)
@@ -308,41 +187,30 @@ def _fingerprint(sf_dir: str) -> str:
     return hashlib.md5(("v4" + _src_content_hash(sf_dir)).encode()).hexdigest()
 
 
-def _snapshot_if_fresh(sf_dir: str, table: str) -> str | None:
-    """Path of ``table`` inside a fingerprint-FRESH materialized snapshot of
-    ``sf_dir``, or None (stale snapshot, absent snapshot, absent table).
-    Freshness is the same corpus-stamp check materialization itself uses, so
-    a rewritten input can never be served a stale snapshot."""
-    out = _mat_dir(sf_dir)
-    fp_path = os.path.join(out, "FINGERPRINT")
-    if not os.path.isfile(fp_path):
-        return None
-    with open(fp_path) as fh:
-        if fh.read().strip() != _fingerprint(sf_dir):
-            return None
-    tdir = os.path.join(out, table)
-    return tdir if os.path.isdir(tdir) else None
-
-
 def materialize_kg_tables(spark, sf_dir: str) -> str:
-    """Write the gated extraction outputs as plain parquet snapshots:
+    """Write the kg tables of a corpus as plain parquet snapshots:
 
       <repo>/checkpoints/kg_materialized/<sf>/tuples/    (flat triple rows)
       <repo>/checkpoints/kg_materialized/<sf>/edges/     (triples + entity ids)
       <repo>/checkpoints/kg_materialized/<sf>/nodes/     (canonical entities)
       <repo>/checkpoints/kg_materialized/<sf>/nodes_syn/ (synonym-merged)
 
-    plus a ``FINGERPRINT`` of the source corpus stamp. Downstream graph
-    aggregations (and their DuckDB oracle mirrors) scan these files — the
-    extraction itself stays pinned by the pytest P/R gate. Idempotent: a
-    fresh fingerprint skips the rewrite.
+    plus a ``FINGERPRINT`` of the corpus bytes, written last. Idempotent: a
+    fresh fingerprint skips the rewrite. The build extracts the corpus into
+    one tuples frame, cached for the build only, and runs one
+    ``link_entities``, one ``attach_entities`` and one ``merge_synonyms``
+    over it.
 
-    The ``coalesce(1)`` single-file layout exists ONLY for these sf-scale
-    duel mirrors (DuckDB reads one file per table). It is NOT the
-    stage-boundary snapshot shape for a real deployment — a 100-TB tuples
-    table through one task is a non-starter; production materialization is
-    :func:`materialize_kg_production` (partitioned SnapshotCatalog writes
-    with a content fold, pruning, time travel)."""
+    The ``coalesce(1)`` single-file layout exists for these sf-scale duel
+    mirrors (DuckDB reads one file per table). It is not the stage-boundary
+    snapshot shape for a real deployment: the pipeline runner commits
+    partitioned SnapshotCatalog tables."""
+    from scikg_spark.pipeline.fused import pages_to_tuples
+    from scikg_spark.pipeline.session import parallelize_scan
+    from scikg_spark.pipeline.stage1 import build_pages_from_documents
+    from scikg_spark.pipeline.stage3 import (
+        attach_entities, link_entities, merge_synonyms)
+
     out = _mat_dir(sf_dir)
     fp_path = os.path.join(out, "FINGERPRINT")
     fp = _fingerprint(sf_dir)
@@ -350,49 +218,27 @@ def materialize_kg_tables(spark, sf_dir: str) -> str:
         with open(fp_path) as fh:
             if fh.read().strip() == fp:
                 return out
-    # prefer_snapshot=False: this function PRODUCES the snapshot — it must
-    # run the live extraction/linking, never read a (stale) snapshot back
-    kg_triples(spark, sf_dir, prefer_snapshot=False) \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(out, "tuples"))
-    kg_entity_edges(spark, sf_dir, prefer_snapshot=False) \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(out, "edges"))
-    nodes, _, _ = _linked(spark, sf_dir)
-    nodes.coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(out, "nodes"))
-    nodes_syn, _, _ = _linked(spark, sf_dir, synonyms_path=_SYNONYMS_PATH)
-    nodes_syn.coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(out, "nodes_syn"))
+
+    def write(df, table):
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, table))
+
+    # the Arrow extraction UDFs are compute-bound: track cores, not splits
+    docs = parallelize_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    tuples = pages_to_tuples(build_pages_from_documents(docs)).cache()
+    try:
+        write(tuples.select("doc_id", "stmt_id", "kind", "tuple_idx",
+                            "subj", "pred", "obj"), "tuples")
+        nodes, phrase_map = link_entities(tuples)
+        write(attach_entities(tuples, phrase_map, phrase_map.count()).select(
+            "doc_id", "stmt_id", "kind", "subj", "pred", "obj",
+            "subj_entity", "obj_entity"), "edges")
+        write(nodes, "nodes")
+        write(merge_synonyms(nodes, phrase_map, load_synonyms(spark)),
+              "nodes_syn")
+    finally:
+        tuples.unpersist()
     with open(fp_path, "w") as fh:
         fh.write(fp + "\n")
-    return out
-
-
-def materialize_kg_production(spark, sf_dir: str, warehouse: str,
-                              doc_buckets: int = 32) -> dict:
-    """Production-shaped stage-boundary snapshots: tuples + edges written
-    through :class:`SnapshotCatalog` (atomic commit of one file per
-    partition value, table-level ``(rows, checksum)`` fold, schema-carrying
-    manifest, append snapshots, time travel, expiry) partitioned by
-    ``(kind, doc_bucket)`` — ``kind`` (f/c) for consumer-side partition
-    pruning, and a ``doc_id`` hash band so files stay bounded and writes
-    parallelize at 10^12 docs (raise ``doc_buckets`` with the corpus; 32 is
-    sf-scale). This is the snapshot
-    shape the module docstring's "stage-boundary snapshots in the catalog"
-    story refers to; the coalesce(1) path above serves only the DuckDB duel.
-    Returns {table: manifest}. A plan test pins that a kind/bucket filter on
-    the read-back reaches the scan as PartitionFilters."""
-    from scikg_spark.pipeline.stage4 import SnapshotCatalog
-
-    cat = SnapshotCatalog(spark, warehouse)
-    out = {}
-    for table, df in (("kg_tuples", kg_triples(spark, sf_dir)),
-                      ("kg_edges", kg_entity_edges(spark, sf_dir))):
-        banded = df.withColumn(
-            "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(doc_buckets)))
-        out[table] = cat.write(banded, table,
-                               partition_by=("kind", "doc_bucket"))
     return out
 
 
@@ -655,12 +501,12 @@ def kg_oracle(sf_dir: str | None = None) -> dict[str, str]:
 
 
 def kg_synonym_clusters(spark, sf_dir, min_phrases: int = _SYN_MIN_PHRASES):
-    """Synonym-merged entity clusters: canonical entities that absorbed more
-    than one surface form after the curated n-tuple synonym edges
-    (data/synonyms-label.txt, reference utils.py:638-644) joined the LSH +
-    exact edges in stage-3 linking. The one reference-semantic linking signal
-    (label-file synonyms) exercised end to end and duelled: SQL over the
-    materialized nodes_syn snapshot, DuckDB mirror on the same files. A
+    """Synonym-merged entity clusters: canonical entities that hold more
+    than one surface form once the curated n-tuple synonyms
+    (data/synonyms-label.txt, reference utils.py:638-644) merged the linked
+    entities (``stage3.merge_synonyms``). The one reference-semantic linking
+    signal (label-file synonyms) exercised end to end and duelled: SQL over
+    the materialized nodes_syn snapshot, DuckDB mirror on the same files. A
     fixture test pins that withholding the synonyms provably changes the
     clustering (tests/test_kg_materialized.py)."""
     nodes = _materialized(spark, sf_dir, "nodes_syn")
@@ -963,21 +809,32 @@ def kg_degree_stats(spark, sf_dir, top_k: int = 20):
     """Graph-degree analytics over the materialized edges: per-entity
     subject-degree (distinct objects), object-degree (distinct subjects) and
     statement support; top hubs by total degree. SQL over the snapshot, so
-    it duels like the other downstream aggregations."""
+    it duels like the other downstream aggregations.
+
+    One aggregate counts each distinct (subj, obj) pair's statements; each
+    pair then counts once toward its subject's out-degree and once toward
+    its object's in-degree, so one union and one sum give every column."""
     from pyspark.sql.window import Window
 
     edges = _materialized(spark, sf_dir, "edges")
-    paired = edges.filter(
-        F.col("subj_entity").isNotNull() & F.col("obj_entity").isNotNull())
-    out_d = paired.groupBy(F.col("subj_entity").alias("entity_id")).agg(
-        F.countDistinct("obj_entity").alias("out_degree"),
-        F.count("*").alias("out_support"))
-    in_d = paired.groupBy(F.col("obj_entity").alias("entity_id")).agg(
-        F.countDistinct("subj_entity").alias("in_degree"),
-        F.count("*").alias("in_support"))
+    pairs = (
+        edges.filter(F.col("subj_entity").isNotNull()
+                     & F.col("obj_entity").isNotNull())
+        .groupBy("subj_entity", "obj_entity").agg(F.count("*").alias("n"))
+    )
+    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
+    sides = pairs.select(
+        F.col("subj_entity").alias("entity_id"), one.alias("out_degree"),
+        F.col("n").alias("out_support"), zero.alias("in_degree"),
+        zero.alias("in_support")
+    ).unionByName(pairs.select(
+        F.col("obj_entity").alias("entity_id"), zero.alias("out_degree"),
+        zero.alias("out_support"), one.alias("in_degree"),
+        F.col("n").alias("in_support")))
     deg = (
-        out_d.join(in_d, "entity_id", "full")
-        .fillna(0)
+        sides.groupBy("entity_id")
+        .agg(*[F.sum(c).alias(c) for c in (
+            "out_degree", "in_degree", "out_support", "in_support")])
         .withColumn("total_degree", F.col("out_degree") + F.col("in_degree"))
     )
     # top-k via TakeOrdered (distributed), THEN rank the k survivors with a

@@ -85,8 +85,10 @@ def pages_to_tuples(pages: DataFrame, lang: str | None = "en",
                     ar=None, use_tc=False, use_tcdel=False,
                     use_sh=False, use_del=False) -> DataFrame:
     """pages -> tuples in ONE Python pass (extract_text + parse + rule tag +
-    correct + decode). The no-checkpoint fast path for read-through queries;
-    the checkpointing runner keeps the two-pass form for resumability."""
+    correct + decode), for builds that keep no statements table:
+    ``ops.kg.materialize_kg_tables`` and bench.py's live rows. The
+    checkpointing runner keeps the two-pass form, because it commits the
+    statements for resume and catch-up."""
     correct = _corrector(ar, use_tc, use_tcdel, use_sh, use_del)
 
     def gen(batches):

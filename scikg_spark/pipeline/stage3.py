@@ -18,9 +18,11 @@ mention phrases into entities via
      (no GraphFrames dependency), ``localCheckpoint`` per round to cut
      lineage. Both regimes give identical outputs.
 
-:func:`attach_entities` then joins the resulting phrase -> entity map back
-onto the tuples; it is the one edge-attach step for the pipeline runner and
-the ``ops.kg`` queries.
+:func:`link_entities` is the one linking pass, for the pipeline runner and
+the ``ops.kg`` tables alike. :func:`attach_entities` then joins its phrase ->
+entity map back onto the tuples, the one edge-attach step. Curated synonym
+pairs do not relink: :func:`merge_synonyms` merges the linked entities'
+labels, as the reference canonicalizes nodes it has already built.
 
 Scale design: minhash signatures are computed IN PLACE with JVM array
 expressions (array_min over transform of the shingle array — zero shuffle,
@@ -189,7 +191,8 @@ def _union_find(edges) -> dict:
 
 def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     """CC for a DRIVER-SIZED edge list via :func:`_union_find`. The mapping
-    is broadcast back over ``vertices`` (which may be huge)."""
+    is broadcast back over ``vertices`` (which may be huge): every column of
+    ``vertices``, then ``comp``."""
     comp = _union_find(rows)
     spark = vertices.sparkSession
     # Arrow local-relation build (round 6): createDataFrame over a plain
@@ -207,7 +210,7 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     return (
         vertices.join(F.broadcast(mapping.withColumnRenamed("comp", "_c")),
                       "id", "left")
-        .select("id", F.coalesce("_c", "id").alias("comp"))
+        .withColumn("comp", F.coalesce("_c", "id")).drop("_c")
     )
 
 
@@ -300,22 +303,6 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
     return comp.localCheckpoint()
 
 
-def synonym_phrase_edges(phrases: DataFrame, synonyms: DataFrame) -> DataFrame:
-    """Synonym pairs (the reference's ``n: [C1, as, C2]`` label tuples,
-    utils.py:638-644) as entity-linking edges: join both phrase columns onto
-    the mention table by normalized string."""
-    a = synonyms.select(_norm("phrase_a").alias("na"),
-                        _norm("phrase_b").alias("nb"))
-    pa = phrases.select(F.col("norm").alias("na"), F.col("phrase_id").alias("src"))
-    pb = phrases.select(F.col("norm").alias("nb"), F.col("phrase_id").alias("dst"))
-    return (
-        a.join(pa, "na").join(pb, "nb")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-
-
 # Distinct-phrase count up to which link_entities runs in the driver (see
 # _link_in_driver). The driver regime's peak Python heap measured 3.5-3.9 KB
 # per collected phrase (tracemalloc over the collect and the linking state:
@@ -326,13 +313,12 @@ DRIVER_PHRASES = 1 << 15
 
 
 def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
-                  use_lsh: bool = True,
-                  synonyms: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+                  use_lsh: bool = True) -> tuple[DataFrame, DataFrame]:
     """tuples -> (entity_nodes, phrase_map).
 
     entity_nodes: entity_id, canonical (deterministic min norm in the
-    component), n_phrases. phrase_map: phrase -> entity_id. ``synonyms``
-    optionally contributes curated pair edges (phrase_a, phrase_b).
+    component), n_phrases. phrase_map: phrase -> entity_id. Curated synonyms
+    merge the linked entities afterwards (:func:`merge_synonyms`).
 
     A vocabulary of at most :data:`DRIVER_PHRASES` distinct phrases links
     in the driver after one bounded collect; a bigger one takes the
@@ -341,10 +327,10 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     identical outputs.
     """
     phrases = mention_phrases(tuples)
-    mapped = (_link_in_driver(phrases, lsh_threshold, use_lsh, synonyms)
+    mapped = (_link_in_driver(phrases, lsh_threshold, use_lsh)
               if DRIVER_PHRASES else None)
     if mapped is None:
-        mapped = _link_distributed(phrases, lsh_threshold, use_lsh, synonyms)
+        mapped = _link_distributed(phrases, lsh_threshold, use_lsh)
     nodes = mapped.groupBy("entity_id").agg(
         F.min("norm").alias("canonical"),
         F.countDistinct("phrase").alias("n_phrases"),
@@ -352,11 +338,11 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     return nodes, mapped.select("phrase", "entity_id")
 
 
-def _link_in_driver(phrases: DataFrame, lsh_threshold: float, use_lsh: bool,
-                    synonyms: DataFrame | None) -> DataFrame | None:
+def _link_in_driver(phrases: DataFrame, lsh_threshold: float,
+                    use_lsh: bool) -> DataFrame | None:
     """The driver regime of :func:`link_entities`: (phrase, norm, entity_id)
-    as a JVM-local relation, or None when the vocabulary (or the synonym
-    list) has more than :data:`DRIVER_PHRASES` rows.
+    as a JVM-local relation, or None when the vocabulary has more than
+    :data:`DRIVER_PHRASES` rows.
 
     Spark computes each phrase's shingle set and band keys with the
     expressions :func:`lsh_candidate_pairs` uses, in the projection that is
@@ -365,8 +351,8 @@ def _link_in_driver(phrases: DataFrame, lsh_threshold: float, use_lsh: bool,
     distributed semantics exactly: star edges to the minimum phrase_id per
     norm, LSH over one representative per norm with buckets kept only when
     ``2 <= size <= max_bucket``, Jaccard ``|a & b| / float(|a | b|)`` against
-    ``lsh_threshold``, synonym edges joined by norm, and a union-find whose
-    entity_id is the component's minimum phrase_id."""
+    ``lsh_threshold``, and a union-find whose entity_id is the component's
+    minimum phrase_id."""
     import pyarrow as pa
 
     if use_lsh:
@@ -375,12 +361,6 @@ def _link_in_driver(phrases: DataFrame, lsh_threshold: float, use_lsh: bool,
     rows = phrases.limit(DRIVER_PHRASES + 1).collect()
     if len(rows) > DRIVER_PHRASES:
         return None
-    syn_rows = []
-    if synonyms is not None:
-        syn_rows = synonyms.select(_norm("phrase_a"), _norm("phrase_b")) \
-            .limit(DRIVER_PHRASES + 1).collect()
-        if len(syn_rows) > DRIVER_PHRASES:
-            return None
 
     # plain column tuples: a Row's field access by name is a Python call
     phrase, pid, norm, *lsh = (zip(*rows) if rows
@@ -405,8 +385,6 @@ def _link_in_driver(phrases: DataFrame, lsh_threshold: float, use_lsh: bool,
         edges.extend((a, b) for a, b in cand
                      if len(shingles[a] & shingles[b])
                      / float(len(shingles[a] | shingles[b])) >= lsh_threshold)
-    edges.extend((root[na], root[nb]) for na, nb in syn_rows
-                 if na in root and nb in root)
     comp = _union_find(edges)
     # entity_id is never null, as coalesce(comp, phrase_id) is not in Spark
     schema = pa.schema([("phrase", pa.string()), ("norm", pa.string()),
@@ -422,7 +400,7 @@ def _link_in_driver(phrases: DataFrame, lsh_threshold: float, use_lsh: bool,
 
 
 def _link_distributed(phrases: DataFrame, lsh_threshold: float,
-                      use_lsh: bool, synonyms: DataFrame | None) -> DataFrame:
+                      use_lsh: bool) -> DataFrame:
     """The over-bound regime of :func:`link_entities`: edges built in Spark,
     CC by :func:`connected_components`; returns the checkpointed
     (phrase, norm, entity_id) frame."""
@@ -454,8 +432,6 @@ def _link_distributed(phrases: DataFrame, lsh_threshold: float,
                         .select("phrase_id", "norm")
         cand = lsh_candidate_pairs(reps)
         edges = edges.union(verify_jaccard(cand, reps, threshold=lsh_threshold))
-    if synonyms is not None:
-        edges = edges.union(synonym_phrase_edges(phrases, synonyms))
     # materialize the edge pipeline (LSH bands + Jaccard verify) exactly
     # once, already SYMMETRIZED: the CC adjacency and the vertex set both
     # read this one checkpoint (round 6 — previously the directed edges and
@@ -474,6 +450,34 @@ def _link_distributed(phrases: DataFrame, lsh_threshold: float,
     return phrases.join(comp, phrases["phrase_id"] == comp["id"], "left").select(
         "phrase", "norm",
         F.coalesce("comp", "phrase_id").alias("entity_id")).localCheckpoint()
+
+
+def merge_synonyms(nodes: DataFrame, phrase_map: DataFrame,
+                   synonyms: DataFrame) -> DataFrame:
+    """Merge linked entities by curated synonym pairs (phrase_a, phrase_b),
+    the reference's ``n: [C1, as, C2]`` label tuples (utils.py:638-644),
+    which canonicalize nodes already built: a merge of entity labels, not a
+    second linking pass. Returns entity_nodes with the same columns.
+
+    The pairs come from a label file the driver parses whole, so they are
+    joined in the driver, by normalized string, onto the (norm(phrase),
+    entity_id) rows of ``phrase_map`` whose norm a pair names (one bounded
+    collect). A pair naming two different entities is a label edge, and
+    :func:`_driver_union_find` merges over those edges. Each merged group of
+    ``nodes`` becomes one entity: entity_id the minimum label (the minimum
+    phrase_id of the union, as linking labels), canonical the minimum
+    canonical, n_phrases the sum."""
+    pairs = synonyms.select(_norm("phrase_a"), _norm("phrase_b")).collect()
+    named = list({n for pair in pairs for n in pair if n is not None})
+    label = dict(phrase_map.select(_norm("phrase").alias("norm"), "entity_id")
+                 .filter(F.col("norm").isin(named)).collect())
+    edges = [(label[a], label[b]) for a, b in pairs
+             if a in label and b in label and label[a] != label[b]]
+    merged = _driver_union_find(edges, nodes.withColumnRenamed("entity_id", "id"))
+    return merged.groupBy(F.col("comp").alias("entity_id")).agg(
+        F.min("canonical").alias("canonical"),
+        F.sum("n_phrases").alias("n_phrases"),
+    )
 
 
 # phrase_map row count at or under which the entity attach broadcasts the

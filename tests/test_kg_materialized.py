@@ -1,6 +1,7 @@
-"""kg op caching + materialized-snapshot staleness: a rewritten corpus
-parquet must invalidate both the in-session tuples cache (stamp-keyed) and
-the on-disk materialization (FINGERPRINT), within one Spark application."""
+"""The materialized kg tables: one build per corpus version (a rewritten
+corpus parquet invalidates the on-disk FINGERPRINT within one Spark
+application, so no query is served stale), the synonym merge, the runner
+parity, and the analytics over the tables."""
 
 import os
 import shutil
@@ -30,14 +31,41 @@ def _rewrite_half(spark, corpus_dir):
     os.utime(path, (time.time() + 10, time.time() + 10))
 
 
-def test_tuples_cache_invalidated_on_corpus_rewrite(spark, corpus_dir):
+def test_rewritten_corpus_never_served_stale(spark, corpus_dir):
+    """Every kg query re-checks the corpus fingerprint: after a rewrite in
+    the same application, the tables are rebuilt before they are read."""
     from scikg_spark.ops import kg
 
-    n_full = kg.kg_triples(spark, corpus_dir).count()
-    assert n_full > 0
+    def sizes():
+        return [q(spark, corpus_dir).count() for q in (
+            kg.kg_triples, kg.kg_entity_edges, kg.kg_entity_nodes)]
+
+    full = sizes()
+    assert min(full) > 0
     _rewrite_half(spark, corpus_dir)
-    n_half = kg.kg_triples(spark, corpus_dir).count()
-    assert 0 < n_half < n_full  # a stale cache would return n_full
+    half = sizes()
+    # stale tables would return the full corpus' rows
+    assert all(0 < h < f for h, f in zip(half, full)), (half, full)
+    shutil.rmtree(kg._mat_dir(corpus_dir))
+
+
+def test_materialize_links_once(spark, corpus_dir, monkeypatch):
+    """A fresh corpus builds its four tables from one linking pass; a
+    second call with the corpus unchanged runs none."""
+    from scikg_spark.ops import kg
+    from scikg_spark.pipeline import stage3
+
+    calls = []
+    link = stage3.link_entities
+    monkeypatch.setattr(stage3, "link_entities",
+                        lambda *a, **k: calls.append(1) or link(*a, **k))
+    out = kg.materialize_kg_tables(spark, corpus_dir)
+    assert len(calls) == 1
+    assert sorted(os.listdir(out)) == [
+        "FINGERPRINT", "edges", "nodes", "nodes_syn", "tuples"]
+    kg.materialize_kg_tables(spark, corpus_dir)
+    assert len(calls) == 1
+    shutil.rmtree(out)
 
 
 def test_materialization_refreshes_on_fingerprint_change(spark, corpus_dir):
@@ -59,15 +87,6 @@ def test_materialization_refreshes_on_fingerprint_change(spark, corpus_dir):
     assert fp2 != fp1
     assert spark.read.parquet(os.path.join(out, "tuples")).count() < n1
     shutil.rmtree(out)  # tmp-named snapshot dir, don't leave it in the repo
-
-
-def test_clear_caches_evicts_and_unpersists(spark, corpus_dir):
-    from scikg_spark.ops import kg
-
-    kg.kg_triples(spark, corpus_dir).count()
-    assert kg._TUPLES_CACHE
-    kg.clear_caches(spark)
-    assert not kg._TUPLES_CACHE and not kg._LINK_CACHE
 
 
 def test_committed_snapshots_fresh_for_all_sfs(spark):
@@ -120,28 +139,61 @@ def test_mat_dir_routes_noncanonical_corpora_to_tmp(tmp_path):
     assert _mat_dir("/root/testdata/sf0.01") == os.path.join(_MAT_ROOT, "sf0.01")
 
 
+def _link_corpus(spark, sf):
+    """link_entities over the tuples of corpus ``sf``, extracted as
+    materialize_kg_tables extracts them."""
+    from scikg_spark.pipeline.fused import pages_to_tuples
+    from scikg_spark.pipeline.stage1 import build_pages_from_documents
+    from scikg_spark.pipeline.stage3 import link_entities
+
+    from conftest import TESTDATA
+
+    docs = spark.read.parquet(
+        os.path.join(TESTDATA, sf, "documents.parquet"))
+    return link_entities(
+        pages_to_tuples(build_pages_from_documents(docs)).localCheckpoint())
+
+
 def test_synonym_edges_change_linking(spark):
     """Withholding the curated n-tuple synonyms provably changes the
-    clustering: with synonyms, 'sort' and 'order' share an entity id; the
-    plain linking keeps them apart (they share no shingles)."""
+    clustering: the plain linking keeps 'sort' and 'order' apart (they share
+    no shingles); the synonym merge puts them in one entity."""
     from scikg_spark.ops import kg
+    from scikg_spark.pipeline.stage3 import merge_synonyms
 
-    sf_dir = "/root/testdata/sf0.001"
-    _, pm_plain, _ = kg._linked(spark, sf_dir)
-    _, pm_syn, _ = kg._linked(spark, sf_dir, synonyms_path=kg._SYNONYMS_PATH)
+    nodes, pmap = _link_corpus(spark, "sf0.001")
+    merged = merge_synonyms(nodes, pmap, kg.load_synonyms(spark))
 
-    def eid(pm, word):
-        rows = pm.filter(f"lower(phrase) = '{word}'") \
+    def eid(word):
+        rows = pmap.filter(f"lower(phrase) = '{word}'") \
             .select("entity_id").distinct().collect()
-        assert rows, f"phrase {word!r} not in the corpus mention table"
-        return {r["entity_id"] for r in rows}
+        assert len(rows) == 1, f"phrase {word!r}: {rows}"
+        return rows[0]["entity_id"]
 
-    assert eid(pm_syn, "sort") == eid(pm_syn, "order")
-    assert eid(pm_plain, "sort") != eid(pm_plain, "order")
+    sort, order = eid("sort"), eid("order")
+    assert sort != order
+    ids = {r["entity_id"] for r in merged.collect()}
+    assert min(sort, order) in ids and max(sort, order) not in ids
     # merged clustering has strictly fewer entities
-    n_plain = kg._linked(spark, sf_dir)[0].count()
-    n_syn = kg._linked(spark, sf_dir, synonyms_path=kg._SYNONYMS_PATH)[0].count()
-    assert n_syn < n_plain
+    assert merged.count() < nodes.count()
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_merge_synonyms_matches_committed_nodes_syn(spark, sf):
+    """The committed nodes_syn tables were built by a second linking pass
+    that added the synonym pairs as phrase edges; merging the synonyms into
+    one linking pass's entities gives the same rows."""
+    from scikg_spark.ops import kg
+    from scikg_spark.pipeline.stage3 import merge_synonyms
+
+    from conftest import TESTDATA
+
+    out = kg.materialize_kg_tables(spark, os.path.join(TESTDATA, sf))
+    nodes, pmap = _link_corpus(spark, sf)
+    merged = merge_synonyms(nodes, pmap, kg.load_synonyms(spark))
+    committed = spark.read.parquet(os.path.join(out, "nodes_syn"))
+    assert (sorted(map(tuple, merged.collect()))
+            == sorted(map(tuple, committed.collect())))
 
 
 def test_load_synonyms_parses_reference_dsl(spark):
@@ -160,33 +212,6 @@ def test_kg_synonym_clusters_reflects_merges(spark):
     assert (df["n_phrases"] >= 2).all()
     # the curated merges surface as multi-phrase clusters
     assert {"order", "line"} & set(df["canonical"])
-
-
-def test_production_materialization_partition_pruning(spark, tmp_path):
-    """materialize_kg_production writes partitioned SnapshotCatalog
-    snapshots; a kind/bucket predicate on the consumer reaches the scan as
-    PartitionFilters (no full-table read at 10^12 docs)."""
-    from scikg_spark.ops import kg
-    from scikg_spark.pipeline.stage4 import SnapshotCatalog, verify_snapshot
-
-    wh = str(tmp_path / "wh")
-    manifests = kg.materialize_kg_production(
-        spark, "/root/testdata/sf0.001", wh, doc_buckets=4)
-    assert set(manifests) == {"kg_tuples", "kg_edges"}
-    assert manifests["kg_tuples"]["partition_by"] == ["kind", "doc_bucket"]
-    cat = SnapshotCatalog(spark, wh)
-    # the table-level fold is recorded and matches the committed data
-    assert manifests["kg_tuples"]["checksum"]
-    assert verify_snapshot(cat, "kg_tuples")["ok"]
-    facts = cat.read("kg_tuples").filter("kind = 'f' AND doc_bucket = 2")
-    plan = facts._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "kind" in plan.split("PartitionFilters")[1][:200]
-    # values survive the partitioned round-trip
-    expect = (kg.kg_triples(spark, "/root/testdata/sf0.001")
-              .filter("kind = 'f'").count())
-    got = cat.read("kg_tuples").filter("kind = 'f'").count()
-    assert got == expect
 
 
 def test_parallelize_scan_tracks_cores(spark):
@@ -407,29 +432,29 @@ def test_triangle_adjacency_cap_bounds_hot_vertex(spark):
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
-def test_snapshot_fastpath_matches_live_extraction(spark):
-    """Round 5: kg_triples / kg_entity_nodes / kg_entity_edges serve from a
-    fingerprint-fresh snapshot. The fast path must be (a) row-identical to
-    the live extraction, (b) type-identical, and (c) an actual parquet scan
-    — no Arrow extraction stage in its plan."""
+def test_kg_tables_match_runner_tables(spark, tmp_path):
+    """kg_triples, kg_entity_edges and kg_entity_nodes hold the rows the
+    pipeline runner commits for the same corpus, projected to the kg
+    columns, and each is a plain parquet scan: no extraction in its plan."""
     from scikg_spark.ops import kg
+    from scikg_spark.pipeline.runner import run_pipeline
+    from scikg_spark.pipeline.stage1 import build_pages_from_documents
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog
 
-    sf = "/root/testdata/sf0.001"
-    kg.materialize_kg_tables(spark, sf)  # self-heals if stale
+    from conftest import TESTDATA
 
-    for fast_fn, live_fn in (
-            (kg.kg_triples, lambda s, d: kg.kg_triples(
-                s, d, prefer_snapshot=False)),
-            (kg.kg_entity_nodes, lambda s, d: kg.kg_entity_nodes(
-                s, d, prefer_snapshot=False)),
-            (kg.kg_entity_edges, lambda s, d: kg.kg_entity_edges(
-                s, d, prefer_snapshot=False))):
-        fast, live = fast_fn(spark, sf), live_fn(spark, sf)
-        assert ([(f.name, f.dataType) for f in fast.schema.fields]
-                == [(f.name, f.dataType) for f in live.schema.fields])
-        assert (sorted(map(tuple, fast.collect()))
-                == sorted(map(tuple, live.collect())))
-        plan = fast._jdf.queryExecution().executedPlan().toString()
+    sf = os.path.join(TESTDATA, "sf0.001")
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    run_pipeline(spark, build_pages_from_documents(docs), catalog=cat)
+    for query, table in ((kg.kg_triples, "tuples"),
+                         (kg.kg_entity_edges, "edges"),
+                         (kg.kg_entity_nodes, "entity_nodes")):
+        got = query(spark, sf)
+        want = cat.read(table).select(*got.columns)
+        assert (sorted(map(tuple, got.collect()))
+                == sorted(map(tuple, want.collect()))), table
+        plan = got._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" not in plan and "Python" not in plan
         assert "FileScan parquet" in plan
 

@@ -158,12 +158,13 @@ def _jobs_in_group(spark, group, fn):
 
 def test_link_entities_driver_regime_job_count(spark):
     """A driver-sized vocabulary links with one bounded collect (2 jobs:
-    the distinct's shuffle stage and the collect), plus one for the
-    synonym list; the outputs run no job until consumed."""
+    the distinct's shuffle stage and the collect); the synonym merge runs
+    one more, the collect of its label edges; the outputs run no job until
+    consumed."""
     from pyspark.sql import functions as F
 
     from scikg_spark.ops import kg
-    from scikg_spark.pipeline.stage3 import link_entities
+    from scikg_spark.pipeline.stage3 import link_entities, merge_synonyms
 
     tuples = spark.range(200).select(
         F.struct(F.concat(F.lit("Concept_"), (F.col("id") % 50).cast("string"))
@@ -176,8 +177,8 @@ def test_link_entities_driver_regime_job_count(spark):
     assert n <= 2, n
     assert pmap.count() == 57
     _, n = _jobs_in_group(
-        spark, "pin-link-syn", lambda: link_entities(tuples, synonyms=syn))
-    assert n <= 3, n
+        spark, "pin-merge-syn", lambda: merge_synonyms(nodes, pmap, syn))
+    assert n <= 1, n
 
 
 def test_kg_pagerank_driver_regime_job_count(spark):
@@ -210,6 +211,23 @@ def test_kg_triangle_count_driver_regime_job_count(spark):
         spark, "pin-triangles",
         lambda: kg.kg_triangle_count(spark, sf).toPandas())
     assert len(df) > 0
+    assert n <= 3, n
+
+
+def test_kg_degree_stats_job_count(spark):
+    """Degree statistics aggregate the distinct entity pairs once and sum
+    both of their sides: 3 jobs (the pair aggregate, the per-entity sum and
+    the top-k), not the 5 of two per-side countDistinct aggregates, a full
+    outer join and a top-k."""
+    from scikg_spark.ops import kg
+
+    from conftest import TESTDATA
+
+    sf = os.path.join(TESTDATA, "sf0.001")
+    kg.materialize_kg_tables(spark, sf)
+    df, n = _jobs_in_group(
+        spark, "pin-degree", lambda: kg.kg_degree_stats(spark, sf).toPandas())
+    assert len(df) == 20
     assert n <= 3, n
 
 

@@ -13,6 +13,7 @@ from scikg_spark.pipeline.stage3 import (
     lsh_candidate_pairs,
     link_entities,
     mention_phrases,
+    merge_synonyms,
     verify_jaccard,
 )
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
@@ -88,18 +89,24 @@ def _mention_tuples(spark, phrases):
 class TestLinkingRegimes:
     """link_entities gives the same entity_map and entity_nodes (schema and
     row multiset) in its driver regime and in its distributed one, which
-    DRIVER_PHRASES = 0 forces."""
+    DRIVER_PHRASES = 0 forces; so do the synonym merges of the two."""
 
     @staticmethod
-    def _both(monkeypatch, tuples, bounds=(0,), **kw):
+    def _both(monkeypatch, tuples, bounds=(0,), synonyms=None, **kw):
         """Links ``tuples`` in the driver regime, then once with
         DRIVER_PHRASES set to each of ``bounds``, each of which must send it
-        to the distributed path; all outputs must agree."""
+        to the distributed path; all outputs must agree. With ``synonyms``,
+        the merged entity_nodes join the outputs compared and come back as
+        ``{canonical: (entity_id, n_phrases)}``; else the entity_map comes
+        back as ``{phrase: entity_id}``."""
         from scikg_spark.pipeline import stage3
 
         def frames():
-            return [(df.schema, sorted(map(tuple, df.collect())))
-                    for df in link_entities(tuples, **kw)]
+            nodes, pmap = link_entities(tuples, **kw)
+            dfs = [nodes, pmap]
+            if synonyms is not None:
+                dfs.append(merge_synonyms(nodes, pmap, synonyms))
+            return [(df.schema, sorted(map(tuple, df.collect()))) for df in dfs]
 
         def refuse(*a, **k):
             raise AssertionError("input is driver-sized")
@@ -116,8 +123,9 @@ class TestLinkingRegimes:
                           lambda *a: calls.append(1) or distributed(*a))
                 other = frames()
             assert calls, bound
-            assert driver[0] == other[0], bound  # entity_nodes
-            assert driver[1] == other[1], bound  # entity_map
+            assert driver == other, bound
+        if synonyms is not None:
+            return {c: (e, n) for e, c, n in driver[2][1]}
         return dict(driver[1][1])
 
     def test_sf_tuples(self, spark, sf_tuples, monkeypatch):
@@ -130,7 +138,12 @@ class TestLinkingRegimes:
     def test_with_synonyms(self, spark, sf_tuples, monkeypatch):
         from scikg_spark.ops import kg
 
-        self._both(monkeypatch, sf_tuples, synonyms=kg.load_synonyms(spark))
+        merged = self._both(monkeypatch, sf_tuples,
+                            synonyms=kg.load_synonyms(spark))
+        n_linked = link_entities(sf_tuples)[0].count()
+        assert len(merged) < n_linked
+        assert sum(n for _, n in merged.values()) \
+            == mention_phrases(sf_tuples).count()
 
     def test_crafted_edge_cases(self, spark, monkeypatch):
         # 70 norms with one shingle set: every LSH bucket of theirs holds
@@ -152,15 +165,20 @@ class TestLinkingRegimes:
         assert ids[near[0]] == ids[near[1]]  # an LSH edge
         assert ids[below[0]] != ids[below[1]]
 
+        # a merged pair; an absent, a same-norm and a null one; and a chain
+        # through the LSH edge between the two `near` phrases
         pairs = [("T_CELLS", "immune_response_in_mice"),
-                 ("ab", "no_such_mention"), ("abc", "ABC"), (None, "x")]
+                 ("ab", "no_such_mention"), ("abc", "ABC"), (None, "x"),
+                 ("regulatory_t_cells_activation", "immune_responses_in_mice")]
         pairs += [(f"absent_{i}", f"absent_{i + 1}") for i in range(100)]
         syn = spark.createDataFrame(pairs, "phrase_a string, phrase_b string")
-        # at len(phrases) the vocabulary fits, the synonym list does not
-        ids = self._both(monkeypatch, tuples, bounds=(0, 5, len(phrases)),
-                         synonyms=syn)
-        assert ids["t cells"] == ids[below[0]] != ids[below[1]]
-        assert len({ids[p] for p in short}) == len(short)
+        merged = self._both(monkeypatch, tuples, bounds=(0, 5), synonyms=syn)
+        assert merged["immune response in mice"] == (
+            min(ids["t cells"], ids[below[0]]), len(variants) + 1)
+        assert merged["immune responses in mice"] == (
+            min(ids[near[0]], ids[below[1]]), 3)
+        assert all(merged[p] == (ids[p], 1) for p in short)
+        assert len(merged) == len(set(ids.values())) - 2
 
 
 class TestSnapshots:
@@ -377,6 +395,28 @@ class TestResume:
         assert a == b
 
 
+def test_committed_edges_prune_partitions(spark, tmp_path):
+    """The runner commits ``edges`` partitioned by (kind, url_bucket): a
+    kind/bucket predicate on a consumer's read reaches the scan as
+    PartitionFilters (no full-table read at 10^12 docs), and the rows
+    survive the partitioned round-trip."""
+    from scikg_spark.pipeline.stage4 import verify_snapshot
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(40)
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    run_pipeline(spark, build_pages_from_documents(docs), catalog=cat,
+                 use_lsh=False)
+    assert cat.manifest("edges")["partition_by"] == ["kind", "url_bucket"]
+    assert verify_snapshot(cat, "edges")["ok"]
+    facts = cat.read("edges").filter("kind = 'f' AND url_bucket = 2")
+    plan = facts._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan
+    assert "kind" in plan.split("PartitionFilters")[1][:200]
+    n_facts = cat.read("tuples").filter("kind = 'f'").count()
+    assert n_facts > 0
+    assert cat.read("edges").filter("kind = 'f'").count() == n_facts
+
+
 class TestSynonymEdges:
     def test_synonyms_merge_components(self, spark):
         from scikg_spark.pipeline.stage2 import TUPLES_SCHEMA
@@ -394,14 +434,15 @@ class TestSynonymEdges:
         syn = spark.createDataFrame(
             [("tumor", "neoplasm")], "phrase_a string, phrase_b string")
 
-        from scikg_spark.pipeline.stage3 import link_entities
-
-        without, _ = link_entities(tuples, use_lsh=False)
-        with_syn, pmap = link_entities(tuples, use_lsh=False, synonyms=syn)
-        assert with_syn.count() == without.count() - 1  # two phrases merged
+        nodes, pmap = link_entities(tuples, use_lsh=False)
+        with_syn = merge_synonyms(nodes, pmap, syn)
+        assert with_syn.count() == nodes.count() - 1  # two phrases merged
         ids = {r.phrase: r.entity_id for r in pmap.collect()}
-        assert ids["tumor"] == ids["neoplasm"]
-        assert ids["pain"] != ids["ache"]
+        merged = {r.canonical: (r.entity_id, r.n_phrases)
+                  for r in with_syn.collect()}
+        assert merged["neoplasm"] == (min(ids["tumor"], ids["neoplasm"]), 2)
+        assert merged["pain"] == (ids["pain"], 1)
+        assert merged["ache"] == (ids["ache"], 1)
 
 
 class TestCCNonConvergence:
