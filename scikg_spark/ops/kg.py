@@ -813,7 +813,9 @@ def kg_degree_stats(spark, sf_dir, top_k: int = 20):
 
     One aggregate counts each distinct (subj, obj) pair's statements; each
     pair then counts once toward its subject's out-degree and once toward
-    its object's in-degree, so one union and one sum give every column."""
+    its object's in-degree, so one sum over both endpoint rows gives every
+    column. The two rows come from one read of the aggregate (an explode),
+    not a union that would plan the scan and the aggregate once per side."""
     from pyspark.sql.window import Window
 
     edges = _materialized(spark, sf_dir, "edges")
@@ -823,14 +825,14 @@ def kg_degree_stats(spark, sf_dir, top_k: int = 20):
         .groupBy("subj_entity", "obj_entity").agg(F.count("*").alias("n"))
     )
     one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
-    sides = pairs.select(
-        F.col("subj_entity").alias("entity_id"), one.alias("out_degree"),
-        F.col("n").alias("out_support"), zero.alias("in_degree"),
-        zero.alias("in_support")
-    ).unionByName(pairs.select(
-        F.col("obj_entity").alias("entity_id"), zero.alias("out_degree"),
-        zero.alias("out_support"), one.alias("in_degree"),
-        F.col("n").alias("in_support")))
+    sides = pairs.select(F.explode(F.array(
+        F.struct(F.col("subj_entity").alias("entity_id"),
+                 one.alias("out_degree"), F.col("n").alias("out_support"),
+                 zero.alias("in_degree"), zero.alias("in_support")),
+        F.struct(F.col("obj_entity").alias("entity_id"),
+                 zero.alias("out_degree"), zero.alias("out_support"),
+                 one.alias("in_degree"), F.col("n").alias("in_support")),
+    )).alias("side")).select("side.*")
     deg = (
         sides.groupBy("entity_id")
         .agg(*[F.sum(c).alias(c) for c in (

@@ -1,11 +1,9 @@
-"""Hot-key skew handling: salting utilities.
+"""Hot-key skew handling: a salted join.
 
 AQE's skew-join splitting (on in session defaults) handles sort-merge joins;
-these utilities cover the two cases AQE doesn't: broadcast-ineligible
-dimension joins against hot keys, and high-cardinality aggregations whose
-partial-aggregate hash tables overflow on hot groups (SURVEY.md §4 item 1 —
-hot entities like "patients"/"cells" dominate stage-3 groupings at
-10^12-doc scale).
+:func:`salted_join` covers the case AQE doesn't: broadcast-ineligible
+dimension joins against hot keys (SURVEY.md §4 item 1 — hot entities like
+"patients"/"cells" dominate stage-3 joins at 10^12-doc scale).
 
 Salting is deterministic: the salt derives from xxhash64 of the row's other
 columns, never from random() — reruns and resumed stages reproduce bytes.
@@ -38,19 +36,3 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
     out = big_s.join(small_s, [key, "__salt"], how)
     return out.drop("__salt")
-
-
-def two_phase_count(df: DataFrame, key: str, n_salt: int = 16) -> DataFrame:
-    """groupBy(key).count() with an explicit salted pre-aggregation.
-
-    Spark's hash aggregate already does map-side partial aggregation; the
-    explicit two-phase form additionally bounds the per-reducer row count for
-    the FINAL aggregate when one key dominates the dataset."""
-    other_cols = [c for c in df.columns if c != key]
-    salt_src = F.xxhash64(*[F.col(c).cast("string") for c in other_cols]) \
-        if other_cols else F.monotonically_increasing_id()
-    partial = (
-        df.withColumn("__salt", F.pmod(salt_src, F.lit(n_salt)).cast("int"))
-        .groupBy(key, "__salt").agg(F.count("*").alias("__c"))
-    )
-    return partial.groupBy(key).agg(F.sum("__c").alias("count"))

@@ -277,7 +277,6 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
                 F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp"))
         )
 
-    converged = False
     for _ in range(max_iter):
         # two hops per materialized round halves the number of Spark jobs
         # (convergence checks + checkpoints dominate on small graphs)
@@ -289,18 +288,12 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
         )
         comp = updated.select("id", F.col("new_comp").alias("comp"))
         if updated.filter(F.col("new_comp") != F.col("old_comp")).limit(1).count() == 0:
-            converged = True
-            break
-    if not converged:
-        # never return silently-wrong labels: a component with diameter
-        # > 2*max_iter would end up split into several entity ids
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge within {max_iter} rounds "
-            f"(component diameter > {2 * max_iter}); labels may split "
-            f"components — raise max_iter", RuntimeWarning, stacklevel=2)
-    return comp.localCheckpoint()
+            return comp.localCheckpoint()
+    # never return plausible wrong labels: a component with diameter
+    # > 2*max_iter would end up split into several entity ids
+    raise RuntimeError(
+        f"connected_components did not converge within {max_iter} rounds "
+        f"(component diameter > {2 * max_iter}); raise max_iter")
 
 
 # Distinct-phrase count up to which link_entities runs in the driver (see

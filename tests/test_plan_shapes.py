@@ -218,7 +218,9 @@ def test_kg_degree_stats_job_count(spark):
     """Degree statistics aggregate the distinct entity pairs once and sum
     both of their sides: 3 jobs (the pair aggregate, the per-entity sum and
     the top-k), not the 5 of two per-side countDistinct aggregates, a full
-    outer join and a top-k."""
+    outer join and a top-k. Both endpoint rows of a pair come from one read
+    of the pair aggregate, so the plan scans ``edges`` once (a union of the
+    two sides planned the scan and the aggregate twice)."""
     from scikg_spark.ops import kg
 
     from conftest import TESTDATA
@@ -229,6 +231,37 @@ def test_kg_degree_stats_job_count(spark):
         spark, "pin-degree", lambda: kg.kg_degree_stats(spark, sf).toPandas())
     assert len(df) == 20
     assert n <= 3, n
+    plan = _formatted(kg.kg_degree_stats(spark, sf))
+    assert _n_ops(plan, "Scan parquet") == 1, plan
+    assert "Union" not in plan, plan
+
+
+def test_runner_job_counts(spark, tmp_path):
+    """One build (``run_pipeline``, resume off) over 30 sf0.001 documents
+    runs 10 Spark jobs and one catch-up of 10 more documents 16, counted by
+    job group: a change to the runner's stage protocol cannot add one."""
+    from scikg_spark.pipeline.runner import (
+        run_pipeline, run_pipeline_incremental)
+    from scikg_spark.pipeline.stage1 import build_pages_from_documents
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+    from conftest import TESTDATA
+
+    docs = spark.read.parquet(
+        os.path.join(TESTDATA, "sf0.001", "documents.parquet"))
+    base, delta = (build_pages_from_documents(
+        docs.filter(f"doc_id >= {lo} AND doc_id < {hi}")).localCheckpoint()
+        for lo, hi in ((0, 30), (30, 40)))
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    _, n_build = _jobs_in_group(
+        spark, "pin-build",
+        lambda: run_pipeline(spark, base, cat, resume=False))
+    report, n_catchup = _jobs_in_group(
+        spark, "pin-catchup",
+        lambda: run_pipeline_incremental(spark, delta, cat))
+    assert report["new_tuples"] > 0
+    assert n_build <= 10, n_build
+    assert n_catchup <= 16, n_catchup
 
 
 @pytest.mark.parametrize("table", ["tuples", "edges", "nodes", "nodes_syn"])

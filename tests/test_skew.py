@@ -3,7 +3,7 @@ on pathologically hot keys."""
 
 from pyspark.sql import functions as F
 
-from scikg_spark.pipeline.skew import salted_join, two_phase_count
+from scikg_spark.pipeline.skew import salted_join
 
 
 def _skewed(spark, n_hot=5000, n_cold=200):
@@ -30,14 +30,6 @@ def test_salted_left_join(spark):
     salted = salted_join(big, small, "k", how="left").select("k", "v", "attr")
     assert sorted(map(lambda r: (r.k, r.v, r.attr), salted.collect())) == \
            sorted(map(lambda r: (r.k, r.v, r.attr), plain.collect()))
-
-
-def test_two_phase_count(spark):
-    df = _skewed(spark)
-    plain = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r.k: r["count"] for r in two_phase_count(df, "k").collect()}
-    assert plain == salted
-    assert salted["hot_key"] == 5000
 
 
 def test_salt_distribution_spreads_hot_key(spark):

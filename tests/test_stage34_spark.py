@@ -446,20 +446,18 @@ class TestSynonymEdges:
 
 
 class TestCCNonConvergence:
-    def test_warns_on_diameter_exceeding_budget(self, spark):
-        import warnings
+    def test_raises_on_diameter_exceeding_budget(self, spark):
+        import pytest
 
         from scikg_spark.pipeline.stage3 import connected_components
 
-        # chain of 12 nodes, max_iter=1 -> 2 hops: cannot converge
+        # chain of 12 nodes, max_iter=1 -> 2 hops: cannot converge, and split
+        # labels must not come back
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(11)], "src long, dst long")
         verts = spark.createDataFrame([(i,) for i in range(12)], "id long")
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            connected_components(edges, verts, max_iter=1,
-                                 driver_threshold=0).collect()
-        assert any("did not converge" in str(w.message) for w in caught)
+        with pytest.raises(RuntimeError, match="did not converge within 1 "):
+            connected_components(edges, verts, max_iter=1, driver_threshold=0)
 
     def test_long_chain_converges_within_budget(self, spark):
         from scikg_spark.pipeline.stage3 import connected_components
@@ -553,9 +551,10 @@ def test_run_pipeline_with_trained_ensemble(spark, tmp_path):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").limit(40)
     pages = build_pages_from_documents(docs).cache()
-    ens = run_pipeline(spark, pages, tagger="ensemble",
-                       weights_path=weights)["tuples"]
-    rule = run_pipeline(spark, pages, tagger="rule")["tuples"]
+    ens = run_pipeline(spark, pages, SnapshotCatalog(spark, str(tmp_path / "ens")),
+                       tagger="ensemble", weights_path=weights)["tuples"]
+    rule = run_pipeline(spark, pages, SnapshotCatalog(spark, str(tmp_path / "rule")),
+                        tagger="rule")["tuples"]
     cols = ["doc_id", "stmt_id", "kind", "subj", "pred", "obj"]
     n_rule = rule.count()
     n_match = ens.select(*cols).intersect(rule.select(*cols)).count()

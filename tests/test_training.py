@@ -160,7 +160,7 @@ class TestProbeTagger:
         other = ProbeTagger.load(path)
         assert probe.predict_tags(*stmts) == other.predict_tags(*stmts)
 
-    def test_probe_mode_requires_weights(self, spark):
+    def test_probe_mode_requires_weights(self, spark, tmp_path):
         import pytest
 
         from scikg_spark.pipeline.fused import extract_tuples
@@ -168,6 +168,7 @@ class TestProbeTagger:
         from scikg_spark.pipeline.stage1 import (
             build_pages_from_documents, extract_statements)
         from scikg_spark.pipeline.stage2 import tag_statements
+        from scikg_spark.pipeline.stage4 import SnapshotCatalog
 
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet").limit(5)
@@ -178,7 +179,8 @@ class TestProbeTagger:
         with pytest.raises(ValueError, match="probe mode"):
             extract_tuples(stmts, tagger="probe")
         with pytest.raises(ValueError, match="probe mode"):
-            run_pipeline(spark, pages, tagger="probe")
+            run_pipeline(spark, pages, SnapshotCatalog(spark, str(tmp_path)),
+                         tagger="probe")
 
 
 class TestCheckpointConfigRoundtrip:
