@@ -37,7 +37,7 @@ import numpy as np
 from scikg_spark.core.neural import (
     LM_DIM, WORD_DIM, _LSTMCell, _log_softmax, _table_from_data,
     _table_to_arrays, word_vectors)
-from scikg_spark.core.train_bptt import _lstm_bwd, _lstm_fwd
+from scikg_spark.core.train_bptt import _lstm_bwd, _lstm_fwd, _momentum_step
 
 UNK = "<unk>"
 
@@ -312,12 +312,7 @@ class LMTrainer:
         loss, n_tok, grads = self.loss_and_grads([sentences[i] for i in order])
         if n_tok == 0:
             return 0.0
-        total = math.sqrt(sum(float((g * g).sum()) for g in grads.values()))
-        scale = self.clip / total if total > self.clip else 1.0
-        for k, p in self._params().items():
-            g = grads[k] * scale + self.wd * p
-            self.vel[k] = self.mom * self.vel[k] + g
-            self._assign(k, (p - self.lr * self.vel[k]).astype(p.dtype))
+        _momentum_step(self, grads)
         return loss
 
     def perplexity(self, sentences, batch: int = 64) -> float:

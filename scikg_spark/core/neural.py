@@ -34,7 +34,8 @@ import hashlib
 
 import numpy as np
 
-from scikg_spark.core.tags import CAP_TAGS, FACT_TAGS, COND_TAGS, POS_TAGS
+from scikg_spark.core.tags import (
+    CAP_TAG2ID, CAP_TAGS, COND_TAGS, FACT_TAGS, POS_TAG2ID, POS_TAGS)
 
 WORD_DIM = 50      # train.py:81-82
 POS_DIM = 6        # ceil(log2(36)), Stmt_Extraction_Net.py:31-36
@@ -175,17 +176,15 @@ class MimoTagger:
     def _inputs(self, batch_words, batch_pos, batch_cap, T):
         B = len(batch_words)
         x = np.zeros((B, T, WORD_DIM), dtype=np.float32)
-        pos2id = {t: i for i, t in enumerate(POS_TAGS)}
-        cap2id = {t: i for i, t in enumerate(CAP_TAGS)}
         for bi, (words, pos, cap) in enumerate(zip(batch_words, batch_pos, batch_cap)):
             n = len(words)
             wv = word_vectors(words, table=self.word_table)
             feat = wv
             if self.use_pos:
-                pe = self.pos_emb[[pos2id.get(p, len(POS_TAGS)) for p in pos]]
+                pe = self.pos_emb[[POS_TAG2ID.get(p, len(POS_TAGS)) for p in pos]]
                 feat = feat + _sigmoid(pe @ self.g_pos) * (pe @ self.w_pos)
             if self.use_cap:
-                ce = self.cap_emb[[cap2id.get(c, len(CAP_TAGS)) for c in cap]]
+                ce = self.cap_emb[[CAP_TAG2ID.get(c, len(CAP_TAGS)) for c in cap]]
                 feat = feat + _sigmoid(ce @ self.g_cap) * (ce @ self.w_cap)
             if self.use_lm:
                 lm = self._lm_features(wv)
@@ -230,7 +229,10 @@ class MimoTagger:
         return np.concatenate([enc_f, enc_b], axis=2)
 
     # -- forward ------------------------------------------------------------
-    def _forward(self, batch_words, batch_pos, batch_cap):
+    def _decode(self, batch_words, batch_pos, batch_cap):
+        """The decoder loop -> ``(fact_logp, cond_logp, lens, hidden)``;
+        ``hidden`` holds the per-step decoder states (B, T, HIDDEN) that the
+        head trainers fit their heads over."""
         lens = np.array([len(w) for w in batch_words])
         B, T = len(batch_words), int(lens.max())
         x = self._inputs(batch_words, batch_pos, batch_cap, T)
@@ -242,9 +244,11 @@ class MimoTagger:
         prev = np.zeros((B, 2 * N_TAGS), dtype=np.float32)  # tag-context state T
         fact_logp = np.empty((B, T, N_TAGS), dtype=np.float32)
         cond_logp = np.empty((B, T, N_TAGS), dtype=np.float32)
+        hidden = np.empty((B, T, HIDDEN), dtype=np.float32)
         for t in range(T):
             hd, cd = self.dec.step(
                 np.concatenate([enc[:, t], prev], axis=1), hd, cd)
+            hidden[:, t] = hd
             lf = hd @ self.head_fact
             fact_p = _log_softmax(lf)
             if self.enhance:
@@ -255,10 +259,13 @@ class MimoTagger:
             fact_logp[:, t] = fact_p
             cond_logp[:, t] = cond_p
             prev = np.concatenate([np.exp(fact_p), np.exp(cond_p)], axis=1)
-        return fact_logp, cond_logp, lens
+        return fact_logp, cond_logp, lens, hidden
 
-    def predict_distrib(self, batch_words, batch_pos, batch_cap):
-        return self._forward(batch_words, batch_pos, batch_cap)
+    def _forward(self, batch_words, batch_pos, batch_cap):
+        """-> ``(fact_logp, cond_logp, lens)``."""
+        return self._decode(batch_words, batch_pos, batch_cap)[:3]
+
+    predict_distrib = _forward
 
     def predict_tags(self, batch_words, batch_pos, batch_cap,
                      threshold_fact=None, threshold_cond=None):
@@ -374,41 +381,51 @@ class MimoEnsemble:
         np.savez_compressed(path, **blob)
 
 
-def _weighted_nll_grad(X, W, y, wts, wd, clip):
-    """Weighted NLL loss + clipped gradient for one linear head (shared by
-    HeadTrainer and ProbeTagger; reference hyperparameter shape
-    utils.py:2938-2955)."""
-    logp = _log_softmax(X @ W)
-    p = np.exp(logp)
-    n = len(y)
-    sw = wts[y]
-    denom = max(sw.sum(), 1e-9)
-    loss = float(-(sw * logp[np.arange(n), y]).sum() / denom)
-    d = p.copy()
-    d[np.arange(n), y] -= 1.0
-    d *= (sw / denom)[:, None]
-    g = X.T @ d + wd * W
-    gn = np.linalg.norm(g)
-    if gn > clip:
-        g = g * (clip / gn)
-    return loss, g
+def _step_heads(owner, vel, feats, ids, weights, lr, wd, mom, clip):
+    """One weighted-NLL momentum-SGD step on ``owner``'s two linear heads,
+    ``head_fact`` and ``head_cond`` (the reference recipe, utils.py:2938-2955,
+    with each head's gradient clipped to ``clip``). ``feats``, ``ids`` and
+    ``weights`` are (fact, cond) pairs of token features, per-statement tag
+    id lists and class weights (None: uniform); ``vel`` holds each head's
+    velocity. Returns (fact_loss, cond_loss)."""
+    losses = []
+    for name, X, seqs, wts in zip(("head_fact", "head_cond"), feats, ids, weights):
+        W = getattr(owner, name)
+        y = np.asarray([t for seq in seqs for t in seq])
+        if wts is None:
+            wts = np.ones(N_TAGS, dtype=np.float32)
+        logp = _log_softmax(X @ W)
+        n = len(y)
+        sw = wts[y]
+        denom = max(sw.sum(), 1e-9)
+        losses.append(float(-(sw * logp[np.arange(n), y]).sum() / denom))
+        d = np.exp(logp)
+        d[np.arange(n), y] -= 1.0
+        d *= (sw / denom)[:, None]
+        g = X.T @ d + wd * W
+        gn = np.linalg.norm(g)
+        if gn > clip:
+            g = g * (clip / gn)
+        vel[name] = mom * vel[name] - lr * g
+        setattr(owner, name, W + vel[name])
+    return tuple(losses)
 
 
 class HeadTrainer:
     """M6-lite: the reference's weighted-NLL training step (class weights
     1000/freq, SGD lr=0.01 wd=5e-4 momentum=0.9, grad-clip 5 — utils.py:2888-2955,
     train.py:143-157) applied to the output heads as a linear probe over the
-    frozen encoder. Full-BPTT training stays offline by design (SURVEY §2.8);
-    this gives the in-repo neural path a working learning step and makes
-    'neural' mode improvable from pseudo-labels without torch.
+    frozen encoder and decoder. Full BPTT through every parameter is
+    :class:`scikg_spark.core.train_bptt.BPTTTrainer`; this head-only step is
+    the cheap distillation path of ``jobs.train_heads``.
     """
 
     def __init__(self, model: MimoTagger, lr=0.01, weight_decay=5e-4,
                  momentum=0.9, clip=5.0):
         self.model = model
         self.lr, self.wd, self.mom, self.clip = lr, weight_decay, momentum, clip
-        self.vel_f = np.zeros_like(model.head_fact)
-        self.vel_c = np.zeros_like(model.head_cond)
+        self.vel = {"head_fact": np.zeros_like(model.head_fact),
+                    "head_cond": np.zeros_like(model.head_cond)}
 
     @staticmethod
     def class_weights(tag_counts, n_tags=N_TAGS):
@@ -419,62 +436,19 @@ class HeadTrainer:
                 w[tag_id] = 1000.0 / count
         return w
 
-    def _encode(self, words, pos, cap):
-        """Frozen encoder + decoder hidden states for one micro-batch."""
-        m = self.model
-        lens = np.array([len(w) for w in words])
-        B, T = len(words), int(lens.max())
-        x = m._inputs(words, pos, cap, T)
-        enc = m._encode_bilstm(x, lens)
-        hd = np.zeros((B, HIDDEN), dtype=np.float32)
-        cd = np.zeros((B, HIDDEN), dtype=np.float32)
-        prev = np.zeros((B, 2 * N_TAGS), dtype=np.float32)
-        hidden = np.empty((B, T, HIDDEN), dtype=np.float32)
-        for t in range(T):
-            hd, cd = m.dec.step(np.concatenate([enc[:, t], prev], axis=1), hd, cd)
-            hidden[:, t] = hd
-            lf = _log_softmax(hd @ m.head_fact)
-            if m.enhance:
-                lc = _log_softmax(
-                    np.concatenate([hd, np.exp(lf)], axis=1) @ m.head_cond)
-            else:
-                lc = _log_softmax(hd @ m.head_cond)
-            prev = np.concatenate([np.exp(lf), np.exp(lc)], axis=1)
-        return hidden, lens
-
     def step(self, words, pos, cap, fact_ids, cond_ids,
              w_fact=None, w_cond=None):
         """One weighted-NLL SGD step on both heads. Tag ids are per-token
         lists aligned with words. Returns (fact_loss, cond_loss)."""
         m = self.model
-        hidden, lens = self._encode(words, pos, cap)
-        # flatten valid tokens
-        feats, yf, yc = [], [], []
-        for b, n in enumerate(lens):
-            feats.append(hidden[b, :n])
-            yf.extend(fact_ids[b])
-            yc.extend(cond_ids[b])
-        H = np.concatenate(feats, axis=0)
-        yf = np.asarray(yf)
-        yc = np.asarray(yc)
-        if w_fact is None:
-            w_fact = np.ones(N_TAGS, dtype=np.float32)
-        if w_cond is None:
-            w_cond = np.ones(N_TAGS, dtype=np.float32)
-
-        loss_f, g_f = _weighted_nll_grad(
-            H, m.head_fact, yf, w_fact, self.wd, self.clip)
+        _, _, lens, hidden = m._decode(words, pos, cap)
+        H = np.concatenate([hidden[b, :n] for b, n in enumerate(lens)], axis=0)
         Xc = H
         if m.enhance:
             Xc = np.concatenate([H, np.exp(_log_softmax(H @ m.head_fact))], axis=1)
-        loss_c, g_c = _weighted_nll_grad(
-            Xc, m.head_cond, yc, w_cond, self.wd, self.clip)
-
-        self.vel_f = self.mom * self.vel_f - self.lr * g_f
-        self.vel_c = self.mom * self.vel_c - self.lr * g_c
-        m.head_fact = m.head_fact + self.vel_f
-        m.head_cond = m.head_cond + self.vel_c
-        return float(loss_f), float(loss_c)
+        return _step_heads(m, self.vel, (H, Xc), (fact_ids, cond_ids),
+                           (w_fact, w_cond), self.lr, self.wd, self.mom,
+                           self.clip)
 
 
 def _collect_params(model: MimoTagger) -> dict:
@@ -546,16 +520,6 @@ def _assign_params(model: MimoTagger, data) -> MimoTagger:
     return model
 
 
-def _check_flags(model: MimoTagger, data) -> None:
-    saved = data["flags"].tolist()
-    mine = [int(model.use_lm), int(model.use_pos), int(model.use_cap),
-            int(model.enhance)]
-    if saved != mine:
-        raise ValueError(
-            f"checkpoint config flags {saved} (use_lm, use_pos, use_cap, "
-            f"enhance) do not match the model's {mine}")
-
-
 def tagger_from_weights(path_or_data) -> MimoTagger:
     """Construct a MimoTagger CONFIGURED FROM the checkpoint's own saved
     flags and load its parameters — no silent hybrid models, no need for the
@@ -598,17 +562,6 @@ def ensemble_from_weights(path: str) -> "MimoEnsemble":
     return ens
 
 
-def load_weights(model: MimoTagger, path: str) -> MimoTagger:
-    """Load parameters in place; the checkpoint's feature-config flags must
-    match the constructor config (a silent hybrid of trained heads over the
-    wrong feature gates would be garbage with no error). Callers that don't
-    know the training config should use :func:`tagger_from_weights`."""
-    data = np.load(path)
-    _check_flags(model, data)
-    model.word_table = _table_from_data(data)
-    return _assign_params(model, data)
-
-
 def parse_model_config(checkpoint_name: str) -> dict:
     """Decode the reference's checkpoint-filename config bits
     (utils.py:2679-2721): the last '_'-separated token before the extension
@@ -638,13 +591,15 @@ def tagger_from_checkpoint_name(name: str, seed: int = 824) -> "MimoTagger | Mim
 
 
 class ProbeTagger:
-    """Distillation tagger: frozen MimoTagger encoder + feature-augmented
-    linear heads. Head input per token = [decoder hidden (300) | CAP one-hot
-    | POS one-hot | 3 position scalars (relative index, distance to nearest
-    VB*, distance to nearest IN)] — skip connections of the same raw features
-    the reference feeds through its embeddings (Stmt_Extraction_Net.py:96-137),
-    which lets a linear probe recover mention-role structure the frozen
-    random recurrence only noisily preserves.
+    """Distillation tagger: feature-augmented linear heads over a frozen
+    MimoTagger's per-step decoder states. Head input per token = [decoder
+    hidden (300) | CAP one-hot | POS one-hot | 3 position scalars (relative
+    index, distance to nearest VB*, distance to nearest IN)] — skip
+    connections of the same raw features the reference feeds through its
+    embeddings (Stmt_Extraction_Net.py:96-137), which let a linear probe
+    recover mention-role structure that a frozen, untrained recurrence only
+    noisily preserves. ``train_step`` is :class:`HeadTrainer`'s head update
+    over these features.
     """
 
     N_FEAT = HIDDEN + (len(CAP_TAGS) + 1) + (len(POS_TAGS) + 1) + 3
@@ -654,14 +609,13 @@ class ProbeTagger:
         rng = np.random.default_rng(seed + 7)
         self.head_fact = _rng_mat(rng, self.N_FEAT, N_TAGS)
         self.head_cond = _rng_mat(rng, self.N_FEAT, N_TAGS)
+        self.vel = {"head_fact": np.zeros_like(self.head_fact),
+                    "head_cond": np.zeros_like(self.head_cond)}
 
     # -- features -----------------------------------------------------------
     def _features(self, words, pos, cap):
         """-> list of (n_i, N_FEAT) arrays, one per statement."""
-        trainer_like = HeadTrainer(self.base)
-        hidden, lens = trainer_like._encode(words, pos, cap)
-        cap2id = {t: i for i, t in enumerate(CAP_TAGS)}
-        pos2id = {t: i for i, t in enumerate(POS_TAGS)}
+        _, _, lens, hidden = self.base._decode(words, pos, cap)
         out = []
         for b, n in enumerate(lens):
             caps_oh = np.zeros((n, len(CAP_TAGS) + 1), dtype=np.float32)
@@ -670,8 +624,8 @@ class ProbeTagger:
             vb_idx = [i for i, p in enumerate(pos[b]) if p.startswith("VB")]
             in_idx = [i for i, p in enumerate(pos[b]) if p == "IN"]
             for i in range(n):
-                caps_oh[i, cap2id.get(cap[b][i], len(CAP_TAGS))] = 1.0
-                pos_oh[i, pos2id.get(pos[b][i], len(POS_TAGS))] = 1.0
+                caps_oh[i, CAP_TAG2ID.get(cap[b][i], len(CAP_TAGS))] = 1.0
+                pos_oh[i, POS_TAG2ID.get(pos[b][i], len(POS_TAGS))] = 1.0
                 extra[i, 0] = i / max(n - 1, 1)
                 extra[i, 1] = min((abs(i - v) for v in vb_idx), default=99) / 10.0
                 extra[i, 2] = min((abs(i - v) for v in in_idx), default=99) / 10.0
@@ -706,29 +660,9 @@ class ProbeTagger:
     # -- train ----------------------------------------------------------------
     def train_step(self, words, pos, cap, fact_ids, cond_ids,
                    w_fact=None, w_cond=None, lr=0.3, wd=5e-4, clip=5.0):
-        if not hasattr(self, "_vel"):
-            self._vel = {}
-        feats = self._features(words, pos, cap)
-        X = np.concatenate(feats, axis=0)
-        yf = np.asarray([t for seq in fact_ids for t in seq])
-        yc = np.asarray([t for seq in cond_ids for t in seq])
-        if w_fact is None:
-            w_fact = np.ones(N_TAGS, dtype=np.float32)
-        if w_cond is None:
-            w_cond = np.ones(N_TAGS, dtype=np.float32)
-        losses = []
-        for name, W, y, wts in (("f", self.head_fact, yf, w_fact),
-                                ("c", self.head_cond, yc, w_cond)):
-            loss, g = _weighted_nll_grad(X, W, y, wts, wd, clip)
-            losses.append(loss)
-            vel = self._vel.get(name)
-            vel = (0.9 * vel - lr * g) if vel is not None else (-lr * g)
-            self._vel[name] = vel
-            if name == "f":
-                self.head_fact = W + vel
-            else:
-                self.head_cond = W + vel
-        return tuple(losses)
+        X = np.concatenate(self._features(words, pos, cap), axis=0)
+        return _step_heads(self, self.vel, (X, X), (fact_ids, cond_ids),
+                           (w_fact, w_cond), lr, wd, 0.9, clip)
 
     # -- persistence ------------------------------------------------------------
     def save(self, path: str):

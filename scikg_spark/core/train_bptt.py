@@ -38,6 +38,7 @@ import numpy as np
 
 from scikg_spark.core.neural import (
     CAP_TAGS, POS_TAGS, _log_softmax, _sigmoid, word_vectors)
+from scikg_spark.core.tags import CAP_TAG2ID, POS_TAG2ID
 
 
 def _lstm_fwd(cell, x, h, c):
@@ -72,6 +73,20 @@ def _lstm_bwd(cell, dh2, dc2, cache, gw, gb):
     dxh = dz @ cell.w.T
     in_dim = cell.w.shape[0] - cell.hidden
     return dxh[:, :in_dim], dxh[:, in_dim:], dc * f
+
+
+def _momentum_step(trainer, grads):
+    """The reference optimizer step for every trainer here: clip the GLOBAL
+    grad norm to ``trainer.clip`` (utils.py:2952), then momentum SGD with
+    weight decay in torch semantics (utils.py:2906) over
+    ``trainer._params()``, storing each new value through
+    ``trainer._assign``."""
+    total = math.sqrt(sum(float((g * g).sum()) for g in grads.values()))
+    scale = trainer.clip / total if total > trainer.clip else 1.0
+    for k, p in trainer._params().items():
+        g = grads[k] * scale + trainer.wd * p
+        trainer.vel[k] = trainer.mom * trainer.vel[k] + g
+        trainer._assign(k, (p - trainer.lr * trainer.vel[k]).astype(p.dtype))
 
 
 def _dlogits(g_logp, g_p, p):
@@ -121,7 +136,7 @@ class BPTTTrainer:
     def loss_and_grads(self, words, pos, cap, fact_ids, cond_ids,
                        w_fact, w_cond):
         """Weighted-NLL loss and gradients for one (already length-sorted)
-        batch. Forward math is kept in lockstep with MimoTagger._forward
+        batch. Forward math is kept in lockstep with MimoTagger._decode
         (equality pinned by tests/test_training.py)."""
         m = self.model
         H = m.enc_f.hidden
@@ -130,9 +145,6 @@ class BPTTTrainer:
         dtype = m.head_fact.dtype
         lens = np.array([len(w) for w in words])
         B, T = len(words), int(lens.max())
-
-        pos2id = {t: i for i, t in enumerate(POS_TAGS)}
-        cap2id = {t: i for i, t in enumerate(CAP_TAGS)}
 
         # ---- inputs (cached per statement) ----
         x = np.zeros((B, T, D), dtype=dtype)
@@ -143,7 +155,7 @@ class BPTTTrainer:
             feat = wv.copy()
             cch: dict = {}
             if m.use_pos:
-                ids = np.array([pos2id.get(p_, len(POS_TAGS)) for p_ in pos[bi]])
+                ids = np.array([POS_TAG2ID.get(p_, len(POS_TAGS)) for p_ in pos[bi]])
                 pe = m.pos_emb[ids]
                 a = pe @ m.g_pos
                 s = _sigmoid(a)
@@ -151,7 +163,7 @@ class BPTTTrainer:
                 feat += s * bp
                 cch.update(pos_ids=ids, pe=pe, s_pos=s, b_pos=bp)
             if m.use_cap:
-                ids = np.array([cap2id.get(c_, len(CAP_TAGS)) for c_ in cap[bi]])
+                ids = np.array([CAP_TAG2ID.get(c_, len(CAP_TAGS)) for c_ in cap[bi]])
                 ce = m.cap_emb[ids]
                 a = ce @ m.g_cap
                 s = _sigmoid(a)
@@ -349,12 +361,7 @@ class BPTTTrainer:
             [words[i] for i in order], [pos[i] for i in order],
             [cap[i] for i in order], [fact_ids[i] for i in order],
             [cond_ids[i] for i in order], w_fact, w_cond)
-        total = math.sqrt(sum(float((g * g).sum()) for g in grads.values()))
-        scale = self.clip / total if total > self.clip else 1.0
-        for k, p in self._params().items():
-            g = grads[k] * scale + self.wd * p
-            self.vel[k] = self.mom * self.vel[k] + g
-            self._assign(k, (p - self.lr * self.vel[k]).astype(p.dtype))
+        _momentum_step(self, grads)
         return loss
 
 
@@ -374,6 +381,9 @@ class EnsembleTrainer:
         e = self.ens
         return {"w_fact": e.w_fact, "b_fact": e.b_fact,
                 "w_cond": e.w_cond, "b_cond": e.b_cond}
+
+    def _assign(self, key, value):
+        setattr(self.ens, key, value)
 
     def step(self, words, pos, cap, fact_ids, cond_ids,
              w_fact=None, w_cond=None):
@@ -422,11 +432,5 @@ class EnsembleTrainer:
         loss /= B
         for g in grads.values():
             g /= B
-
-        total = math.sqrt(sum(float((g * g).sum()) for g in grads.values()))
-        scale = self.clip / total if total > self.clip else 1.0
-        for k, p in self._params().items():
-            g = grads[k] * scale + self.wd * p
-            self.vel[k] = self.mom * self.vel[k] + g
-            setattr(self.ens, k, (p - self.lr * self.vel[k]).astype(p.dtype))
+        _momentum_step(self, grads)
         return float(loss)

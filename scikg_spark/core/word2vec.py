@@ -53,12 +53,6 @@ def write_word2vec_bin(path: str, words, matrix) -> None:
             f.write(b"\n")
 
 
-def lookup_vectors(words, matrix, word2id):
-    """Batch lookup with <unk> fallback (utils.py:234-241 OOV behavior)."""
-    ids = [word2id.get(w.lower(), 1) for w in words]
-    return matrix[ids]
-
-
 def train_skipgram(sentences, dim: int = 50, window: int = 5,
                    negatives: int = 5, epochs: int = 15, lr: float = 0.025,
                    min_count: int = 1, seed: int = 824, batch: int = 1024):

@@ -28,14 +28,13 @@ def main(argv=None):
                              "corpus N times larger)")
     args = parser.parse_args(argv)
 
-    from scikg_spark.core.decoder import post_decode
     from scikg_spark.core.parsing import parse_stmt_blocks
-    from scikg_spark.core.serialize import serialize_tuple
     from scikg_spark.pipeline.evaluate import summarize_match, tuple_match_scores
-    from scikg_spark.pipeline.fused import extract_tuples
+    from scikg_spark.pipeline.fused import _decode_rows, extract_tuples
     from scikg_spark.pipeline.gold import gold_frames_from_blocks
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.stage1 import extract_statements, verify_extraction
+    from scikg_spark.pipeline.stage2 import TUPLES_SCHEMA
 
     names = ["eval", "train"] if args.corpus == "both" else [args.corpus]
     blocks = []
@@ -56,24 +55,13 @@ def main(argv=None):
         stmts = extract_statements(pages)
         pred = extract_tuples(stmts, tagger="gold", gold=gold).cache()
 
-        # truth side: the pure-Python reference decode of the same gold tags
-        truth_rows = []
-        for (doc_id, stmt_id), (words, fact, cond) in oracle.items():
-            for kind, tags in (("f", fact), ("c", cond)):
-                for idx, rec in enumerate(post_decode(words, tags)):
-                    subj, p_, obj = serialize_tuple(rec)
-                    slot = lambda s: None if s == "NIL" else {
-                        "text": s[0], "start": s[1], "end": s[2]}
-                    truth_rows.append(
-                        (doc_id, stmt_id, kind, idx + 1, subj, p_, obj,
-                         slot(rec[0]), slot(rec[1]), slot(rec[2]),
-                         slot(rec[3]), slot(rec[4])))
-        span = "struct<text:string,start:int,end:int>"
+        # truth side: the pure-Python reference decode of the same gold tags,
+        # through the pipeline's own row builder (no url: the score keys on
+        # doc_id, stmt_id and kind)
         truth = spark.createDataFrame(
-            truth_rows,
-            schema=(f"doc_id string, stmt_id int, kind string, tuple_idx int, "
-                    f"subj string, pred string, obj string, s_c {span}, "
-                    f"s_a {span}, p {span}, o_c {span}, o_a {span}"))
+            [row for (doc_id, stmt_id), (words, fact, cond) in oracle.items()
+             for row in _decode_rows(None, doc_id, stmt_id, words, fact, cond)],
+            schema=TUPLES_SCHEMA)
 
         summary = {r.kind: r for r in
                    summarize_match(tuple_match_scores(pred, truth)).collect()}

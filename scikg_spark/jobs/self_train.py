@@ -49,7 +49,7 @@ def main(argv=None):
 
     from scikg_spark.core.correct import ARCorrecter
     from scikg_spark.core.neural import HeadTrainer, ProbeTagger
-    from scikg_spark.core.tags import COND_TAG2ID, FACT_TAG2ID
+    from scikg_spark.jobs.train_bptt import pack_labeled, token_accuracy
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.stage1 import (
         build_pages_from_documents, extract_statements)
@@ -72,30 +72,9 @@ def main(argv=None):
                     docs.filter(F.col("_part") == part).drop("_part")))
 
         # holdout labels come from the bootstrap teacher (rule tagger)
-        hold_rows = tag_statements(statements_of(0), mode="rule").collect()
-
-        def pack(rows):
-            return ([list(r["words"]) for r in rows],
-                    [list(r["postags"]) for r in rows],
-                    [list(r["caps"]) for r in rows],
-                    [[FACT_TAG2ID[t] for t in r["fact_tags"]] for r in rows],
-                    [[COND_TAG2ID[t] for t in r["cond_tags"]] for r in rows])
-
-        hw, hp, hc, hyf, hyc = pack(hold_rows)
-
+        holdout = pack_labeled(
+            tag_statements(statements_of(0), mode="rule").collect())
         probe = ProbeTagger(seed=824)
-
-        def holdout_acc():
-            preds = probe.predict_tags(hw, hp, hc)
-            hit = tot = 0
-            for (ft, ct), gf, gc in zip(preds, hyf, hyc):
-                for t, g in zip(ft, gf):
-                    hit += int(FACT_TAG2ID[t] == g)
-                    tot += 1
-                for t, g in zip(ct, gc):
-                    hit += int(COND_TAG2ID[t] == g)
-                    tot += 1
-            return round(hit / max(tot, 1), 4)
 
         import tempfile
 
@@ -125,7 +104,7 @@ def main(argv=None):
                     stmts, mode="probe", weights_path=wpath, ar=ar,
                     use_tc=args.tc, use_sh=args.sh, use_del=args.del_
                 ).collect()
-            got = pack(rows)
+            got = pack_labeled(rows)
             for acc_list, new in zip(accum, got):
                 acc_list.extend(new)
 
@@ -145,13 +124,13 @@ def main(argv=None):
                 "part": part,
                 "pseudo_labeled": len(rows),
                 "accumulated": len(tw),
-                "holdout_acc": holdout_acc(),
+                "holdout_acc": round(token_accuracy(probe, *holdout), 4),
             })
 
         probe.save(args.out)
         print(json.dumps({
             "parts": args.parts,
-            "holdout_statements": len(hw),
+            "holdout_statements": len(holdout[0]),
             "iterations": history,
             "train_sec": round(time.time() - t0, 1),
             "weights": args.out,

@@ -45,27 +45,32 @@ CONFIGS = {
 FALLBACK_THIRD = ("poscap", dict(use_lm=False, use_pos=True, use_cap=True))
 
 
+def pack_labeled(rows):
+    """Tagged statement rows -> (words, pos, cap, yf, yc) lists, the tags as
+    ids."""
+    from scikg_spark.core.tags import COND_TAG2ID, FACT_TAG2ID
+
+    return ([list(r["words"]) for r in rows],
+            [list(r["postags"]) for r in rows],
+            [list(r["caps"]) for r in rows],
+            [[FACT_TAG2ID[t] for t in r["fact_tags"]] for r in rows],
+            [[COND_TAG2ID[t] for t in r["cond_tags"]] for r in rows])
+
+
 def load_labeled(documents: str, cores: int):
     """documents table -> rule-labeled (words, pos, cap, yf, yc) lists."""
-    from scikg_spark.core.tags import COND_TAG2ID, FACT_TAG2ID
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.stage1 import (
         build_pages_from_documents, extract_statements)
     from scikg_spark.pipeline.stage2 import tag_statements
 
-    spark = get_spark(app_name="scikg-train-bptt", cores=cores)
+    spark = get_spark(app_name="scikg-train", cores=cores)
     try:
         docs = spark.read.parquet(f"{documents}/documents.parquet")
         stmts = extract_statements(build_pages_from_documents(docs))
-        labeled = tag_statements(stmts, mode="rule").collect()
+        return pack_labeled(tag_statements(stmts, mode="rule").collect())
     finally:
         spark.stop()
-    words = [list(r["words"]) for r in labeled]
-    pos = [list(r["postags"]) for r in labeled]
-    cap = [list(r["caps"]) for r in labeled]
-    yf = [[FACT_TAG2ID[t] for t in r["fact_tags"]] for r in labeled]
-    yc = [[COND_TAG2ID[t] for t in r["cond_tags"]] for r in labeled]
-    return words, pos, cap, yf, yc
 
 
 def triple_prf(model, words, pos, cap, yf, yc):

@@ -3,7 +3,8 @@ neural tagger's output heads to the rule tagger's labels and save a weights
 checkpoint consumable by ``tag_statements(mode='neural', weights_path=...)``.
 
 The encoder is frozen (head-only probe — M6-lite, see core/neural.HeadTrainer);
-full BPTT is an offline concern. Statements are drawn from the synthesized
+full BPTT is jobs/train_bptt.py, whose labeled-data loader and holdout
+metrics this job shares. Statements are drawn from the synthesized
 pages of the given documents table; labels come from the deterministic rule
 tagger, mirroring how self_train/self_train.py:309-323 retrains on its own
 pseudo-labels.
@@ -39,29 +40,15 @@ def main(argv=None):
 
     from scikg_spark.core.neural import (
         HeadTrainer, MimoTagger, ProbeTagger, save_weights)
-    from scikg_spark.core.tags import COND_TAG2ID, FACT_TAG2ID
-    from scikg_spark.pipeline.session import get_spark
-    from scikg_spark.pipeline.stage1 import (
-        build_pages_from_documents, extract_statements)
-    from scikg_spark.pipeline.stage2 import tag_statements
+    from scikg_spark.jobs.train_bptt import (
+        load_labeled, token_accuracy, triple_prf)
 
-    spark = get_spark(app_name="scikg-train-heads", cores=args.cores)
-    try:
-        docs = spark.read.parquet(f"{args.documents}/documents.parquet")
-        stmts = extract_statements(build_pages_from_documents(docs))
-        labeled = tag_statements(stmts, mode="rule").collect()
-    finally:
-        spark.stop()
-
-    words = [list(r["words"]) for r in labeled]
-    pos = [list(r["postags"]) for r in labeled]
-    cap = [list(r["caps"]) for r in labeled]
-    yf = [[FACT_TAG2ID[t] for t in r["fact_tags"]] for r in labeled]
-    yc = [[COND_TAG2ID[t] for t in r["cond_tags"]] for r in labeled]
+    words, pos, cap, yf, yc = load_labeled(args.documents, args.cores)
 
     n_hold = max(1, int(len(words) * args.holdout))
     hold = slice(0, n_hold)
     train = slice(n_hold, None)
+    holdout = (words[hold], pos[hold], cap[hold], yf[hold], yc[hold])
 
     if args.probe:
         model = ProbeTagger(seed=824)
@@ -72,19 +59,7 @@ def main(argv=None):
     w_fact = HeadTrainer.class_weights(Counter(t for s in yf[train] for t in s))
     w_cond = HeadTrainer.class_weights(Counter(t for s in yc[train] for t in s))
 
-    def token_accuracy():
-        preds = model.predict_tags(words[hold], pos[hold], cap[hold])
-        hit = tot = 0
-        for (ft, ct), gf, gc in zip(preds, yf[hold], yc[hold]):
-            for t, g in zip(ft, gf):
-                hit += int(FACT_TAG2ID[t] == g)
-                tot += 1
-            for t, g in zip(ct, gc):
-                hit += int(COND_TAG2ID[t] == g)
-                tot += 1
-        return hit / max(tot, 1)
-
-    acc0 = token_accuracy()
+    acc0 = token_accuracy(model, *holdout)
     idx = np.arange(len(words[train]))
     rng = np.random.default_rng(0)
     tw, tp, tc = words[train], pos[train], cap[train]
@@ -102,25 +77,10 @@ def main(argv=None):
                 loss_f, loss_c = model.train_step(*step_args, lr=args.lr)
             else:
                 loss_f, loss_c = trainer.step(*step_args)
-    acc1 = token_accuracy()
-
-    # triple-level quality: decode the model's holdout tags and score them
-    # against the rule labels via the reference's own tuple metric
-    from scikg_spark.core.decoder import post_decode
-    from scikg_spark.core.metrics import match_score
-    from scikg_spark.core.tags import COND_TAGS, FACT_TAGS
-
-    p_sum = r_sum = n_scored = 0.0
-    preds = model.predict_tags(words[hold], pos[hold], cap[hold])
-    for (pf, pc), w, gf, gc in zip(preds, words[hold], yf[hold], yc[hold]):
-        for pred_tags, gold_ids, vocab in (
-                (pf, gf, FACT_TAGS), (pc, gc, COND_TAGS)):
-            truth = post_decode(w, [vocab[g] for g in gold_ids])
-            got = post_decode(w, pred_tags)
-            p, r, _, _ = match_score(truth, got)
-            p_sum += p
-            r_sum += r
-            n_scored += 1
+    acc1 = token_accuracy(model, *holdout)
+    # triple-level quality: the model's holdout tags decoded and scored
+    # against the rule labels with the reference's own tuple metric
+    precision, recall, _ = triple_prf(model, *holdout)
 
     if args.probe:
         model.save(args.out)
@@ -134,8 +94,8 @@ def main(argv=None):
         "final_loss_cond": round(loss_c, 4),
         "holdout_token_acc_before": round(acc0, 4),
         "holdout_token_acc_after": round(acc1, 4),
-        "holdout_triple_precision": round(p_sum / max(n_scored, 1), 4),
-        "holdout_triple_recall": round(r_sum / max(n_scored, 1), 4),
+        "holdout_triple_precision": precision,
+        "holdout_triple_recall": recall,
         "train_sec": round(time.time() - t0, 1),
         "weights": args.out,
     }))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scikg_spark.pipeline.fused import extract_tuples
 from scikg_spark.pipeline.stage1 import _page_html, extract_statements
+from scikg_spark.pipeline.stage2 import _check_tagger
 from scikg_spark.pipeline.stage3 import attach_entities, link_entities
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
 
@@ -92,7 +93,9 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Commits every stage to ``catalog``; returns the committed tables. With
     ``resume``, reuses the longest committed prefix of the stage chain and
-    recomputes the first stage it cannot reuse and every stage after it."""
+    recomputes the first stage it cannot reuse and every stage after it.
+    Bad tagger arguments raise ValueError before any stage runs."""
+    _check_tagger(tagger, gold, weights_path)
     corrections = corrections or {}
     head = [
         (("statements",), lambda out: [extract_statements(pages, lang=lang)]),
@@ -121,6 +124,7 @@ def run_pipeline_incremental(
     is global), but over the mention vocabulary, never the corpus. The
     tables equal a full :func:`run_pipeline` over the combined corpus.
     Returns ``{"tables": frames, "new_statements": n, "new_tuples": n}``."""
+    _check_tagger(tagger, gold, weights_path)
     corrections = corrections or {}
 
     def unseen(name, delta):

@@ -32,19 +32,27 @@ TUPLES_SCHEMA = (
 _MODELS = ("neural", "probe", "ensemble")
 
 
-def _tag_input(statements: DataFrame, mode: str, gold: DataFrame | None,
-               weights_path: str | None) -> DataFrame:
-    """Check the tagger arguments; -> the frame the tagging pass reads: the
-    statements, with the gold tags broadcast-joined on (doc_id, stmt_id) in
-    gold mode — the P/R gate path."""
+def _check_tagger(mode: str, gold: DataFrame | None,
+                  weights_path: str | None) -> None:
+    """Raise ValueError on tagger arguments no tagging pass can run with."""
     if weights_path is not None and mode not in _MODELS:
         raise ValueError(
             "weights_path requires mode='neural', 'probe' or 'ensemble'")
     if mode == "probe" and weights_path is None:
         raise ValueError("probe mode needs a trained weights_path")
+    if mode == "gold" and gold is None:
+        raise ValueError("gold mode needs a gold DataFrame")
+    if mode not in ("rule", "gold") + _MODELS:
+        raise ValueError(f"unknown tagger mode {mode!r}")
+
+
+def _tag_input(statements: DataFrame, mode: str, gold: DataFrame | None,
+               weights_path: str | None) -> DataFrame:
+    """Check the tagger arguments; -> the frame the tagging pass reads: the
+    statements, with the gold tags broadcast-joined on (doc_id, stmt_id) in
+    gold mode — the P/R gate path."""
+    _check_tagger(mode, gold, weights_path)
     if mode == "gold":
-        if gold is None:
-            raise ValueError("gold mode needs a gold DataFrame")
         return statements.join(
             F.broadcast(gold.select("doc_id", "stmt_id", "fact_tags", "cond_tags")),
             on=["doc_id", "stmt_id"],
@@ -52,8 +60,6 @@ def _tag_input(statements: DataFrame, mode: str, gold: DataFrame | None,
         ).select(
             "url", "doc_id", "stmt_id", "words", "postags", "caps",
             "fact_tags", "cond_tags")
-    if mode != "rule" and mode not in _MODELS:
-        raise ValueError(f"unknown tagger mode {mode!r}")
     return statements
 
 

@@ -111,3 +111,45 @@ class TestCrossValidate:
         # deterministic: same seed, same result
         again = cross_validate(pred, truth, num_pass=5)
         assert again == out
+
+
+def test_gate_scores_a_planted_corpus_perfectly(tmp_path):
+    """The gate job's code path end to end over a planted two-statement
+    TSV in the reference's block format: the gold pipeline and the truth
+    decode agree, so P = R = 1.0. This is not the reference-corpus gate."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from conftest import session_env
+
+    tsv = tmp_path / "stmts-eval.tsv"
+    tsv.write_text(
+        "===== d1 stmt1 =====\n"
+        "WORD\tCats\teat\tfish\n"
+        "POSTAG\tNNS\tVBP\tNN\n"
+        "CAP\tB-C\tB-P\tB-C\n"
+        "f1\tB-f1C\tB-f2P\tB-f3C\n"
+        "===== d1 stmt2 =====\n"
+        "WORD\tglucose\tactivates\tinsulin\tin\tliver\n"
+        "POSTAG\tNN\tVBZ\tNN\tIN\tNN\n"
+        "CAP\tB-C\tB-P\tB-C\tB-P\tB-C\n"
+        "f1\tB-f1C\tB-f2P\tB-f3C\tO\tO\n"
+        "c1\tO\tO\tB-c1C\tB-c2P\tB-c3C\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "from scikg_spark.jobs import evaluate_gate as g\n"
+        "g.REFERENCE_TSVS = {'eval': %r}\n"
+        "g.main(['--corpus', 'eval', '--cores', '2'])\n" % (repo, str(tsv)))
+    proc = subprocess.run([sys.executable, "-c", code], env=session_env(tmp_path),
+                          cwd=str(tmp_path), capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["statements"] == 2
+    assert result["stage1_byte_mismatches"] == 0
+    assert result["triples_emitted"] == 3
+    assert result["precision"] == result["recall"] == 1.0
+

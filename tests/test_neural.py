@@ -96,17 +96,6 @@ class TestPaddingMask:
         together = m.predict_tags(*zip(*[short, long_]))[0]
         assert alone == together
 
-    def test_flags_mismatch_rejected(self, tmp_path):
-        import pytest
-
-        from scikg_spark.core.neural import load_weights, save_weights
-
-        src = MimoTagger(seed=3, use_lm=True, use_pos=False)
-        path = str(tmp_path / "w.npz")
-        save_weights(src, path)
-        with pytest.raises(ValueError, match="config flags"):
-            load_weights(MimoTagger(seed=3), path)
-
 
 class TestConfigCodec:
     def test_single_model_bits(self):

@@ -293,6 +293,23 @@ def test_resume_recomputes_from_first_uncommitted_stage(spark, tmp_path):
         assert content(cat.read(t)) == content(clean.read(t)), t
 
 
+def test_bad_tagger_arguments_fail_before_the_first_commit(spark, tmp_path):
+    """Probe mode without ``weights_path`` raises from either entry point
+    before stage 1 runs, so no ``statements`` snapshot is committed."""
+    import pytest
+
+    from scikg_spark.pipeline.runner import (
+        run_pipeline, run_pipeline_incremental)
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+    pages = _sf0001_pages(spark, 0, 5)
+    for entry in (run_pipeline, run_pipeline_incremental):
+        catalog = SnapshotCatalog(spark, str(tmp_path / entry.__name__))
+        with pytest.raises(ValueError, match="weights_path"):
+            entry(spark, pages, catalog, tagger="probe")
+        assert catalog.manifest("statements") is None
+
+
 def test_incremental_counts_after_rollback(spark, tmp_path):
     """new_tuples counts the rows appended to the snapshot being extended
     (the current pointer), not the newest snapshot in the history: after

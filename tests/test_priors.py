@@ -56,8 +56,8 @@ class TestWord2Vec:
     def test_bin_roundtrip(self, tmp_path):
         import numpy as np
 
-        from scikg_spark.core.word2vec import (
-            lookup_vectors, read_word2vec_bin, write_word2vec_bin)
+        from scikg_spark.core.neural import hash_word_vectors, word_vectors
+        from scikg_spark.core.word2vec import read_word2vec_bin, write_word2vec_bin
 
         rng = np.random.default_rng(5)
         words = ["cats", "dogs", "t-cells"]
@@ -68,10 +68,10 @@ class TestWord2Vec:
         assert matrix.shape == (5, 50)  # + <pad>, <unk>
         assert word2id["cats"] == 2
         assert np.allclose(matrix[word2id["dogs"]], mat[1])
-        # OOV falls back to <unk> (row 1); lookup lowercases
-        got = lookup_vectors(["CATS", "zebra"], matrix, word2id)
+        # the lookup lowercases; an OOV word gets its hash vector
+        got = word_vectors(["CATS", "zebra"], table=(matrix, word2id))
         assert np.allclose(got[0], mat[0])
-        assert np.allclose(got[1], matrix[1])
+        assert np.array_equal(got[1], hash_word_vectors(["zebra"])[0])
 
     def test_max_words(self, tmp_path):
         import numpy as np

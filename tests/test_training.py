@@ -70,7 +70,7 @@ def test_training_is_deterministic():
 
 
 def test_save_load_roundtrip(tmp_path):
-    from scikg_spark.core.neural import load_weights, save_weights
+    from scikg_spark.core.neural import save_weights, tagger_from_weights
 
     model = MimoTagger(seed=1)
     trainer = HeadTrainer(model, lr=0.3)
@@ -78,7 +78,7 @@ def test_save_load_roundtrip(tmp_path):
     trainer.step(words, pos, cap, yf, yc)
     path = str(tmp_path / "w.npz")
     save_weights(model, path)
-    other = load_weights(MimoTagger(seed=99), path)
+    other = tagger_from_weights(path)
     assert model.predict_tags(words, pos, cap) == other.predict_tags(words, pos, cap)
 
 
@@ -545,3 +545,57 @@ class TestLanguageModel:
         # and the hash-path install still works once the table is cleared
         model.word_table = None
         load_lm_into(model, path)
+
+
+_CLI_SCRIPT = """
+import json, sys
+sys.path.insert(0, %(repo)r)
+import pandas as pd
+from scikg_spark.jobs import self_train, train_bptt, train_heads
+from scikg_spark.pipeline.stage2 import _load_tagger
+
+docs = %(docs)r
+pd.read_parquet(%(src)r).head(10).to_parquet(docs + "/documents.parquet")
+common = ["--documents", docs, "--cores", "2"]
+train_heads.main(common + ["--out", docs + "/heads.npz", "--epochs", "1"])
+train_heads.main(common + ["--out", docs + "/probe.npz", "--epochs", "1",
+                           "--probe"])
+self_train.main(common + ["--out", docs + "/self.npz", "--parts", "1",
+                          "--epochs-per-part", "1"])
+train_bptt.main(common + ["--out", docs + "/bptt.npz", "--epochs", "1"])
+words, pos, cap = ["cells", "express", "receptors"], ["NNS", "VBP", "NNS"], \\
+    ["B-C", "B-P", "B-C"]
+tagged = {}
+for mode, name in (("neural", "heads"), ("probe", "probe"),
+                   ("probe", "self"), ("neural", "bptt")):
+    (ft, ct), = _load_tagger(mode, f"{docs}/{name}.npz")([words], [pos], [cap])
+    tagged[name] = [len(ft), len(ct)]
+print(json.dumps(tagged))
+"""
+
+
+def test_training_clis_write_checkpoints_stage2_loads(tmp_path):
+    """train_heads (linear and --probe), self_train and train_bptt run end
+    to end over a 10-document corpus in one child process, and stage 2
+    loads each checkpoint for its tagger mode and tags a statement."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from conftest import TESTDATA, session_env
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = _CLI_SCRIPT % {
+        "repo": repo, "docs": str(tmp_path),
+        "src": os.path.join(TESTDATA, "sf0.001", "documents.parquet")}
+    proc = subprocess.run([sys.executable, "-c", code], env=session_env(tmp_path),
+                          cwd=str(tmp_path), capture_output=True, text=True,
+                          timeout=900)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.strip().splitlines()
+    assert json.loads(lines[-1]) == {
+        name: [3, 3] for name in ("heads", "probe", "self", "bptt")}
+    reports = [json.loads(line) for line in lines[:-1]]
+    assert [r["weights"] for r in reports] == [
+        str(tmp_path / f"{n}.npz") for n in ("heads", "probe", "self", "bptt")]
