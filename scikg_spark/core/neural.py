@@ -31,6 +31,7 @@ minimize padding waste (the reference's O1 sort, MIMO_Extractor.py:71-79).
 from __future__ import annotations
 
 import hashlib
+import os
 
 import numpy as np
 
@@ -312,7 +313,7 @@ class MimoEnsemble:
 
     Default ``models`` are the reference's 3 single configs (LM / POS / CAP
     bits, utils.py:2679-2698) with fixture weights; pass trained taggers (or
-    load a checkpoint via :func:`ensemble_from_weights`) for a real ensemble.
+    load a checkpoint via :func:`load_tagger`) for a real ensemble.
     """
 
     def __init__(self, seed=824, batch_size=50, models=None):
@@ -364,21 +365,6 @@ class MimoEnsemble:
                     [FACT_TAGS[j] for j in f_ids[k, :n]],
                     [COND_TAGS[j] for j in c_ids[k, :n]])
         return results
-
-    # -- persistence: singles + combiner in one checkpoint ---------------------
-    def save(self, path: str) -> None:
-        blob = {"ens.w_fact": self.w_fact, "ens.b_fact": self.b_fact,
-                "ens.w_cond": self.w_cond, "ens.b_cond": self.b_cond,
-                "ens.n_models": np.array([len(self.models)])}
-        for i, m in enumerate(self.models):
-            for k, v in _collect_params(m).items():
-                blob[f"m{i}.{k}"] = v
-        for m in self.models:  # the singles share one frozen word table
-            if m.word_table is not None:
-                blob["wv.matrix"], blob["wv.vocab"] = \
-                    _table_to_arrays(m.word_table)
-                break
-        np.savez_compressed(path, **blob)
 
 
 def _step_heads(owner, vel, feats, ids, weights, lr, wd, mom, clip):
@@ -488,47 +474,15 @@ def _table_from_data(data):
             {w: i for i, w in enumerate(tokens)})
 
 
-def save_weights(model: MimoTagger, path: str) -> None:
-    """Persist the full parameter dict (the broadcastable checkpoint — the
-    rebuild's analog of the reference's .torch state dicts, utils.py:2696).
-    A frozen word table rides along ("wv.matrix"/"wv.vocab") so executor-side
-    loads are self-contained — no separate .bin to ship."""
-    blob = _collect_params(model)
-    if model.word_table is not None:
-        blob["wv.matrix"], blob["wv.vocab"] = _table_to_arrays(model.word_table)
-    np.savez_compressed(path, **blob)
-
-
-def _assign_params(model: MimoTagger, data) -> MimoTagger:
-    """Strict parameter walk: every parameter of ``model`` must be present in
-    ``data`` with the exact shape."""
-    for key, current in _collect_params(model).items():
-        if key == "flags":
-            continue
-        if key not in data:
-            raise ValueError(f"checkpoint is missing parameter {key!r}")
-        loaded = data[key]
-        if loaded.shape != current.shape:
-            raise ValueError(
-                f"checkpoint parameter {key!r} has shape {loaded.shape}, "
-                f"model expects {current.shape}")
-        obj, attr = model, key
-        if "." in key:
-            head, attr = key.split(".")
-            obj = getattr(model, head)
-        setattr(obj, attr, loaded.astype(np.float32))
-    return model
-
-
-def tagger_from_weights(path_or_data) -> MimoTagger:
-    """Construct a MimoTagger CONFIGURED FROM the checkpoint's own saved
-    flags and load its parameters — no silent hybrid models, no need for the
-    caller to know the training config."""
-    data = np.load(path_or_data) if isinstance(path_or_data, str) else path_or_data
-    lm, pos, cap, enhance = (bool(int(b)) for b in data["flags"].tolist())
+def _tagger_from(data, table, prefix: str = "") -> MimoTagger:
+    """The MimoTagger stored under ``prefix`` in ``data``, CONFIGURED FROM
+    its own saved flags (no silent hybrid models), over the frozen word
+    ``table``. Strict parameter walk: every parameter must be present with
+    the exact shape."""
+    lm, pos, cap, enhance = (bool(int(b)) for b in data[prefix + "flags"].tolist())
     # lm_type rides implicitly in the saved w_lm width (the reference's
     # lm_type switch is likewise a pure shape choice)
-    lm_width = int(data["w_lm"].shape[0])
+    lm_width = int(data[prefix + "w_lm"].shape[0])
     by_width = {v: k for k, v in LM_DIMS.items()}
     if lm_width not in by_width:
         raise ValueError(
@@ -536,58 +490,23 @@ def tagger_from_weights(path_or_data) -> MimoTagger:
             f"({sorted(LM_DIMS.values())})")
     model = MimoTagger(use_lm=lm, use_pos=pos, use_cap=cap, enhance=enhance,
                        lm_type=by_width[lm_width])
-    model.word_table = _table_from_data(data)
-    return _assign_params(model, data)
-
-
-def ensemble_from_weights(path: str) -> "MimoEnsemble":
-    """Load a MimoEnsemble checkpoint written by MimoEnsemble.save: each
-    single model reconstructs from its own saved flags, the per-tag combiner
-    weights load alongside."""
-    data = np.load(path)
-    n = int(data["ens.n_models"][0])
-    table = _table_from_data(data)  # one shared frozen table, stored once
-    models = []
-    for i in range(n):
-        sub = {k[len(f"m{i}."):]: data[k] for k in data.files
-               if k.startswith(f"m{i}.")}
-        m = tagger_from_weights(sub)
-        m.word_table = table
-        models.append(m)
-    ens = MimoEnsemble(models=models)
-    ens.w_fact = data["ens.w_fact"].astype(np.float32)
-    ens.b_fact = data["ens.b_fact"].astype(np.float32)
-    ens.w_cond = data["ens.w_cond"].astype(np.float32)
-    ens.b_cond = data["ens.b_cond"].astype(np.float32)
-    return ens
-
-
-def parse_model_config(checkpoint_name: str) -> dict:
-    """Decode the reference's checkpoint-filename config bits
-    (utils.py:2679-2721): the last '_'-separated token before the extension
-    is either 9 bits (single model: 3 bits each for LM / POSTAG / CAP feature
-    gating; POSCAP ignored by the reference itself) or 3 bits (ensemble:
-    which single models participate)."""
-    bits_str = checkpoint_name.split("_")[-1].split(".")[0]
-    bits = [bool(int(b)) for b in bits_str]
-    if len(bits) == 9:
-        return {"kind": "single", "lm": bits[:3], "postag": bits[3:6],
-                "cap": bits[6:9]}
-    if len(bits) == 3:
-        return {"kind": "ensemble", "use_lm": bits[0], "use_postag": bits[1],
-                "use_cap": bits[2]}
-    raise ValueError(f"config token {bits_str!r} is neither 9 nor 3 bits")
-
-
-def tagger_from_checkpoint_name(name: str, seed: int = 824) -> "MimoTagger | MimoEnsemble":
-    """Construct the matching (fixture-weighted) model for a reference-style
-    checkpoint name — the plug-compatibility shim for checkpoint wiring
-    (MIMO_Extractor.py:237-246, 255-268)."""
-    cfg = parse_model_config(name)
-    if cfg["kind"] == "ensemble":
-        return MimoEnsemble(seed=seed)
-    return MimoTagger(seed=seed, use_lm=any(cfg["lm"]),
-                      use_pos=any(cfg["postag"]), use_cap=any(cfg["cap"]))
+    model.word_table = table
+    for key, current in _collect_params(model).items():
+        if key == "flags":
+            continue
+        if prefix + key not in data:
+            raise ValueError(f"checkpoint is missing parameter {prefix + key!r}")
+        loaded = data[prefix + key]
+        if loaded.shape != current.shape:
+            raise ValueError(
+                f"checkpoint parameter {prefix + key!r} has shape "
+                f"{loaded.shape}, model expects {current.shape}")
+        obj, attr = model, key
+        if "." in key:
+            head, attr = key.split(".")
+            obj = getattr(model, head)
+        setattr(obj, attr, loaded.astype(np.float32))
+    return model
 
 
 class ProbeTagger:
@@ -664,18 +583,81 @@ class ProbeTagger:
         return _step_heads(self, self.vel, (X, X), (fact_ids, cond_ids),
                            (w_fact, w_cond), lr, wd, 0.9, clip)
 
-    # -- persistence ------------------------------------------------------------
-    def save(self, path: str):
-        np.savez_compressed(path, probe_head_fact=self.head_fact,
-                            probe_head_cond=self.head_cond,
-                            **_collect_params(self.base))
 
-    @classmethod
-    def load(cls, path: str) -> "ProbeTagger":
-        """Reconstructs the frozen base FROM the checkpoint's saved flags —
-        a probe trained over a differently-configured base loads exactly."""
-        data = np.load(path)
-        probe = cls(base=tagger_from_weights(data))
+# -- checkpoints: one npz layout and one writer/loader for every tagger kind --
+
+_CHECKPOINT_DIR = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))), "checkpoints")
+# the committed trained checkpoint that each model mode defaults to in the
+# pipeline and scaling CLIs
+DEFAULT_CHECKPOINTS = {
+    "neural": os.path.join(_CHECKPOINT_DIR, "bptt_best_single.npz"),
+    "ensemble": os.path.join(_CHECKPOINT_DIR, "ensemble_111.npz"),
+}
+_COMBINER = ("w_fact", "b_fact", "w_cond", "b_cond")
+
+
+def _checkpoint_kind(path: str) -> str:
+    """'ensemble', 'probe' or 'single': the tagger kind that the npz at
+    ``path`` holds, read from its own keys. ValueError for any other npz,
+    such as a language-model checkpoint."""
+    with np.load(path) as data:
+        keys = set(data.files)
+    for key, kind in (("ens.n_models", "ensemble"),
+                      ("probe_head_fact", "probe"), ("flags", "single")):
+        if key in keys:
+            return kind
+    raise ValueError(
+        f"{path} is not a tagger checkpoint: it holds none of the keys "
+        "'ens.n_models', 'probe_head_fact' or 'flags'")
+
+
+def save_tagger(model, path: str) -> None:
+    """Persist a MimoTagger, MimoEnsemble or ProbeTagger as one npz, the
+    rebuild's analog of the reference's .torch state dicts (utils.py:2696):
+    a single's parameters and ``flags`` unprefixed; an ensemble's singles
+    under ``m{i}.`` and its combiner under ``ens.``; a probe's two heads as
+    ``probe_head_*`` over its base's parameters. The frozen word table the
+    singles share rides once ("wv.matrix"/"wv.vocab"), so executor-side
+    loads are self-contained — no separate .bin to ship."""
+    if isinstance(model, MimoEnsemble):
+        blob = {f"ens.{k}": getattr(model, k) for k in _COMBINER}
+        blob["ens.n_models"] = np.array([len(model.models)])
+        singles = {f"m{i}.": m for i, m in enumerate(model.models)}
+    elif isinstance(model, ProbeTagger):
+        blob = {"probe_head_fact": model.head_fact,
+                "probe_head_cond": model.head_cond}
+        singles = {"": model.base}
+    else:
+        blob, singles = {}, {"": model}
+    for prefix, m in singles.items():
+        blob.update({prefix + k: v for k, v in _collect_params(m).items()})
+    table = next((m.word_table for m in singles.values()
+                  if m.word_table is not None), None)
+    if table is not None:
+        blob["wv.matrix"], blob["wv.vocab"] = _table_to_arrays(table)
+    np.savez_compressed(path, **blob)
+
+
+def load_tagger(path: str):
+    """-> the MimoTagger, MimoEnsemble or ProbeTagger that a
+    :func:`save_tagger` checkpoint holds, of the kind its own keys name;
+    every single is configured from its saved flags and gets the stored
+    word table. ValueError for an npz that is no tagger checkpoint."""
+    kind = _checkpoint_kind(path)
+    with np.load(path) as data:
+        table = _table_from_data(data)
+        if kind == "ensemble":
+            n = int(data["ens.n_models"][0])
+            ens = MimoEnsemble(
+                models=[_tagger_from(data, table, f"m{i}.") for i in range(n)])
+            for k in _COMBINER:
+                setattr(ens, k, data[f"ens.{k}"].astype(np.float32))
+            return ens
+        base = _tagger_from(data, table)
+        if kind == "single":
+            return base
+        probe = ProbeTagger(base=base)
         probe.head_fact = data["probe_head_fact"].astype(np.float32)
         probe.head_cond = data["probe_head_cond"].astype(np.float32)
         return probe

@@ -99,7 +99,7 @@ def _dlogits(g_logp, g_p, p):
 class BPTTTrainer:
     """Trains EVERY active parameter of a MimoTagger by backprop through
     time. ``trainer.step(...)`` is one reference-recipe SGD step; weights
-    stay plug-compatible with ``save_weights`` / ``tag_statements(
+    stay plug-compatible with ``neural.save_tagger`` / ``tag_statements(
     mode='neural', weights_path=...)``."""
 
     def __init__(self, model, lr=0.01, weight_decay=5e-4, momentum=0.9,

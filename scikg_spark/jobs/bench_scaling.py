@@ -99,16 +99,11 @@ def main(argv=None):
             # trained-checkpoint inference path: statements materialize once
             # (they are tagger-independent), the timed region is the numpy
             # BiLSTM tag pass + decode on executors
-            import os as _os
-
+            from scikg_spark.core.neural import DEFAULT_CHECKPOINTS
             from scikg_spark.pipeline.fused import extract_tuples
             from scikg_spark.pipeline.stage1 import extract_statements
 
-            weights = args.weights or _os.path.join(
-                _os.path.dirname(_os.path.dirname(_os.path.dirname(
-                    _os.path.abspath(__file__)))), "checkpoints",
-                "ensemble_111.npz" if args.tagger == "ensemble"
-                else "bptt_best_single.npz")
+            weights = args.weights or DEFAULT_CHECKPOINTS[args.tagger]
             result["weights"] = weights
             stmts = extract_statements(pages).cache()
             result["statements"] = stmts.count()

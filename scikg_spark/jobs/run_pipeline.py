@@ -57,21 +57,14 @@ def main(argv=None):
     parser.add_argument("--sh", action="store_true", help="SH length filter")
     args = parser.parse_args(argv)
 
-    import os
-
+    from scikg_spark.core.neural import DEFAULT_CHECKPOINTS
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.stage1 import build_pages_from_documents
     from scikg_spark.pipeline.stage4 import SnapshotCatalog
     from scikg_spark.pipeline.runner import (
         run_pipeline, run_pipeline_incremental)
 
-    weights = args.weights
-    if args.tagger in ("neural", "ensemble") and not weights:
-        ckpt_dir = os.path.join(os.path.dirname(os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))), "checkpoints")
-        weights = os.path.join(
-            ckpt_dir, "ensemble_111.npz" if args.tagger == "ensemble"
-            else "bptt_best_single.npz")
+    weights = args.weights or DEFAULT_CHECKPOINTS.get(args.tagger)
 
     spark = get_spark(app_name="scikg-pipeline", cores=args.cores)
     try:

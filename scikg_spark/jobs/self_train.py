@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import tempfile
 import time
 
 
@@ -48,7 +49,7 @@ def main(argv=None):
     from pyspark.sql import functions as F
 
     from scikg_spark.core.correct import ARCorrecter
-    from scikg_spark.core.neural import HeadTrainer, ProbeTagger
+    from scikg_spark.core.neural import HeadTrainer, ProbeTagger, save_tagger
     from scikg_spark.jobs.train_bptt import pack_labeled, token_accuracy
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.stage1 import (
@@ -76,58 +77,58 @@ def main(argv=None):
             tag_statements(statements_of(0), mode="rule").collect())
         probe = ProbeTagger(seed=824)
 
-        import tempfile
-
-        tmp_weights_dir = tempfile.mkdtemp(prefix="scikg_selftrain_")
         accum = ([], [], [], [], [])
         history = []
         rng = np.random.default_rng(0)
         t0 = time.time()
-        for part in range(1, args.parts + 1):
-            stmts = statements_of(part)
-            # parts after the first are pseudo-labeled by the CURRENT probe;
-            # part 1 bootstraps from the rule teacher
-            if part == 1:
-                rows = tag_statements(
-                    stmts, mode="rule", ar=ar, use_tc=args.tc,
-                    use_sh=args.sh, use_del=args.del_).collect()
-            else:
-                # DISTRIBUTED pseudo-labeling: ship the current probe weights
-                # to the executors (local checkpoint path here; an
-                # sc.broadcast / shared store on a real cluster) and run
-                # predict + the correction chain inside the Arrow UDFs —
-                # only the SURVIVING labeled rows (the training arrays)
-                # come back to the driver, never the raw corpus.
-                wpath = f"{tmp_weights_dir}/probe_part{part}.npz"
-                probe.save(wpath)
-                rows = tag_statements(
-                    stmts, mode="probe", weights_path=wpath, ar=ar,
-                    use_tc=args.tc, use_sh=args.sh, use_del=args.del_
-                ).collect()
-            got = pack_labeled(rows)
-            for acc_list, new in zip(accum, got):
-                acc_list.extend(new)
+        # holds the per-part probe checkpoints that the pseudo-labelling
+        # pass loads; removed when the loop ends
+        with tempfile.TemporaryDirectory(prefix="scikg_selftrain_") as tmp_dir:
+            for part in range(1, args.parts + 1):
+                stmts = statements_of(part)
+                # parts after the first are pseudo-labeled by the CURRENT probe;
+                # part 1 bootstraps from the rule teacher
+                if part == 1:
+                    rows = tag_statements(
+                        stmts, mode="rule", ar=ar, use_tc=args.tc,
+                        use_sh=args.sh, use_del=args.del_).collect()
+                else:
+                    # DISTRIBUTED pseudo-labeling: ship the current probe weights
+                    # to the executors (local checkpoint path here; an
+                    # sc.broadcast / shared store on a real cluster) and run
+                    # predict + the correction chain inside the Arrow UDFs —
+                    # only the SURVIVING labeled rows (the training arrays)
+                    # come back to the driver, never the raw corpus.
+                    wpath = f"{tmp_dir}/probe_part{part}.npz"
+                    save_tagger(probe, wpath)
+                    rows = tag_statements(
+                        stmts, mode="probe", weights_path=wpath, ar=ar,
+                        use_tc=args.tc, use_sh=args.sh, use_del=args.del_
+                    ).collect()
+                got = pack_labeled(rows)
+                for acc_list, new in zip(accum, got):
+                    acc_list.extend(new)
 
-            tw, tp, tc_, tyf, tyc = accum
-            wf = HeadTrainer.class_weights(Counter(t for s in tyf for t in s))
-            wc = HeadTrainer.class_weights(Counter(t for s in tyc for t in s))
-            idx = np.arange(len(tw))
-            for _ in range(args.epochs_per_part):
-                rng.shuffle(idx)
-                for s in range(0, len(idx), 64):
-                    b = idx[s:s + 64]
-                    probe.train_step(
-                        [tw[i] for i in b], [tp[i] for i in b],
-                        [tc_[i] for i in b], [tyf[i] for i in b],
-                        [tyc[i] for i in b], wf, wc, lr=args.lr)
-            history.append({
-                "part": part,
-                "pseudo_labeled": len(rows),
-                "accumulated": len(tw),
-                "holdout_acc": round(token_accuracy(probe, *holdout), 4),
-            })
+                tw, tp, tc_, tyf, tyc = accum
+                wf = HeadTrainer.class_weights(Counter(t for s in tyf for t in s))
+                wc = HeadTrainer.class_weights(Counter(t for s in tyc for t in s))
+                idx = np.arange(len(tw))
+                for _ in range(args.epochs_per_part):
+                    rng.shuffle(idx)
+                    for s in range(0, len(idx), 64):
+                        b = idx[s:s + 64]
+                        probe.train_step(
+                            [tw[i] for i in b], [tp[i] for i in b],
+                            [tc_[i] for i in b], [tyf[i] for i in b],
+                            [tyc[i] for i in b], wf, wc, lr=args.lr)
+                history.append({
+                    "part": part,
+                    "pseudo_labeled": len(rows),
+                    "accumulated": len(tw),
+                    "holdout_acc": round(token_accuracy(probe, *holdout), 4),
+                })
 
-        probe.save(args.out)
+        save_tagger(probe, args.out)
         print(json.dumps({
             "parts": args.parts,
             "holdout_statements": len(holdout[0]),

@@ -10,9 +10,9 @@
   3. optionally train the per-tag ensemble combiner over the frozen singles
      (train_ensemble.py:1-147 / Stmt_Extraction_Net.py:429-480 semantics),
   4. report holdout token accuracy and triple P/R/F1 (the reference's own
-     tuple metric) per model and for the ensemble; save checkpoints
-     consumable by ``tag_statements(mode='neural'|'ensemble',
-     weights_path=...)``.
+     tuple metric) per model and for the ensemble; save checkpoints with
+     ``neural.save_tagger``, consumable by
+     ``tag_statements(mode='neural'|'ensemble', weights_path=...)``.
 
 The reference trains 1000 epochs at lr 0.01 (train.py:159-163); this job
 defaults to a compressed schedule (higher lr, fewer epochs) — pass
@@ -200,7 +200,7 @@ def main(argv=None):
 
     import numpy as np
 
-    from scikg_spark.core.neural import HeadTrainer, save_weights
+    from scikg_spark.core.neural import HeadTrainer, save_tagger
     from collections import Counter
 
     args.word_table = None
@@ -284,12 +284,12 @@ def main(argv=None):
                          [tc[i] for i in b], [tf[i] for i in b],
                          [tcond[i] for i in b], w_fact, w_cond)
         evaluate("ensemble", ens)
-        ens.save(args.ensemble_out)
+        save_tagger(ens, args.ensemble_out)
         report["ensemble_weights"] = args.ensemble_out
         if args.out:  # also save the best single
             best = max(configs, key=lambda n:
                        report["models"][n]["holdout_triple_f1"])
-            save_weights(singles[best], args.out)
+            save_tagger(singles[best], args.out)
             report["best_single"] = best
             report["weights"] = args.out
     else:
@@ -299,7 +299,7 @@ def main(argv=None):
             cfg = configs[args.config]
         model = train_single(cfg, data, args, w_fact, w_cond)
         evaluate(args.config, model)
-        save_weights(model, args.out)
+        save_tagger(model, args.out)
         report["weights"] = args.out
 
     report["train_sec"] = round(time.time() - t0, 1)

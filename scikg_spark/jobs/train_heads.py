@@ -1,6 +1,8 @@
 """Distillation job (the in-repo half of the self-training loop): fit the
-neural tagger's output heads to the rule tagger's labels and save a weights
-checkpoint consumable by ``tag_statements(mode='neural', weights_path=...)``.
+neural tagger's output heads to the rule tagger's labels and save the model
+with ``neural.save_tagger``: a checkpoint consumable by
+``tag_statements(mode='neural', weights_path=...)``, or by mode='probe'
+with ``--probe``.
 
 The encoder is frozen (head-only probe — M6-lite, see core/neural.HeadTrainer);
 full BPTT is jobs/train_bptt.py, whose labeled-data loader and holdout
@@ -39,7 +41,7 @@ def main(argv=None):
     from collections import Counter
 
     from scikg_spark.core.neural import (
-        HeadTrainer, MimoTagger, ProbeTagger, save_weights)
+        HeadTrainer, MimoTagger, ProbeTagger, save_tagger)
     from scikg_spark.jobs.train_bptt import (
         load_labeled, token_accuracy, triple_prf)
 
@@ -82,10 +84,7 @@ def main(argv=None):
     # against the rule labels with the reference's own tuple metric
     precision, recall, _ = triple_prf(model, *holdout)
 
-    if args.probe:
-        model.save(args.out)
-    else:
-        save_weights(model, args.out)
+    save_tagger(model, args.out)
     print(json.dumps({
         "mode": "probe" if args.probe else "linear",
         "statements": len(words),

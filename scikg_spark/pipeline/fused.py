@@ -81,18 +81,16 @@ def extract_tuples(statements: DataFrame, ar=None, use_tc=False,
     return source.mapInPandas(gen, schema=TUPLES_SCHEMA)
 
 
-def pages_to_tuples(pages: DataFrame, lang: str | None = "en",
-                    ar=None, use_tc=False, use_tcdel=False,
-                    use_sh=False, use_del=False) -> DataFrame:
+def pages_to_tuples(pages: DataFrame, lang: str | None = "en") -> DataFrame:
     """pages -> tuples in ONE Python pass (extract_text + parse + rule tag +
-    correct + decode), for builds that keep no statements table:
+    decode, no correction), for builds that keep no statements table:
     ``ops.kg.materialize_kg_tables`` and bench.py's live rows. The
     checkpointing runner keeps the two-pass form, because it commits the
     statements for resume and catch-up."""
-    correct = _corrector(ar, use_tc, use_tcdel, use_sh, use_del)
 
     def gen(batches):
         return _tuple_batches(
-            _statement_batches(batches), _load_tagger("rule", None), correct)
+            _statement_batches(batches), _load_tagger("rule", None),
+            correct=None)
 
     return _page_html(pages, lang).mapInPandas(gen, schema=TUPLES_SCHEMA)

@@ -29,12 +29,15 @@ TUPLES_SCHEMA = (
     f"s_c {_SPAN}, s_a {_SPAN}, p {_SPAN}, o_c {_SPAN}, o_a {_SPAN}"
 )
 
-_MODELS = ("neural", "probe", "ensemble")
+# model mode -> the kind of tagger checkpoint its weights_path must hold
+_MODELS = {"neural": "single", "probe": "probe", "ensemble": "ensemble"}
 
 
 def _check_tagger(mode: str, gold: DataFrame | None,
                   weights_path: str | None) -> None:
-    """Raise ValueError on tagger arguments no tagging pass can run with."""
+    """Raise ValueError on tagger arguments no tagging pass can run with,
+    including a checkpoint of another kind than the mode loads: the driver
+    reads its npz keys, so a wrong file fails before any executor work."""
     if weights_path is not None and mode not in _MODELS:
         raise ValueError(
             "weights_path requires mode='neural', 'probe' or 'ensemble'")
@@ -42,8 +45,16 @@ def _check_tagger(mode: str, gold: DataFrame | None,
         raise ValueError("probe mode needs a trained weights_path")
     if mode == "gold" and gold is None:
         raise ValueError("gold mode needs a gold DataFrame")
-    if mode not in ("rule", "gold") + _MODELS:
+    if mode not in ("rule", "gold", *_MODELS):
         raise ValueError(f"unknown tagger mode {mode!r}")
+    if weights_path is not None:
+        from scikg_spark.core.neural import _checkpoint_kind
+
+        kind = _checkpoint_kind(weights_path)
+        if kind != _MODELS[mode]:
+            raise ValueError(
+                f"mode {mode!r} needs a checkpoint of kind {_MODELS[mode]!r}; "
+                f"{weights_path} is of kind {kind!r}")
 
 
 def _tag_input(statements: DataFrame, mode: str, gold: DataFrame | None,
@@ -71,20 +82,11 @@ def _load_tagger(mode: str, weights_path: str | None):
         return None
     if mode == "rule":
         return lambda words, postags, caps: map(rule_tag, words, postags, caps)
-    from scikg_spark.core.neural import (
-        MimoEnsemble, MimoTagger, ProbeTagger, ensemble_from_weights,
-        tagger_from_weights)
+    from scikg_spark.core.neural import MimoEnsemble, MimoTagger, load_tagger
 
-    if mode == "probe":
-        model = ProbeTagger.load(weights_path)
-    elif weights_path is None:
-        model = MimoEnsemble() if mode == "ensemble" else MimoTagger()
-    elif mode == "neural":
-        # the checkpoint's own flags decide the model config
-        model = tagger_from_weights(weights_path)
-    else:
-        model = ensemble_from_weights(weights_path)
-    return model.predict_tags
+    if weights_path is not None:  # _check_tagger matched its kind to mode
+        return load_tagger(weights_path).predict_tags
+    return (MimoEnsemble() if mode == "ensemble" else MimoTagger()).predict_tags
 
 
 def _corrector(ar: ARCorrecter | None, use_tc: bool, use_tcdel: bool,

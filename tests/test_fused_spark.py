@@ -70,7 +70,7 @@ def test_fused_with_corrections(spark):
 
 
 def test_fused_probe_equals_core_chain(spark, tmp_path):
-    from scikg_spark.core.neural import ProbeTagger
+    from scikg_spark.core.neural import ProbeTagger, load_tagger, save_tagger
     from scikg_spark.core.tags import COND_TAG2ID, FACT_TAG2ID
 
     # tiny trained probe
@@ -84,9 +84,9 @@ def test_fused_probe_equals_core_chain(spark, tmp_path):
     for _ in range(4):
         probe.train_step(w, p, c, yf, yc)
     path = str(tmp_path / "probe.npz")
-    probe.save(path)
+    save_tagger(probe, path)
 
     fused = extract_tuples(stmts, tagger="probe", weights_path=path).collect()
     assert sorted(map(_key, fused)) == _reference(
-        rows, ProbeTagger.load(path).predict_tags(w, p, c))
+        rows, load_tagger(path).predict_tags(w, p, c))
     assert len(fused) > 0

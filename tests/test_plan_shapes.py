@@ -284,7 +284,7 @@ def test_materialized_read_runs_no_job(spark, table):
 def stage2_inputs(spark, tmp_path_factory):
     """Materialized statements (so stage 1's pass is not in the plan), a
     gold frame of their rule tags and a tiny trained probe checkpoint."""
-    from scikg_spark.core.neural import ProbeTagger
+    from scikg_spark.core.neural import ProbeTagger, save_tagger
     from scikg_spark.pipeline.stage1 import (
         build_pages_from_documents, extract_statements)
     from scikg_spark.pipeline.stage2 import tag_statements
@@ -299,7 +299,7 @@ def stage2_inputs(spark, tmp_path_factory):
     toy = ([["a", "b", "c"]], [["NN", "VBZ", "NN"]], [["B-C", "B-P", "B-C"]])
     probe.train_step(*toy, [[1, 2, 3]], [[1, 2, 3]])
     path = str(tmp_path_factory.mktemp("probe") / "probe.npz")
-    probe.save(path)
+    save_tagger(probe, path)
     return stmts, {"gold": {"gold": gold}, "probe": {"weights_path": path}}
 
 

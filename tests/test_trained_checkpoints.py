@@ -43,17 +43,17 @@ def _prf(model, data):
 
 
 def test_single_checkpoint_meets_quality_gate(fresh_eval):
-    from scikg_spark.core.neural import tagger_from_weights
+    from scikg_spark.core.neural import load_tagger
 
-    p, r, f1 = _prf(tagger_from_weights(SINGLE), fresh_eval)
+    p, r, f1 = _prf(load_tagger(SINGLE), fresh_eval)
     assert p >= 0.95 and r >= 0.95, (p, r)
 
 
 def test_ensemble_checkpoint_at_least_as_good_as_single(fresh_eval):
-    from scikg_spark.core.neural import ensemble_from_weights, tagger_from_weights
+    from scikg_spark.core.neural import load_tagger
 
-    _, _, f1_single = _prf(tagger_from_weights(SINGLE), fresh_eval)
-    p, r, f1_ens = _prf(ensemble_from_weights(ENSEMBLE), fresh_eval)
+    _, _, f1_single = _prf(load_tagger(SINGLE), fresh_eval)
+    p, r, f1_ens = _prf(load_tagger(ENSEMBLE), fresh_eval)
     assert p >= 0.95 and r >= 0.95, (p, r)
     assert f1_ens >= f1_single - 1e-9, (f1_ens, f1_single)
 
@@ -83,12 +83,12 @@ def test_ensemble_contains_trained_lm_bit_model():
     import numpy as np
 
     from scikg_spark.core.lm import LanguageModel
-    from scikg_spark.core.neural import ensemble_from_weights
+    from scikg_spark.core.neural import load_tagger
 
     lm_path = os.path.join(CKPT_DIR, "lm_200d.npz")
     if not os.path.exists(lm_path):
         pytest.skip("lm checkpoint not present")
-    ens = ensemble_from_weights(ENSEMBLE)
+    ens = load_tagger(ENSEMBLE)
     lm_models = [m for m in ens.models if m.use_lm]
     assert len(lm_models) == 1
     lm = LanguageModel.load(lm_path)
@@ -109,7 +109,7 @@ def test_checkpoints_carry_trained_word_table():
 
     from scikg_spark.core.lm import LanguageModel
     from scikg_spark.core.neural import (
-        ensemble_from_weights, tagger_from_weights, word_vectors)
+        load_tagger, word_vectors)
     from scikg_spark.core.word2vec import read_word2vec_bin
 
     wv_bin = os.path.join(CKPT_DIR, "word_vectors_50.bin")
@@ -117,8 +117,8 @@ def test_checkpoints_carry_trained_word_table():
         pytest.skip("word-vector checkpoint not present")
     bin_matrix, bin_w2i = read_word2vec_bin(wv_bin)
 
-    single = tagger_from_weights(SINGLE)
-    ens = ensemble_from_weights(ENSEMBLE)
+    single = load_tagger(SINGLE)
+    ens = load_tagger(ENSEMBLE)
     lm = LanguageModel.load(os.path.join(CKPT_DIR, "lm_200d.npz"))
     for model in (single, *ens.models, lm):
         assert model.word_table is not None

@@ -1,10 +1,15 @@
 """M6-lite head training: weighted NLL decreases, accuracy on the training
 signal improves, and the step honors the reference hyperparameter shapes."""
 
-import numpy as np
+import os
 
-from scikg_spark.core.neural import HeadTrainer, MimoTagger
+import numpy as np
+import pytest
+
+from scikg_spark.core.neural import DEFAULT_CHECKPOINTS, HeadTrainer, MimoTagger
 from scikg_spark.core.tags import FACT_TAG2ID, COND_TAG2ID
+
+CKPT_DIR = os.path.dirname(DEFAULT_CHECKPOINTS["neural"])
 
 
 def _training_batch(n_stmts=30, length=8, seed=3):
@@ -70,20 +75,20 @@ def test_training_is_deterministic():
 
 
 def test_save_load_roundtrip(tmp_path):
-    from scikg_spark.core.neural import save_weights, tagger_from_weights
+    from scikg_spark.core.neural import load_tagger, save_tagger
 
     model = MimoTagger(seed=1)
     trainer = HeadTrainer(model, lr=0.3)
     words, pos, cap, yf, yc = _training_batch(n_stmts=5)
     trainer.step(words, pos, cap, yf, yc)
     path = str(tmp_path / "w.npz")
-    save_weights(model, path)
-    other = tagger_from_weights(path)
+    save_tagger(model, path)
+    other = load_tagger(path)
     assert model.predict_tags(words, pos, cap) == other.predict_tags(words, pos, cap)
 
 
 def test_trained_weights_flow_through_spark(spark, tmp_path):
-    from scikg_spark.core.neural import save_weights
+    from scikg_spark.core.neural import save_tagger
     from scikg_spark.pipeline.stage1 import (
         build_pages_from_documents, extract_statements)
     from scikg_spark.pipeline.stage2 import tag_statements
@@ -94,7 +99,7 @@ def test_trained_weights_flow_through_spark(spark, tmp_path):
     for _ in range(5):
         trainer.step(words, pos, cap, yf, yc)
     path = str(tmp_path / "heads.npz")
-    save_weights(model, path)
+    save_tagger(model, path)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(20)
     stmts = extract_statements(build_pages_from_documents(docs)).cache()
@@ -150,14 +155,14 @@ class TestProbeTagger:
         assert hit / tot > 0.9  # feature-augmented probe must learn the task
 
     def test_probe_save_load_roundtrip(self, tmp_path):
-        from scikg_spark.core.neural import ProbeTagger
+        from scikg_spark.core.neural import ProbeTagger, load_tagger, save_tagger
 
         probe = ProbeTagger(seed=1)
         stmts = ([["a", "b", "c"]], [["NN", "VBZ", "NN"]], [["B-C", "B-P", "B-C"]])
         probe.train_step(*stmts, [[1, 2, 3]], [[1, 2, 3]])
         path = str(tmp_path / "probe.npz")
-        probe.save(path)
-        other = ProbeTagger.load(path)
+        save_tagger(probe, path)
+        other = load_tagger(path)
         assert probe.predict_tags(*stmts) == other.predict_tags(*stmts)
 
     def test_probe_mode_requires_weights(self, spark, tmp_path):
@@ -183,29 +188,90 @@ class TestProbeTagger:
                          tagger="probe")
 
 
+@pytest.mark.parametrize("mode,kind", [
+    ("neural", "probe"), ("neural", "ensemble"), ("probe", "single"),
+    ("neural", "lm"), ("ensemble", "lm"), ("probe", "lm")])
+def test_runner_refuses_a_checkpoint_of_another_kind(spark, tmp_path, mode, kind):
+    """Both runner entry points read the checkpoint's kind from its npz keys
+    on the driver and raise before the first commit when the mode loads
+    another kind; an LM checkpoint is no tagger checkpoint at all."""
+    from scikg_spark.core.neural import ProbeTagger, save_tagger
+    from scikg_spark.pipeline.runner import (
+        run_pipeline, run_pipeline_incremental)
+    from scikg_spark.pipeline.stage1 import build_pages_from_documents
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+    from conftest import TESTDATA
+
+    paths = {"single": DEFAULT_CHECKPOINTS["neural"],
+             "ensemble": DEFAULT_CHECKPOINTS["ensemble"],
+             "lm": os.path.join(CKPT_DIR, "lm_200d.npz"),
+             "probe": str(tmp_path / "probe.npz")}
+    save_tagger(ProbeTagger(seed=1), paths["probe"])
+    if not os.path.exists(paths[kind]):
+        pytest.skip("committed checkpoint not present")
+    docs = spark.read.parquet(
+        os.path.join(TESTDATA, "sf0.001", "documents.parquet")).limit(20)
+    pages = build_pages_from_documents(docs)
+    for entry in (run_pipeline, run_pipeline_incremental):
+        catalog = SnapshotCatalog(spark, str(tmp_path / entry.__name__))
+        with pytest.raises(ValueError, match="checkpoint"):
+            entry(spark, pages, catalog, tagger=mode,
+                  weights_path=paths[kind])
+        assert catalog.manifest("statements") is None
+
+
 class TestCheckpointConfigRoundtrip:
     def test_nondefault_flags_roundtrip_via_tagger_from_weights(self, tmp_path):
-        from scikg_spark.core.neural import (
-            MimoTagger, save_weights, tagger_from_weights)
+        from scikg_spark.core.neural import MimoTagger, load_tagger, save_tagger
 
         src = MimoTagger(seed=3, use_lm=True, use_pos=False, enhance=False)
         path = str(tmp_path / "w.npz")
-        save_weights(src, path)
-        loaded = tagger_from_weights(path)
+        save_tagger(src, path)
+        loaded = load_tagger(path)
         assert loaded.use_lm and not loaded.use_pos and not loaded.enhance
         stmts = ([["a", "b"]], [["NN", "VBZ"]], [["B-C", "B-P"]])
         assert src.predict_tags(*stmts) == loaded.predict_tags(*stmts)
 
     def test_probe_load_rebuilds_base_from_flags(self, tmp_path):
-        from scikg_spark.core.neural import MimoTagger, ProbeTagger
+        from scikg_spark.core.neural import (
+            MimoTagger, ProbeTagger, load_tagger, save_tagger)
 
         probe = ProbeTagger(base=MimoTagger(seed=2, use_lm=True, use_pos=False))
         stmts = ([["x", "y", "z"]], [["NN", "IN", "NN"]], [["B-C", "B-P", "B-C"]])
         probe.train_step(*stmts, [[1, 2, 3]], [[1, 2, 3]])
         path = str(tmp_path / "p.npz")
-        probe.save(path)
-        loaded = ProbeTagger.load(path)
+        save_tagger(probe, path)
+        loaded = load_tagger(path)
         assert loaded.base.use_lm and not loaded.base.use_pos
+        assert probe.predict_tags(*stmts) == loaded.predict_tags(*stmts)
+
+    def test_probe_keeps_its_base_word_table(self, tmp_path):
+        """A probe over a base holding the trained word table stores that
+        table, so the loaded probe featurizes (and tags) as it was trained."""
+        from scikg_spark.core.neural import (
+            MimoTagger, ProbeTagger, load_tagger, save_tagger)
+        from scikg_spark.core.word2vec import read_word2vec_bin
+
+        wv_bin = os.path.join(CKPT_DIR, "word_vectors_50.bin")
+        if not os.path.exists(wv_bin):
+            pytest.skip("word-vector checkpoint not present")
+        base = MimoTagger(seed=3)
+        base.word_table = read_word2vec_bin(wv_bin)
+        probe = ProbeTagger(base=base)
+        word2id = base.word_table[1]
+        words = [w for w in word2id if word2id[w] > 1][:4]
+        stmts = ([words], [["NN", "VBZ", "IN", "NN"]], [["O"] * 4])
+        probe.train_step(*stmts, [[1, 2, 0, 3]], [[0, 3, 1, 2]])
+        path = str(tmp_path / "p.npz")
+        save_tagger(probe, path)
+        loaded = load_tagger(path)
+        assert loaded.base.word_table is not None
+        np.testing.assert_array_equal(loaded.base.word_table[0],
+                                      base.word_table[0])
+        assert loaded.base.word_table[1] == word2id
+        np.testing.assert_array_equal(loaded._features(*stmts)[0],
+                                      probe._features(*stmts)[0])
         assert probe.predict_tags(*stmts) == loaded.predict_tags(*stmts)
 
 
@@ -368,7 +434,7 @@ class TestBPTT:
         assert losses[-1] < losses[0] * 0.5, (losses[0], losses[-1])
 
     def test_bptt_weights_flow_through_neural_mode(self, tmp_path):
-        from scikg_spark.core.neural import save_weights, tagger_from_weights
+        from scikg_spark.core.neural import load_tagger, save_tagger
 
         model = MimoTagger(seed=13)
         tr = BPTTTrainer(model, lr=0.05)
@@ -376,8 +442,8 @@ class TestBPTT:
         for _ in range(5):
             tr.step(words, pos, cap, yf, yc)
         path = str(tmp_path / "bptt.npz")
-        save_weights(model, path)
-        loaded = tagger_from_weights(path)
+        save_tagger(model, path)
+        loaded = load_tagger(path)
         assert model.predict_tags(words, pos, cap) == \
             loaded.predict_tags(words, pos, cap)
 
@@ -405,7 +471,7 @@ class TestEnsembleTraining:
         assert losses[-1] < losses[0] * 0.9, (losses[0], losses[-1])
 
     def test_ensemble_save_load_roundtrip(self, tmp_path):
-        from scikg_spark.core.neural import MimoEnsemble, ensemble_from_weights
+        from scikg_spark.core.neural import MimoEnsemble, load_tagger, save_tagger
 
         ens = MimoEnsemble(seed=30, models=[
             MimoTagger(seed=31, use_lm=False, use_pos=True, use_cap=False),
@@ -413,15 +479,15 @@ class TestEnsembleTraining:
         words, pos, cap, yf, yc = _training_batch(n_stmts=4)
         EnsembleTrainer(ens, lr=0.1).step(words, pos, cap, yf, yc)
         path = str(tmp_path / "ens.npz")
-        ens.save(path)
-        other = ensemble_from_weights(path)
+        save_tagger(ens, path)
+        other = load_tagger(path)
         assert len(other.models) == 2
         assert other.models[0].use_pos and not other.models[0].use_cap
         assert ens.predict_tags(words, pos, cap) == \
             other.predict_tags(words, pos, cap)
 
     def test_ensemble_weights_flow_through_spark(self, spark, tmp_path):
-        from scikg_spark.core.neural import MimoEnsemble
+        from scikg_spark.core.neural import MimoEnsemble, save_tagger
         from scikg_spark.pipeline.stage1 import (
             build_pages_from_documents, extract_statements)
         from scikg_spark.pipeline.stage2 import tag_statements
@@ -430,7 +496,7 @@ class TestEnsembleTraining:
             MimoTagger(seed=41, use_lm=False, use_pos=True, use_cap=False),
             MimoTagger(seed=42, use_lm=False, use_pos=False, use_cap=True)])
         path = str(tmp_path / "ens.npz")
-        ens.save(path)
+        save_tagger(ens, path)
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet").limit(10)
         stmts = extract_statements(build_pages_from_documents(docs))
@@ -560,7 +626,7 @@ common = ["--documents", docs, "--cores", "2"]
 train_heads.main(common + ["--out", docs + "/heads.npz", "--epochs", "1"])
 train_heads.main(common + ["--out", docs + "/probe.npz", "--epochs", "1",
                            "--probe"])
-self_train.main(common + ["--out", docs + "/self.npz", "--parts", "1",
+self_train.main(common + ["--out", docs + "/self.npz", "--parts", "2",
                           "--epochs-per-part", "1"])
 train_bptt.main(common + ["--out", docs + "/bptt.npz", "--epochs", "1"])
 words, pos, cap = ["cells", "express", "receptors"], ["NNS", "VBP", "NNS"], \\
@@ -577,7 +643,9 @@ print(json.dumps(tagged))
 def test_training_clis_write_checkpoints_stage2_loads(tmp_path):
     """train_heads (linear and --probe), self_train and train_bptt run end
     to end over a 10-document corpus in one child process, and stage 2
-    loads each checkpoint for its tagger mode and tags a statement."""
+    loads each checkpoint for its tagger mode and tags a statement.
+    self_train's second part pseudo-labels with a probe checkpoint that it
+    writes to a temporary directory, which is gone when the job ends."""
     import json
     import os
     import subprocess
@@ -589,10 +657,12 @@ def test_training_clis_write_checkpoints_stage2_loads(tmp_path):
     code = _CLI_SCRIPT % {
         "repo": repo, "docs": str(tmp_path),
         "src": os.path.join(TESTDATA, "sf0.001", "documents.parquet")}
-    proc = subprocess.run([sys.executable, "-c", code], env=session_env(tmp_path),
+    env = dict(session_env(tmp_path), TMPDIR=str(tmp_path))
+    proc = subprocess.run([sys.executable, "-c", code], env=env,
                           cwd=str(tmp_path), capture_output=True, text=True,
                           timeout=900)
     assert proc.returncode == 0, proc.stderr[-3000:]
+    assert not list(tmp_path.glob("scikg_selftrain_*"))
     lines = proc.stdout.strip().splitlines()
     assert json.loads(lines[-1]) == {
         name: [3, 3] for name in ("heads", "probe", "self", "bptt")}
