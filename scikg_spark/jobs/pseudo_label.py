@@ -21,6 +21,10 @@ def main(argv=None):
     parser.add_argument("--out", required=True, help="output dir")
     parser.add_argument("--tagger", default="neural",
                         choices=["neural", "ensemble", "rule"])
+    parser.add_argument("--weights",
+                        help="trained .npz checkpoint for --tagger "
+                             "neural/ensemble (default: the committed "
+                             "bptt_best_single/ensemble_111)")
     parser.add_argument("--ar-fact", help="association-rule file (fact head)")
     parser.add_argument("--ar-cond", help="association-rule file (condition head)")
     parser.add_argument("--tc", action="store_true")
@@ -33,6 +37,7 @@ def main(argv=None):
     args = parser.parse_args(argv)
 
     from scikg_spark.core.correct import ARCorrecter
+    from scikg_spark.core.neural import DEFAULT_CHECKPOINTS
     from scikg_spark.pipeline.session import get_spark
     from scikg_spark.pipeline.sinks import write_tag_seqs_tsv
     from scikg_spark.pipeline.stage1 import (
@@ -44,6 +49,7 @@ def main(argv=None):
     ar = None
     if args.ar_fact:
         ar = ARCorrecter.from_files(args.ar_fact, args.ar_cond)
+    weights = args.weights or DEFAULT_CHECKPOINTS.get(args.tagger)
 
     spark = get_spark(app_name="scikg-pseudo-label", cores=args.cores)
     try:
@@ -53,7 +59,7 @@ def main(argv=None):
         tagged = tag_statements(
             stmts, mode=args.tagger, ar=ar,
             use_tc=args.tc, use_tcdel=args.tcdel,
-            use_sh=args.sh, use_del=args.del_)
+            use_sh=args.sh, use_del=args.del_, weights_path=weights)
         tagged.write.mode("overwrite").parquet(f"{args.out}/pseudo_labeled")
         out_df = spark.read.parquet(f"{args.out}/pseudo_labeled")
         n_out = out_df.count()

@@ -49,7 +49,9 @@ def main(argv=None):
                              "append as new snapshots, linking re-runs over "
                              "the union's mention vocabulary (the 'next "
                              "crawl snapshot arrived' catch-up shape)")
-    parser.add_argument("--no-lsh", action="store_true")
+    parser.add_argument("--no-lsh", action="store_true",
+                        help="link mentions by equal norm only, without "
+                             "the 3-shingle Jaccard edges")
     parser.add_argument("--no-resume", action="store_true")
     parser.add_argument("--cores", type=int, default=None)
     parser.add_argument("--tc", action="store_true", help="TC smoothing")

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from scikg_spark.pipeline.stage3 import _pairs_sql
+
 _N_HASHES = 8
 _BAND_SIZE = 2
 # a blocking key seen in more than this many docs is dropped, not self-joined
@@ -90,15 +92,6 @@ def _word_shingles(k: int):
     too short) — callers project ``F.split("text", " ").alias("toks")``
     first (one split per row, reused by every gram)."""
     return F.expr(_gram_sql(k))
-
-
-def _pairs_sql(ids: str, a_name: str = "doc_a", b_name: str = "doc_b") -> str:
-    """All (a < b) pairs from a collected id array — the in-place form of
-    the band-bucket self-join. Bounded by the _MAX_BUCKET cap applied
-    before this expression, so at most C(64, 2) structs per group."""
-    return (f"flatten(transform({ids}, a -> "
-            f"transform(filter({ids}, b -> b > a), "
-            f"b -> named_struct('{a_name}', a, '{b_name}', b))))")
 
 
 def q_minhash_dup_pairs(spark, sf_dir):

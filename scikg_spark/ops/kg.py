@@ -180,11 +180,12 @@ def _src_content_hash(sf_dir: str) -> str:
 
 
 def _fingerprint(sf_dir: str) -> str:
-    # "v4": snapshot format version — bumping it re-materializes dirs written
+    # "v5": snapshot format version — bumping it re-materializes dirs written
     # by older code (v2 added nodes_syn; v3 added the plain nodes table so
     # kg_entity_nodes can serve from the snapshot; v4 keys on corpus CONTENT
-    # instead of stat, so regenerated-identical testdata stays fresh)
-    return hashlib.md5(("v4" + _src_content_hash(sf_dir)).encode()).hexdigest()
+    # instead of stat, so regenerated-identical testdata stays fresh; v5
+    # links by the exact Jaccard join instead of MinHash-LSH)
+    return hashlib.md5(("v5" + _src_content_hash(sf_dir)).encode()).hexdigest()
 
 
 def materialize_kg_tables(spark, sf_dir: str) -> str:

@@ -182,7 +182,7 @@ def lsh_candidate_pairs(emb, n_tables: int = 8, n_planes: int = 8,
     times total); the grouped form projects each vector once and needs one
     grouping shuffle. size(ids) equals the old group count, so the cap
     semantics are unchanged."""
-    from scikg_spark.ops.dedup import _pairs_sql
+    from scikg_spark.pipeline.stage3 import _pairs_sql
 
     bucketed = lsh_bucketed(emb, n_tables=n_tables, n_planes=n_planes)
     grouped = bucketed.groupBy("tbl", "bucket").agg(

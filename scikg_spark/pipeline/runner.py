@@ -94,7 +94,10 @@ def run_pipeline(
     """Commits every stage to ``catalog``; returns the committed tables. With
     ``resume``, reuses the longest committed prefix of the stage chain and
     recomputes the first stage it cannot reuse and every stage after it.
-    Bad tagger arguments raise ValueError before any stage runs."""
+    ``use_lsh`` switches linking's Jaccard edges (see
+    :func:`~scikg_spark.pipeline.stage3.link_entities`); without them,
+    phrases link by equal norm only. Bad tagger arguments raise ValueError
+    before any stage runs."""
     _check_tagger(tagger, gold, weights_path)
     corrections = corrections or {}
     head = [

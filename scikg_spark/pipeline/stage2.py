@@ -77,16 +77,28 @@ def _tag_input(statements: DataFrame, mode: str, gold: DataFrame | None,
 def _load_tagger(mode: str, weights_path: str | None):
     """-> ``tag(words_col, postags_col, caps_col)``, one (fact_tags,
     cond_tags) pair per statement; None in gold mode, whose tags ride the
-    input frame. Called inside the pass, so a model loads once per task."""
+    input frame. Called inside the pass; a model loads on the first call,
+    which :func:`_tagged` makes only for a non-empty batch, so a task with
+    no statements opens no checkpoint. Nothing outlives the task."""
     if mode == "gold":
         return None
     if mode == "rule":
         return lambda words, postags, caps: map(rule_tag, words, postags, caps)
-    from scikg_spark.core.neural import MimoEnsemble, MimoTagger, load_tagger
+    model = None
 
-    if weights_path is not None:  # _check_tagger matched its kind to mode
-        return load_tagger(weights_path).predict_tags
-    return (MimoEnsemble() if mode == "ensemble" else MimoTagger()).predict_tags
+    def tag(words, postags, caps):
+        nonlocal model
+        if model is None:
+            from scikg_spark.core import neural
+
+            if weights_path is not None:  # _check_tagger matched its kind
+                model = neural.load_tagger(weights_path)
+            else:
+                model = (neural.MimoEnsemble() if mode == "ensemble"
+                         else neural.MimoTagger())
+        return model.predict_tags(words, postags, caps)
+
+    return tag
 
 
 def _corrector(ar: ARCorrecter | None, use_tc: bool, use_tcdel: bool,

@@ -2,21 +2,32 @@
 
 The reference canonicalizes nodes only by exact ``phrase#offset`` string
 (MIMO_Extractor.py:170-221); cross-document linking is absent there. This
-stage is the rebuild's scale extension mandated by the north rule: group
-mention phrases into entities via
+stage is the rebuild's scale extension mandated by the north rule. Its rule:
+two mention phrases are one entity when their normalized strings
+(:func:`_norm_text`: '_' -> ' ', then Python's ``str.lower``) are equal, or
+when the 3-char shingle sets of their norms have Jaccard
+``|a & b| / float(|a | b|) >= 0.8``; the entities are the connected
+components of those edges. Linking is exact: every pair the rule names gets
+its edge, in one of two regimes sized by the mention vocabulary.
 
-  1. exact normalized-string grouping (lower, '_' -> ' '),
-  2. MinHash-LSH blocking over character shingles for near-duplicates,
-  3. connected components over the union of (1)+(2) edges, in one of two
-     regimes sized by the mention vocabulary. Up to :data:`DRIVER_PHRASES`
-     distinct phrases, ONE bounded collect brings each phrase with its
-     shingle set and LSH band keys (computed in Spark, by the same
-     expressions the distributed path uses) to the driver, which runs the
-     star edges, bucketing, Jaccard verification and a union-find there.
-     Over the bound, the edges are built in Spark and CC is a driver
-     union-find for driver-sized edge lists, else iterative hash-min joins
-     (no GraphFrames dependency), ``localCheckpoint`` per round to cut
-     lineage. Both regimes give identical outputs.
+  - Up to :data:`DRIVER_PHRASES` distinct phrases, ONE bounded collect
+    brings ``(phrase, phrase_id)`` to the driver. Python norms them, links
+    same-norm phrases by a star to the minimum phrase_id, joins one
+    representative per norm with :func:`_jaccard_pairs` and runs
+    :func:`_union_find`. No norm, shingle or hash is computed in the JVM.
+  - Over the bound, Spark builds the same edges: the norm by a vectorized
+    UDF of the same function, the star by a window, the Jaccard edges by
+    :func:`_prefix_candidate_pairs` and :func:`verify_jaccard`, and CC by
+    :func:`connected_components`.
+
+Both regimes give identical outputs by construction. The Jaccard join is
+the prefix filter of *Scalable and Robust Set Similarity Join* (ICDE'18):
+with shingles in one global order, rarest first, two sets at Jaccard >= t
+share one of the first ``|x| - ceil(t * |x|) + 1`` shingles of each, and
+the smaller holds at least ``t`` times the larger's shingles (the length
+filter). The filters only admit candidates, with an epsilon that can only
+lengthen a prefix; the Jaccard verify decides every edge. A hot prefix
+shingle is not capped: a cap would drop pairs the rule names.
 
 :func:`link_entities` is the one linking pass, for the pipeline runner and
 the ``ops.kg`` tables alike. :func:`attach_entities` then joins its phrase ->
@@ -24,23 +35,37 @@ entity map back onto the tuples, the one edge-attach step. Curated synonym
 pairs do not relink: :func:`merge_synonyms` merges the linked entities'
 labels, as the reference canonicalizes nodes it has already built.
 
-Scale design: minhash signatures are computed IN PLACE with JVM array
-expressions (array_min over transform of the shingle array — zero shuffle,
-zero Python, no shingle explode); LSH buckets are capped (``max_bucket``) so
-a hot block (stopword-like phrases) cannot produce a quadratic pair
-explosion — the cap plus AQE skew-join handling is the documented skew
-strategy; candidate pairs are verified with a true-Jaccard JVM expression
-(array_intersect / array_union) before becoming edges.
+:func:`lsh_candidate_pairs` (MinHash-LSH blocking with capped buckets) and
+:func:`exact_edges` no longer take part in linking; kgbench's traced run
+still counts their work.
 """
 
 from __future__ import annotations
 
+import math
+from itertools import chain
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType
+
+
+def _norm_text(s: str | None) -> str | None:
+    """The normalized string linking groups by: '_' -> ' ', then lower case
+    (Python's ``str.lower``, in both regimes)."""
+    return None if s is None else s.replace("_", " ").lower()
+
+
+@F.arrow_udf(StringType())
+def _norm(col: pa.Array) -> pa.Array:
+    # _norm_text as Spark's one vectorized UDF of the norm
+    return pa.array([_norm_text(s) for s in col.to_pylist()], pa.string())
 
 
 def mention_phrases(tuples: DataFrame) -> DataFrame:
     """Distinct concept phrases from subject/object slots ->
-    (phrase, phrase_id, norm)."""
+    (phrase, phrase_id, norm). A projection without ``norm`` plans no
+    Python evaluation."""
     phrases = (
         tuples.select(
             F.explode(F.array(F.col("s_c.text"), F.col("o_c.text"))).alias("phrase"))
@@ -54,14 +79,13 @@ def mention_phrases(tuples: DataFrame) -> DataFrame:
     )
 
 
-def _norm(name: str):
-    # the normalized string linking groups by: lower case, '_' -> ' '
-    return F.lower(F.regexp_replace(name, "_", " "))
-
-
-# LSH geometry of both linking regimes: 16 minhashes in bands of 4 over
+# LSH geometry of lsh_candidate_pairs: 16 minhashes in bands of 4 over
 # 3-char shingles; buckets wider than 64 ids are dropped (the hot-block cap)
 _N_HASHES, _BAND_SIZE, _SHINGLE_K, _MAX_BUCKET = 16, 4, 3, 64
+
+# slack on every ceil(t * n) of the filters: float error can then only
+# lengthen a prefix or widen a length bound, never drop a pair
+_EPS = 1e-9
 
 
 def _shingles(name: str, k: int):
@@ -78,6 +102,15 @@ def _shingle_set(name: str, k: int):
     return F.array_distinct(_shingles(name, k))
 
 
+def _shingle_set_text(s: str) -> set:
+    """:func:`_shingle_set` of one string at ``_SHINGLE_K``, in Python (both
+    count code points)."""
+    k = _SHINGLE_K
+    if len(s) <= k:
+        return {s}
+    return {s[i:i + k] for i in range(len(s) - k + 1)}
+
+
 def _band_keys(sh: str, n_hashes: int, band_size: int):
     """The ``n_hashes // band_size`` LSH band keys of shingle-array column
     ``sh`` as one array: band b's key hashes minhashes ``b * band_size`` to
@@ -90,6 +123,15 @@ def _band_keys(sh: str, n_hashes: int, band_size: int):
                 f"xxhash64(concat('seed{i}:', s))))") for i in range(n_hashes)]
     return F.array(*[F.xxhash64(*h[b:b + band_size])
                      for b in range(0, n_hashes, band_size)])
+
+
+def _pairs_sql(ids: str, a_name: str = "doc_a", b_name: str = "doc_b") -> str:
+    """All (a < b) pairs from a collected id array — the in-place form of
+    the band-bucket self-join. Bounded by the bucket cap applied before
+    this expression, so at most C(64, 2) structs per group."""
+    return (f"flatten(transform({ids}, a -> "
+            f"transform(filter({ids}, b -> b > a), "
+            f"b -> named_struct('{a_name}', a, '{b_name}', b))))")
 
 
 def exact_edges(phrases: DataFrame) -> DataFrame:
@@ -123,8 +165,6 @@ def lsh_candidate_pairs(
     # grouped form computes signatures once and needs ONE grouping shuffle.
     # size(ids) is exactly the old window count, so cap semantics are
     # unchanged.
-    from scikg_spark.ops.dedup import _pairs_sql
-
     grouped = banded.groupBy("band", "key").agg(
         F.collect_list("phrase_id").alias("ids"))
     return (
@@ -132,6 +172,34 @@ def lsh_candidate_pairs(
         .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
         .select(F.explode(F.expr(_pairs_sql("ids", "src", "dst"))).alias("p"))
         .select("p.src", "p.dst")
+        .distinct()
+    )
+
+
+def _prefix_candidate_pairs(phrases: DataFrame, threshold: float) -> DataFrame:
+    """Candidate pairs (src < dst) over the ``norm`` strings of
+    (phrase_id, norm) rows: every pair at shingle Jaccard >= ``threshold``
+    and others, for :func:`verify_jaccard` to decide. Each row keeps its
+    prefix, its ``n - ceil(threshold * n) + 1`` rarest shingles by global
+    frequency (ties by shingle); pairs share a prefix shingle and pass the
+    length filter. No prefix shingle is capped, however hot."""
+    from pyspark.sql.window import Window
+
+    sh = phrases.select("phrase_id", _shingle_set("norm", _SHINGLE_K).alias("sh"))
+    toks = sh.select("phrase_id", F.size("sh").alias("n"),
+                     F.explode("sh").alias("s"))
+    freq = toks.groupBy("s").agg(F.count("*").alias("f"))
+    rank = F.row_number().over(Window.partitionBy("phrase_id").orderBy("f", "s"))
+    prefix = toks.join(freq, "s").withColumn("r", rank).filter(
+        F.col("r") <= F.col("n") - F.ceil(F.col("n") * threshold - _EPS) + 1)
+    a = prefix.select(F.col("phrase_id").alias("src"), F.col("n").alias("n_a"), "s")
+    b = prefix.select(F.col("phrase_id").alias("dst"), F.col("n").alias("n_b"), "s")
+    return (
+        a.join(b, "s")
+        .filter((F.col("src") < F.col("dst"))
+                & (F.least("n_a", "n_b")
+                   >= F.greatest("n_a", "n_b") * threshold - _EPS))
+        .select("src", "dst")
         .distinct()
     )
 
@@ -160,6 +228,46 @@ def verify_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("src", "dst")
     )
+
+
+def _jaccard_pairs(sets: dict, threshold: float):
+    """Yields ``(a, b)`` for every two keys of ``sets`` (key -> shingle set)
+    with ``|a & b| / float(|a | b|) >= threshold``, each pair once: the exact
+    AllPairs join (Bayardo et al., WWW'07). Shingles are ranked rarest
+    first; the sets are visited by size. Each set probes the inverted index
+    with its prefix of ``n - ceil(t * n) + 1`` shingles, skipping posted
+    sets shorter than ``t * n`` (a posting list holds its sets by size), and
+    then posts its mid-prefix of ``n - ceil(2t / (1 + t) * n) + 1``
+    shingles: a later, larger partner at Jaccard >= t shares one of those.
+    Every candidate is verified."""
+    from bisect import bisect_left
+    from collections import Counter
+
+    freq = Counter(s for sh in sets.values() for s in sh)
+    rank = {s: r for r, s in
+            enumerate(sorted(freq, key=lambda s: (freq[s], s)))}
+    keys = sorted(sets, key=lambda k: len(sets[k]))
+    toks = [sorted(rank[s] for s in sets[k]) for k in keys]
+    members = [frozenset(t) for t in toks]
+    mid = 2 * threshold / (1 + threshold)
+    index: dict = {}  # rank -> ([size], [position in keys]), sizes ascending
+    for i, tok in enumerate(toks):
+        n = len(tok)
+        cand = set()
+        for r in tok[:n - math.ceil(threshold * n - _EPS) + 1]:
+            posted = index.get(r)
+            if posted:
+                cand.update(posted[1][bisect_left(posted[0],
+                                                  threshold * n - _EPS):])
+        mine = members[i]
+        for j in cand:
+            both = len(mine & members[j])
+            if both / float(n + len(members[j]) - both) >= threshold:
+                yield keys[j], keys[i]
+        for r in tok[:n - math.ceil(mid * n - _EPS) + 1]:
+            sizes, at = index.setdefault(r, ([], []))
+            sizes.append(n)
+            at.append(i)
 
 
 def _union_find(edges) -> dict:
@@ -201,8 +309,6 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     # workers are cold, on a sub-1k-row table). A pyarrow.Table plans as a
     # LocalTableScan whether or not the session enables Arrow for pandas
     # conversion, so the executors decode pure JVM.
-    import pyarrow as pa
-
     mapping = spark.createDataFrame(pa.table({
         "id": pa.array(list(comp), pa.int64()),
         "comp": pa.array(list(comp.values()), pa.int64()),
@@ -297,11 +403,17 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
 
 
 # Distinct-phrase count up to which link_entities runs in the driver (see
-# _link_in_driver). The driver regime's peak Python heap measured 3.5-3.9 KB
-# per collected phrase (tracemalloc over the collect and the linking state:
-# the sf0.1 vocabulary, 917 phrases, and a 12x variant of it, 11,004), so
-# the bound caps it near 128 MB, the order of connected_components'
-# driver_threshold. 0 disables the driver regime.
+# _link_in_driver). 0 disables the driver regime. At the bound, on a 4-core
+# host, 32,768 kgbench-style phrases of 1-3 words (870 Jaccard edges) link
+# in 11.4-12.3 CPU-s as the first link of a fresh session, against 107
+# distributed; the driver's peak Python heap is 164 MB (5.1 KB a phrase,
+# tracemalloc over link_entities), the order of connected_components'
+# driver_threshold.
+# Worst case: the join enumerates every pair at Jaccard >= 0.8, so a
+# vocabulary of near-duplicates is quadratic in both regimes. 2,048 norms
+# "regulatory protein kinase activation <3-char code>" (2.1M pairs, one
+# entity) take 6.3-7.4 CPU-s in the driver against 182 distributed; 32,768
+# of them would be 5.4e8 pairs, about 12 minutes in the driver.
 DRIVER_PHRASES = 1 << 15
 
 
@@ -310,8 +422,14 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     """tuples -> (entity_nodes, phrase_map).
 
     entity_nodes: entity_id, canonical (deterministic min norm in the
-    component), n_phrases. phrase_map: phrase -> entity_id. Curated synonyms
-    merge the linked entities afterwards (:func:`merge_synonyms`).
+    component), n_phrases. phrase_map: phrase, norm (:func:`_norm_text`),
+    entity_id. Curated synonyms merge the linked entities afterwards
+    (:func:`merge_synonyms`, which looks the phrase_map up by norm).
+
+    Same-norm phrases are always one entity. ``use_lsh`` switches the
+    Jaccard edges: every pair of norms whose 3-char shingle sets have
+    Jaccard at or above ``lsh_threshold``, found exactly (the names are
+    kept from the MinHash-LSH blocking these edges once came from).
 
     A vocabulary of at most :data:`DRIVER_PHRASES` distinct phrases links
     in the driver after one bounded collect; a bigger one takes the
@@ -328,7 +446,7 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
         F.min("norm").alias("canonical"),
         F.countDistinct("phrase").alias("n_phrases"),
     )
-    return nodes, mapped.select("phrase", "entity_id")
+    return nodes, mapped
 
 
 def _link_in_driver(phrases: DataFrame, lsh_threshold: float,
@@ -337,47 +455,28 @@ def _link_in_driver(phrases: DataFrame, lsh_threshold: float,
     as a JVM-local relation, or None when the vocabulary has more than
     :data:`DRIVER_PHRASES` rows.
 
-    Spark computes each phrase's shingle set and band keys with the
-    expressions :func:`lsh_candidate_pairs` uses, in the projection that is
-    collected — one ``limit``-bounded collect, so an over-bound vocabulary
-    never lands whole on the driver. The driver then reproduces the
-    distributed semantics exactly: star edges to the minimum phrase_id per
-    norm, LSH over one representative per norm with buckets kept only when
-    ``2 <= size <= max_bucket``, Jaccard ``|a & b| / float(|a | b|)`` against
-    ``lsh_threshold``, and a union-find whose entity_id is the component's
-    minimum phrase_id."""
-    import pyarrow as pa
-
-    if use_lsh:
-        phrases = phrases.withColumn("sh", _shingle_set("norm", _SHINGLE_K)) \
-            .withColumn("bands", _band_keys("sh", _N_HASHES, _BAND_SIZE))
-    rows = phrases.limit(DRIVER_PHRASES + 1).collect()
+    Spark computes only the distinct phrases and their phrase_id: one
+    ``limit``-bounded collect of ``(phrase, phrase_id)``, so an over-bound
+    vocabulary never lands whole on the driver, and the projection prunes
+    the norm UDF. The driver then builds the rule's edges: a star to the
+    minimum phrase_id per :func:`_norm_text` norm, and, with ``use_lsh``,
+    :func:`_jaccard_pairs` over one representative per norm; a union-find
+    labels each component with its minimum phrase_id."""
+    rows = phrases.select("phrase", "phrase_id") \
+        .limit(DRIVER_PHRASES + 1).collect()
     if len(rows) > DRIVER_PHRASES:
         return None
 
     # plain column tuples: a Row's field access by name is a Python call
-    phrase, pid, norm, *lsh = (zip(*rows) if rows
-                               else [()] * len(phrases.columns))
+    phrase, pid = zip(*rows) if rows else ((), ())
+    norm = [_norm_text(p) for p in phrase]
     root: dict = {}  # norm -> minimum phrase_id
     for p, n in zip(pid, norm):
         root[n] = min(p, root.get(n, p))
     edges = [(root[n], p) for p, n in zip(pid, norm) if p != root[n]]
-    if use_lsh:
-        reps = [(p, sh, bands) for p, n, sh, bands in zip(pid, norm, *lsh)
-                if p == root[n]]
-        buckets: dict = {}
-        for p, _, bands in reps:
-            for band, key in enumerate(bands):
-                buckets.setdefault((band, key), []).append(p)
-        cand = {(a, b) if a < b else (b, a)
-                for ids in buckets.values()
-                if 2 <= len(ids) <= _MAX_BUCKET
-                for i, a in enumerate(ids) for b in ids[i + 1:]}
-        # a shingle set is never empty (a short norm is its own shingle)
-        shingles = {p: set(sh) for p, sh, _ in reps}
-        edges.extend((a, b) for a, b in cand
-                     if len(shingles[a] & shingles[b])
-                     / float(len(shingles[a] | shingles[b])) >= lsh_threshold)
+    if use_lsh:  # streamed: the union-find holds no list of the pairs
+        edges = chain(edges, _jaccard_pairs(
+            {p: _shingle_set_text(n) for n, p in root.items()}, lsh_threshold))
     comp = _union_find(edges)
     # entity_id is never null, as coalesce(comp, phrase_id) is not in Spark
     schema = pa.schema([("phrase", pa.string()), ("norm", pa.string()),
@@ -387,7 +486,7 @@ def _link_in_driver(phrases: DataFrame, lsh_threshold: float,
     # of the nodes grouped from it runs one task per split
     return phrases.sparkSession.createDataFrame(pa.table({
         "phrase": list(phrase),
-        "norm": list(norm),
+        "norm": norm,
         "entity_id": [comp.get(p, p) for p in pid],
     }, schema=schema)).coalesce(1)
 
@@ -400,18 +499,18 @@ def _link_distributed(phrases: DataFrame, lsh_threshold: float,
     from pyspark.sql.window import Window
 
     # Materialize the distinct-mention + window pass ONCE (round 6): the
-    # frame fans out into FOUR consumers per side of the symmetrizing union
-    # (star edges, LSH signatures, both Jaccard-verify sides) and the
+    # frame fans out into several consumers (star edges, the prefix join,
+    # both Jaccard-verify sides, x2 for the symmetrizing union) and the
     # localCheckpoint/AQE execution path gives no subtree reuse — a
     # `.cache()` here lost the race when AQE materialized those stage jobs
     # concurrently, so the explode+distinct over the wide tuples cache ran
     # 8x (measured: 8 racing 32-task stages, ~10 CPU-s each at sf0.1, for a
     # 917-row result). The checkpoint is the distinct-mention table — the
-    # same thing the cache held, eagerly and exactly once. LSH still runs
-    # over ONE representative per distinct norm (same-norm phrases are
-    # already connected by the star), which shrinks the signature
-    # computation and band join by the duplication factor — at web scale
-    # duplicate surface forms dominate the mention table.
+    # same thing the cache held, eagerly and exactly once, norm UDF
+    # included. The Jaccard join runs over ONE representative per distinct
+    # norm (same-norm phrases are already connected by the star), which
+    # shrinks it by the duplication factor — at web scale duplicate surface
+    # forms dominate the mention table.
     with_root = phrases.withColumn(
         "root", F.min("phrase_id").over(Window.partitionBy("norm"))) \
         .localCheckpoint()
@@ -423,9 +522,9 @@ def _link_distributed(phrases: DataFrame, lsh_threshold: float,
     if use_lsh:
         reps = with_root.filter(F.col("phrase_id") == F.col("root")) \
                         .select("phrase_id", "norm")
-        cand = lsh_candidate_pairs(reps)
+        cand = _prefix_candidate_pairs(reps, lsh_threshold)
         edges = edges.union(verify_jaccard(cand, reps, threshold=lsh_threshold))
-    # materialize the edge pipeline (LSH bands + Jaccard verify) exactly
+    # materialize the edge pipeline (prefix join + Jaccard verify) exactly
     # once, already SYMMETRIZED: the CC adjacency and the vertex set both
     # read this one checkpoint (round 6 — previously the directed edges and
     # the bidirectional adjacency were two separate materializations)
@@ -452,18 +551,20 @@ def merge_synonyms(nodes: DataFrame, phrase_map: DataFrame,
     which canonicalize nodes already built: a merge of entity labels, not a
     second linking pass. Returns entity_nodes with the same columns.
 
-    The pairs come from a label file the driver parses whole, so they are
-    joined in the driver, by normalized string, onto the (norm(phrase),
-    entity_id) rows of ``phrase_map`` whose norm a pair names (one bounded
-    collect). A pair naming two different entities is a label edge, and
+    The pairs come from a label file the driver parses whole, so the driver
+    norms them (:func:`_norm_text`) and joins them, by norm, onto the
+    (norm, entity_id) rows of ``phrase_map`` whose norm a pair names (one
+    bounded collect of the norm the linking pass computed; nothing is
+    normed again). A pair naming two different entities is a label edge, and
     :func:`_driver_union_find` merges over those edges. Each merged group of
     ``nodes`` becomes one entity: entity_id the minimum label (the minimum
     phrase_id of the union, as linking labels), canonical the minimum
     canonical, n_phrases the sum."""
-    pairs = synonyms.select(_norm("phrase_a"), _norm("phrase_b")).collect()
+    pairs = [(_norm_text(a), _norm_text(b)) for a, b in
+             synonyms.select("phrase_a", "phrase_b").collect()]
     named = list({n for pair in pairs for n in pair if n is not None})
-    label = dict(phrase_map.select(_norm("phrase").alias("norm"), "entity_id")
-                 .filter(F.col("norm").isin(named)).collect())
+    label = dict(phrase_map.filter(F.col("norm").isin(named))
+                 .select("norm", "entity_id").collect())
     edges = [(label[a], label[b]) for a, b in pairs
              if a in label and b in label and label[a] != label[b]]
     merged = _driver_union_find(edges, nodes.withColumnRenamed("entity_id", "id"))

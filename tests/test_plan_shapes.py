@@ -181,6 +181,34 @@ def test_link_entities_driver_regime_job_count(spark):
     assert n <= 1, n
 
 
+def test_link_entities_driver_regime_collects_phrases_only(spark, monkeypatch):
+    """The driver regime's one collect reads (phrase, phrase_id) only: its
+    plan computes no norm (no lower, no Python evaluation) and no shingle
+    or minhash array (no transform, no array_min). Python norms, shingles
+    and joins the collected rows."""
+    from pyspark.sql import functions as F
+
+    from scikg_spark.pipeline.stage3 import link_entities
+
+    tuples = spark.range(60).select(
+        F.struct(F.concat(F.lit("Concept_"), F.col("id").cast("string"))
+                 .alias("text")).alias("s_c"),
+        F.struct(F.lit(None).cast("string").alias("text")).alias("o_c"))
+    plans = []
+    frame = type(tuples)
+    collect = frame.collect
+    monkeypatch.setattr(frame, "collect",
+                        lambda df: plans.append(_formatted(df)) or collect(df))
+    _, pmap = link_entities(tuples)
+    assert len(plans) == 1
+    plan = plans[0]
+    assert "phrase_id" in plan and "norm" not in plan, plan
+    for op in ("lower(", "transform(", "array_min(", "EvalPython", "PythonUDF"):
+        assert op not in plan, (op, plan)
+    monkeypatch.undo()
+    assert pmap.count() == 60
+
+
 def test_kg_pagerank_driver_regime_job_count(spark):
     """PageRank over a driver-sized pair list: one bounded collect, the
     iterations in Python, and the ranking tail over a local relation — at

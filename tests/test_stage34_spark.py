@@ -4,6 +4,7 @@ import json
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from scikg_spark.pipeline.stage1 import build_pages_from_documents
@@ -126,7 +127,7 @@ class TestLinkingRegimes:
             assert driver == other, bound
         if synonyms is not None:
             return {c: (e, n) for e, c, n in driver[2][1]}
-        return dict(driver[1][1])
+        return {p: e for p, _, e in driver[1][1]}
 
     def test_sf_tuples(self, spark, sf_tuples, monkeypatch):
         ids = self._both(monkeypatch, sf_tuples)
@@ -146,8 +147,8 @@ class TestLinkingRegimes:
             == mention_phrases(sf_tuples).count()
 
     def test_crafted_edge_cases(self, spark, monkeypatch):
-        # 70 norms with one shingle set: every LSH bucket of theirs holds
-        # 70 > max_bucket ids and is dropped, though their Jaccard is 1.0
+        # 70 norms with one shingle set, all in one hot prefix shingle:
+        # Jaccard 1.0 links them all (capped LSH buckets used to drop them)
         wide = ["abc" * k for k in range(2, 72)]
         short = ["ab", "abc", "x"]  # norms of shingle_k chars or fewer
         variants = ["T_cells", "t cells", "T CELLS", "t_Cells"]
@@ -155,18 +156,25 @@ class TestLinkingRegimes:
                 "regulatory_t_cells_activation"]
         below = ["immune_response_in_mice",  # Jaccard 0.792
                  "immune_responses_in_mice"]
-        phrases = wide + short + variants + near + below
+        # Python's lower: 'ΟΔΟΣ' -> 'οδος' (final sigma); 'İ' -> 'i' plus a
+        # combining dot, so 'İzmir' and 'izmir' share 2 of 5 shingles
+        accents = ["Straße", "straße", "STRASSE", "ΟΔΟΣ", "οδος",
+                   "İzmir", "izmir"]
+        phrases = wide + short + variants + near + below + accents
         tuples = _mention_tuples(spark, phrases)
         # 0 skips the driver regime; 5 sends it over the bound
         ids = self._both(monkeypatch, tuples, bounds=(0, 5))
-        assert len({ids[p] for p in wide}) == len(wide)
+        assert len({ids[p] for p in wide}) == 1
         assert len({ids[p] for p in short}) == len(short)
         assert len({ids[p] for p in variants}) == 1
-        assert ids[near[0]] == ids[near[1]]  # an LSH edge
+        assert ids[near[0]] == ids[near[1]]  # a Jaccard edge
         assert ids[below[0]] != ids[below[1]]
+        assert ids["Straße"] == ids["straße"] != ids["STRASSE"]
+        assert ids["ΟΔΟΣ"] == ids["οδος"]
+        assert ids["İzmir"] != ids["izmir"]
 
         # a merged pair; an absent, a same-norm and a null one; and a chain
-        # through the LSH edge between the two `near` phrases
+        # through the Jaccard edge between the two `near` phrases
         pairs = [("T_CELLS", "immune_response_in_mice"),
                  ("ab", "no_such_mention"), ("abc", "ABC"), (None, "x"),
                  ("regulatory_t_cells_activation", "immune_responses_in_mice")]
@@ -179,6 +187,92 @@ class TestLinkingRegimes:
             min(ids[near[0]], ids[below[1]]), 3)
         assert all(merged[p] == (ids[p], 1) for p in short)
         assert len(merged) == len(set(ids.values())) - 2
+
+
+def _rule_labels(phrases, ids, threshold=0.8):
+    """The linking rule by brute force: norm = '_' -> ' ' then str.lower;
+    an edge for equal norms and for every pair of norms whose 3-char
+    shingle sets have Jaccard >= threshold; each phrase labelled with the
+    minimum of ``ids`` over its connected component."""
+    norm = {p: p.replace("_", " ").lower() for p in phrases}
+    norms = sorted(set(norm.values()))
+    sh = {n: {n} if len(n) <= 3 else {n[i:i + 3] for i in range(len(n) - 2)}
+          for n in norms}
+    parent = {n: n for n in norms}
+
+    def find(n):
+        while parent[n] != n:
+            n = parent[n]
+        return n
+
+    for i, a in enumerate(norms):
+        for b in norms[i + 1:]:
+            x, y = sh[a], sh[b]
+            if len(x & y) / float(len(x | y)) >= threshold:
+                parent[find(a)] = find(b)
+    label = {}
+    for p in phrases:
+        r = find(norm[p])
+        label[r] = min(label.get(r, ids[p]), ids[p])
+    return {p: label[find(norm[p])] for p in phrases}
+
+
+# words that lower-case past ASCII: 'ß' stays, final 'Σ' -> 'ς', 'İ' -> two
+# code points; and norms of 3 chars or fewer
+_SPECIAL = ["Straße", "STRASSE", "straße", "ΟΔΟΣ", "οδος", "Οδός", "İzmir",
+            "izmir", "IZMIR", "ab", "x", "abc", "a_b"]
+
+
+@st.composite
+def _vocabularies(draw):
+    """Small phrase vocabularies: words over a 7-char alphabet (so shingles
+    are hot and shared), the words above, and case, '_' and one-letter
+    suffix variants of them."""
+    base = draw(st.lists(st.one_of(st.text("abcAB_ ", min_size=1, max_size=12),
+                                   st.sampled_from(_SPECIAL)), max_size=16))
+    out = set(base)
+    for w in base:
+        if draw(st.booleans()):
+            out.add(w.upper())
+        if draw(st.booleans()):
+            out.add(w.replace(" ", "_").swapcase())
+        if draw(st.booleans()):
+            out.add(w + draw(st.sampled_from("as")))
+    return sorted(out)
+
+
+class TestLinkingRule:
+    """Both regimes link exactly what the rule names: their entity labels
+    equal a union-find over brute-force all-pairs Jaccard edges."""
+
+    @staticmethod
+    def _check(spark, vocab, labels):
+        tuples = _mention_tuples(spark, vocab)
+        ids = dict(mention_phrases(tuples).select("phrase", "phrase_id")
+                   .collect())
+        assert labels(tuples) == _rule_labels(vocab, ids)
+
+    @settings(max_examples=40, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(vocab=_vocabularies())
+    def test_driver_regime(self, spark, monkeypatch, vocab):
+        from scikg_spark.pipeline import stage3
+
+        def refuse(*a, **k):
+            raise AssertionError("input is driver-sized")
+
+        with monkeypatch.context() as m:
+            m.setattr(stage3, "_link_distributed", refuse)
+            self._check(spark, vocab,
+                        lambda t: {r.phrase: r.entity_id
+                                   for r in link_entities(t)[1].collect()})
+
+    @settings(max_examples=4, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(vocab=_vocabularies())
+    def test_distributed_regime(self, spark, monkeypatch, vocab):
+        self._check(spark, vocab,
+                    lambda t: TestLinkingRegimes._both(monkeypatch, t))
 
 
 class TestSnapshots:

@@ -669,3 +669,85 @@ def test_training_clis_write_checkpoints_stage2_loads(tmp_path):
     reports = [json.loads(line) for line in lines[:-1]]
     assert [r["weights"] for r in reports] == [
         str(tmp_path / f"{n}.npz") for n in ("heads", "probe", "self", "bptt")]
+
+
+@pytest.mark.parametrize("entry", ["extract_tuples", "tag_statements"])
+def test_pass_loads_the_tagger_on_its_first_nonempty_batch(monkeypatch, entry):
+    """The tagging pass of either entry point opens its checkpoint on the
+    first statement batch with rows: a task over an empty partition loads
+    nothing, and a task loads once however many batches it gets."""
+    import pandas as pd
+
+    from scikg_spark.core import neural
+    from scikg_spark.pipeline import fused, stage2
+
+    class Capture:  # stands in for the statements frame: keeps the pass
+        def mapInPandas(self, gen, schema):
+            self.gen = gen
+            return self
+
+    calls = []
+    load = neural.load_tagger
+    monkeypatch.setattr(neural, "load_tagger",
+                        lambda path: calls.append(path) or load(path))
+    path = DEFAULT_CHECKPOINTS["neural"]
+    entry_point = getattr(fused if entry == "extract_tuples" else stage2, entry)
+    kw = {"tagger" if entry == "extract_tuples" else "mode": "neural"}
+    gen = entry_point(Capture(), weights_path=path, **kw).gen
+    batch = pd.DataFrame({
+        "url": ["u"], "doc_id": ["d"], "stmt_id": [0],
+        "words": [["cells", "express", "receptors"]],
+        "postags": [["NNS", "VBP", "NNS"]], "caps": [["B-C", "B-P", "B-C"]]})
+
+    assert list(gen(iter([]))) == [] and calls == []
+    assert list(gen(iter([batch.iloc[:0]]))) == [] and calls == []
+    assert list(gen(iter([batch])))
+    assert calls == [path]
+    calls.clear()
+    assert len(list(gen(iter([batch, batch.iloc[:0], batch])))) == 2
+    assert calls == [path]
+
+
+_PSEUDO_LABEL_SCRIPT = """
+import sys
+sys.path.insert(0, %(repo)r)
+import pandas as pd
+from scikg_spark.jobs import pseudo_label
+
+docs = %(docs)r
+pd.read_parquet(%(src)r).head(10).to_parquet(docs + "/documents.parquet")
+pseudo_label.main(["--documents", docs, "--out", docs + "/out", "--cores", "2"])
+"""
+
+
+def test_pseudo_label_tags_with_the_trained_checkpoint(tmp_path):
+    """pseudo_label's default neural tagger is the committed trained
+    checkpoint (neural.DEFAULT_CHECKPOINTS), as in run_pipeline, not an
+    untrained seeded model: every kept statement carries the tags that the
+    checkpoint gives it. Runs in a child process, as main() stops its
+    session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pandas as pd
+
+    from conftest import TESTDATA, session_env
+    from scikg_spark.core.neural import load_tagger
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = _PSEUDO_LABEL_SCRIPT % {
+        "repo": repo, "docs": str(tmp_path),
+        "src": os.path.join(TESTDATA, "sf0.001", "documents.parquet")}
+    proc = subprocess.run([sys.executable, "-c", code], env=session_env(tmp_path),
+                          cwd=str(tmp_path), capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    out = pd.read_parquet(tmp_path / "out" / "pseudo_labeled")
+    assert report["statements_kept"] == len(out) > 0
+    cols = [[list(x) for x in out[c]] for c in ("words", "postags", "caps")]
+    expected = load_tagger(DEFAULT_CHECKPOINTS["neural"]).predict_tags(*cols)
+    got = [(list(f), list(c)) for f, c in zip(out["fact_tags"], out["cond_tags"])]
+    assert got == [(list(f), list(c)) for f, c in expected]
