@@ -1,11 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry`` runs the flagship KG-extraction query at sf0.001; ``queries`` maps
-every implemented operator family (SURVEY.md §2 + the training-data ops) to a
-``(spark, sf_dir) -> DataFrame`` callable; ``oracle_sql`` carries the DuckDB
-mirror for every SQL-expressible query (KG decode queries are rows-only by
-nature — their oracle is the pure-Python reference decode gated in
-tests/test_pipeline_spark.py).
+the 11 ``scikg_spark.ops.kg`` queries and the training-data operators (text,
+dedup, sampling, multimodal) to ``(spark, sf_dir) -> DataFrame`` callables;
+``oracle_sql`` carries the DuckDB mirror of every SQL-expressible query. The
+KG extraction/linking queries are rows-only by nature: their oracle is the
+pure-Python reference decode gated in tests/test_pipeline_spark.py.
 """
 
 from __future__ import annotations
@@ -25,8 +25,8 @@ _SHIPPED_APPS: set[str] = set()
 def _repo_on_executors(spark: SparkSession) -> None:
     # driver-created sessions don't run through scikg's get_spark(); make the
     # package importable inside Python workers regardless. Once per
-    # application — the sweep calls this per query, and re-zipping the
-    # package 59 times would waste a chunk of the driver's budget.
+    # application: every query calls this, and re-zipping the package per
+    # query would waste driver time.
     root = os.path.dirname(os.path.abspath(__file__))
     current = os.environ.get("PYTHONPATH", "")
     if root not in current.split(os.pathsep):
@@ -52,8 +52,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from scikg_spark.ops import (
-        dedup, kg, multimodal, relational, sampling, similarity, text)
+    from scikg_spark.ops import dedup, kg, multimodal, sampling, text
 
     def wrap(fn):
         def run(spark, sf_dir):
@@ -61,20 +60,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return fn(spark, sf_dir)
         return run
 
-    # Enumeration order is deliberate (round 5): CORRECTNESS_r04 recorded
-    # exactly the FIRST 50 of 58 registered queries, cut in dict order — so
-    # whether the driver caps rows or budgets time, registration order
-    # decides which rows land. The kg tier (0 driver rows in r4) now leads,
-    # every kg query serves from the committed fingerprint-fresh snapshot
-    # (fast), and the tail is the relational queries green in every round
-    # since r1 — the rows least damaging to lose if a cap exists.
+    # Extraction/linking queries are rows-only (decode semantics are non-SQL;
+    # their oracle is the reference decode, gated in pytest); the downstream
+    # aggregations read the materialized tuples/edges parquet and carry
+    # DuckDB mirrors (kg.ORACLE).
     qs = {
-        # flagship opener
-        "q_pricing_summary": relational.q_pricing_summary,
-        # KG construction. Extraction/linking queries are rows-only (decode
-        # semantics are non-SQL; their oracle is the reference decode, gated
-        # in pytest); the downstream aggregations read the materialized
-        # tuples/edges parquet and carry DuckDB mirrors (kg.ORACLE).
         "kg_triples": kg.kg_triples,
         "kg_top_facts": kg.kg_top_facts,
         "kg_entity_nodes": kg.kg_entity_nodes,
@@ -120,43 +110,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_split_stats": sampling.q_split_stats,
         "q_stratified_sample": sampling.q_stratified_sample,
         "q_group_sample_topk": sampling.q_group_sample_topk,
-        # similarity search
-        "q_embedding_norms": similarity.q_embedding_norms,
-        "q_cosine_topk": similarity.q_cosine_topk,
-        "q_ann_lsh_buckets": similarity.q_ann_lsh_buckets,
-        "q_ann_ivf_topk": similarity.q_ann_ivf_topk,
-        "q_ann_recall": similarity.q_ann_recall,
-        "q_ann_lsh_recall": similarity.q_ann_lsh_recall,
-        "q_embedding_neardup": similarity.q_embedding_neardup,
         # multimodal plumbing (decode stubbed behind a deterministic fake
-        # container; rows-only)
+        # container)
         "q_media_features": multimodal.q_media_features,
         "q_frame_sample_stats": multimodal.q_frame_sample_stats,
-        # relational operator coverage (joins/aggs/windows/set-ops) — green
-        # in every driver round since r1; deliberately last (see above)
-        "q_top_customer_revenue": relational.q_top_customer_revenue,
-        "q_user_first_event": relational.q_user_first_event,
-        "q_event_type_overlap": relational.q_event_type_overlap,
-        "q_nation_order_priority": relational.q_nation_order_priority,
-        "q_orders_by_month": relational.q_orders_by_month,
-        "q_events_sessionize": relational.q_events_sessionize,
-        "q_part_type_stats": relational.q_part_type_stats,
-        "q_supplier_balance_rank": relational.q_supplier_balance_rank,
-        "q_asof_event_order": relational.q_asof_event_order,
-        "q_lineitem_rollup": relational.q_lineitem_rollup,
-        "q_customers_without_orders": relational.q_customers_without_orders,
-        "q_active_customers": relational.q_active_customers,
-        "q_price_percentiles": relational.q_price_percentiles,
     }
     return {name: wrap(fn) for name, fn in qs.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from scikg_spark.ops import (
-        dedup, kg, multimodal, relational, sampling, similarity, text)
+    from scikg_spark.ops import dedup, kg, multimodal, sampling, text
 
     out: dict[str, str] = {}
-    for module in (relational, text, dedup, sampling, similarity, multimodal, kg):
+    for module in (text, dedup, sampling, multimodal, kg):
         out.update(module.ORACLE)
         # entries that need file IO to render (e.g. the eval-gram parquet)
         # are deferred to a per-module hook so importing the ops package

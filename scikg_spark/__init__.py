@@ -10,8 +10,12 @@ Layout:
   scikg_spark.core      pure Python (no Spark): decode/correct/metric
                         semantics faithful to the reference, unit-tested.
   scikg_spark.pipeline  Spark stages (vectorized pandas/Arrow UDFs only).
-  scikg_spark.ops       training-data-pipeline operators (dedup, similarity,
-                        text quality) over document/embedding tables.
+  scikg_spark.ops       the KG queries (ops.kg): materialized graph tables,
+                        extraction reads and graph analytics; and the
+                        training-data operators (text quality, dedup,
+                        sampling, multimodal) over the document table.
+  scikg_spark.jobs      command-line entry points (pipeline, training,
+                        evaluation, graph queries).
 """
 
 from scikg_spark import zipcache

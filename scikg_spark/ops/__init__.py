@@ -1,5 +1,6 @@
-"""Training-data pipeline operators over the driver's document/embedding
-tables: deduplication (exact / MinHash-LSH / n-gram Jaccard / SimHash),
-similarity search, and text analysis. Each operator ships as a
-``(spark, sf_dir) -> DataFrame`` callable plus (where SQL-expressible) a
-DuckDB oracle string — both registered through ``__spark_entry__``."""
+"""Queries registered through ``__spark_entry__``: :mod:`scikg_spark.ops.kg`
+materializes a corpus's graph tables and runs the extraction reads and graph
+analytics; ``text``, ``dedup``, ``sampling`` and ``multimodal`` are the
+training-data operators over the document table. Each query is a
+``(spark, sf_dir) -> DataFrame`` callable with, where SQL-expressible, a
+DuckDB mirror in its module's ``ORACLE``."""

@@ -20,8 +20,8 @@ The downstream graph ANALYTICS (kg_top_facts, kg_statement_stats,
 kg_entity_cooccurrence, kg_degree_stats, kg_synonym_clusters, and the
 iterative kg_pagerank / kg_triangle_count) are SQL-expressible — each carries
 a DuckDB mirror over the same parquet files (PageRank's mirror unrolls the
-same fixed iterations as chained CTEs), so the analytics logic duels like
-every relational query.
+same fixed iterations as chained CTEs), so the analytics logic duels against
+an independent engine.
 
 Every read of a materialized table goes through :func:`_read_snapshot`,
 which hands Spark the schema from the parquet footer, so a read runs no
@@ -634,9 +634,9 @@ def _distributed_pagerank(pairs, nodes, n: int, iterations: int,
 
 
 # per-pivot adjacency cap for wedge generation: bounds the wedge join's
-# fan-out at C(_MAX_ADJ, 2) rows per vertex (the repo-wide hot-key pattern —
-# dedup's _MAX_BUCKET for gram/LSH buckets, here for "patients"-type hub
-# entities whose deg² wedges would otherwise dominate the job). Exact while
+# fan-out at C(_MAX_ADJ, 2) rows per vertex (the hot-key pattern of stage 3's
+# _MAX_BUCKET for LSH buckets, here for "patients"-type hub entities whose
+# deg² wedges would otherwise dominate the job). Exact while
 # every vertex's degree is <= the cap; beyond it, a deterministic unbiased
 # sample (salted-hash order, mirrored verbatim in the DuckDB oracle).
 _MAX_ADJ = 256

@@ -41,8 +41,8 @@ def _check_tagger(mode: str, gold: DataFrame | None,
     if weights_path is not None and mode not in _MODELS:
         raise ValueError(
             "weights_path requires mode='neural', 'probe' or 'ensemble'")
-    if mode == "probe" and weights_path is None:
-        raise ValueError("probe mode needs a trained weights_path")
+    if mode in _MODELS and weights_path is None:
+        raise ValueError(f"{mode} mode needs a trained weights_path")
     if mode == "gold" and gold is None:
         raise ValueError("gold mode needs a gold DataFrame")
     if mode not in ("rule", "gold", *_MODELS):
@@ -89,13 +89,10 @@ def _load_tagger(mode: str, weights_path: str | None):
     def tag(words, postags, caps):
         nonlocal model
         if model is None:
-            from scikg_spark.core import neural
+            from scikg_spark.core.neural import load_tagger
 
-            if weights_path is not None:  # _check_tagger matched its kind
-                model = neural.load_tagger(weights_path)
-            else:
-                model = (neural.MimoEnsemble() if mode == "ensemble"
-                         else neural.MimoTagger())
+            # _check_tagger required weights_path and matched its kind
+            model = load_tagger(weights_path)
         return model.predict_tags(words, postags, caps)
 
     return tag
@@ -156,10 +153,10 @@ def tag_statements(
     mode='gold': broadcast-join pre-collapsed gold rows on (doc_id, stmt_id)
     — a pure join when no correction flag is set. mode='rule':
     deterministic mention-role tagger. mode='neural'/'ensemble'/'probe':
-    the MIMO models (``weights_path``: a trained checkpoint; probe needs
-    one). Correction flags drop statements exactly like the reference's
-    pseudo-labeling filter chain (self_train.py:117-203), inside the one
-    tagging pass.
+    the MIMO models (``weights_path``: a trained checkpoint of the mode's
+    kind, required). Correction flags drop statements exactly like the
+    reference's pseudo-labeling filter chain (self_train.py:117-203),
+    inside the one tagging pass.
     """
     source = _tag_input(statements, mode, gold, weights_path)
     correct = _corrector(ar, use_tc, use_tcdel, use_sh, use_del)

@@ -64,19 +64,22 @@ class TestEnsemble:
 
 @pytest.mark.usefixtures("spark")
 class TestSparkIntegration:
-    def test_neural_mode_through_pipeline(self, spark):
+    def test_neural_mode_through_pipeline(self, spark, tmp_path):
+        from scikg_spark.core.neural import save_tagger
         from scikg_spark.pipeline.fused import extract_tuples
         from scikg_spark.pipeline.stage1 import (
             build_pages_from_documents, extract_statements)
         from scikg_spark.pipeline.stage2 import tag_statements
 
+        path = str(tmp_path / "fixture.npz")
+        save_tagger(MimoTagger(), path)
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(30)
         stmts = extract_statements(build_pages_from_documents(docs)).cache()
-        tagged = tag_statements(stmts, mode="neural")
+        tagged = tag_statements(stmts, mode="neural", weights_path=path)
         assert tagged.count() == stmts.count()
         # decode never crashes on model output; rerun is identical
-        t1 = extract_tuples(stmts, tagger="neural").collect()
-        t2 = extract_tuples(stmts, tagger="neural").collect()
+        t1 = extract_tuples(stmts, tagger="neural", weights_path=path).collect()
+        t2 = extract_tuples(stmts, tagger="neural", weights_path=path).collect()
         key = lambda r: (r.url, r.stmt_id, r.kind, r.tuple_idx, r.subj)
         assert sorted(map(key, t1)) == sorted(map(key, t2))
 

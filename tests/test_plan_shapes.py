@@ -1,8 +1,8 @@
-"""Plan-shape regression pins for the round-6 dedup/LSH rewrites (the
-pattern test_pagerank_iteration_single_exchange established): a future
-refactor that reintroduces the duplicated-subtree self-join — the shape that
-made minhash/ngram re-run the whole scan+hash pipeline once per join side —
-fails a test here, not a bench read."""
+"""Plan-shape and job-count pins for the dedup operators, the pipeline
+stages and the kg analytics: a refactor that adds a Spark job, a Python
+pass, a duplicated subtree (the self-join that made minhash/ngram re-run the
+whole scan+hash pipeline once per join side) or a nested-loop join fails a
+test here, not a benchmark read."""
 
 import io
 import os
@@ -311,8 +311,9 @@ def test_materialized_read_runs_no_job(spark, table):
 @pytest.fixture(scope="module")
 def stage2_inputs(spark, tmp_path_factory):
     """Materialized statements (so stage 1's pass is not in the plan), a
-    gold frame of their rule tags and a tiny trained probe checkpoint."""
-    from scikg_spark.core.neural import ProbeTagger, save_tagger
+    gold frame of their rule tags, a tiny trained probe checkpoint and the
+    fixture neural model's checkpoint."""
+    from scikg_spark.core.neural import MimoTagger, ProbeTagger, save_tagger
     from scikg_spark.pipeline.stage1 import (
         build_pages_from_documents, extract_statements)
     from scikg_spark.pipeline.stage2 import tag_statements
@@ -326,9 +327,13 @@ def stage2_inputs(spark, tmp_path_factory):
     probe = ProbeTagger(seed=1)
     toy = ([["a", "b", "c"]], [["NN", "VBZ", "NN"]], [["B-C", "B-P", "B-C"]])
     probe.train_step(*toy, [[1, 2, 3]], [[1, 2, 3]])
-    path = str(tmp_path_factory.mktemp("probe") / "probe.npz")
+    ckpts = tmp_path_factory.mktemp("ckpt")
+    path = str(ckpts / "probe.npz")
     save_tagger(probe, path)
-    return stmts, {"gold": {"gold": gold}, "probe": {"weights_path": path}}
+    neural_path = str(ckpts / "neural.npz")
+    save_tagger(MimoTagger(), neural_path)
+    return stmts, {"gold": {"gold": gold}, "probe": {"weights_path": path},
+                   "neural": {"weights_path": neural_path}}
 
 
 @pytest.mark.parametrize("mode,flags", [

@@ -100,10 +100,12 @@ def test_trained_weights_flow_through_spark(spark, tmp_path):
         trainer.step(words, pos, cap, yf, yc)
     path = str(tmp_path / "heads.npz")
     save_tagger(model, path)
+    fixture = str(tmp_path / "fixture.npz")
+    save_tagger(MimoTagger(), fixture)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(20)
     stmts = extract_statements(build_pages_from_documents(docs)).cache()
-    default = tag_statements(stmts, mode="neural").collect()
+    default = tag_statements(stmts, mode="neural", weights_path=fixture).collect()
     trained = tag_statements(stmts, mode="neural", weights_path=path).collect()
     assert len(default) == len(trained)
     # trained heads change predictions relative to the fixture weights
@@ -166,10 +168,12 @@ class TestProbeTagger:
         assert probe.predict_tags(*stmts) == other.predict_tags(*stmts)
 
     def test_probe_mode_requires_weights(self, spark, tmp_path):
-        import pytest
-
+        """No model mode (probe, neural, ensemble) tags with an untrained
+        model: without a weights_path every entry point raises, and neither
+        runner entry point commits a table."""
         from scikg_spark.pipeline.fused import extract_tuples
-        from scikg_spark.pipeline.runner import run_pipeline
+        from scikg_spark.pipeline.runner import (
+            run_pipeline, run_pipeline_incremental)
         from scikg_spark.pipeline.stage1 import (
             build_pages_from_documents, extract_statements)
         from scikg_spark.pipeline.stage2 import tag_statements
@@ -179,13 +183,17 @@ class TestProbeTagger:
             "/root/testdata/sf0.001/documents.parquet").limit(5)
         pages = build_pages_from_documents(docs)
         stmts = extract_statements(pages)
-        with pytest.raises(ValueError, match="probe mode"):
-            tag_statements(stmts, mode="probe")
-        with pytest.raises(ValueError, match="probe mode"):
-            extract_tuples(stmts, tagger="probe")
-        with pytest.raises(ValueError, match="probe mode"):
-            run_pipeline(spark, pages, SnapshotCatalog(spark, str(tmp_path)),
-                         tagger="probe")
+        for mode in ("probe", "neural", "ensemble"):
+            with pytest.raises(ValueError, match=f"{mode} mode"):
+                tag_statements(stmts, mode=mode)
+            with pytest.raises(ValueError, match=f"{mode} mode"):
+                extract_tuples(stmts, tagger=mode)
+            for entry in (run_pipeline, run_pipeline_incremental):
+                catalog = SnapshotCatalog(
+                    spark, str(tmp_path / mode / entry.__name__))
+                with pytest.raises(ValueError, match=f"{mode} mode"):
+                    entry(spark, pages, catalog, tagger=mode)
+                assert catalog.manifest("statements") is None
 
 
 @pytest.mark.parametrize("mode,kind", [
